@@ -59,9 +59,8 @@ class DedupConfig:
     # select the same grams, miss prob (1-1/w)^span_grams)
     substring_sample_mod: int | None = None
 
-    # skew handling (north_rule: salted groupBy for hot buckets)
+    # skew handling (operators/skew.py)
     hot_bucket_cap: int = 200   # buckets larger than this are star-linked
-    salt_buckets: int = 16
 
     # optional TF-IDF boilerplate-shingle prefilter: drop shingles whose
     # document frequency exceeds this fraction of the corpus BEFORE
@@ -75,20 +74,12 @@ class DedupConfig:
     # where boilerplate text collides with everything)
     search_min_agreement: int = 1
 
-    # connected-components algorithm: "hashmin" (one hop per iteration —
-    # ideal for near-clique duplicate clusters, 2-4 rounds) or "star"
-    # (alternating large-star/small-star, O(log diameter) rounds — for
-    # graphs with long containment/substring chains)
-    cc_algorithm: str = "hashmin"   # "hashmin" | "star"
-
     # document granularity: whole conversation or single turn
     granularity: str = "conv"   # "conv" | "turn"
 
     # hashing: "portable" = md5-based 60-bit (DuckDB-reproducible),
     # "fast" = xxhash64 (JVM-native, for scale runs)
     hash_mode: str = "portable"
-
-    minhash_prime: int = MERSENNE_31
 
     def with_(self, **kw) -> "DedupConfig":
         return replace(self, **kw)

@@ -96,7 +96,3 @@ def sql_perm_table(num_perms: int) -> str:
         f"FROM (SELECT unnest(range({num_perms})) AS i))"
     )
 
-
-def sql_minhash_expr(x_expr: str) -> str:
-    """DuckDB per-row hash-family application; needs a,b in scope."""
-    return f"(a * (({x_expr}) % {M}) + b) % {M}"

@@ -22,13 +22,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 50,
+def connected_components(pairs: DataFrame, max_iter: int = 100,
                          small_graph_partitions: int = 8,
                          small_graph_edges: int = 2_000_000,
                          store=None, stage_prefix: str = "cc") -> DataFrame:
     """(doc_a, doc_b) edges → (doc_id, cluster_id) with cluster_id = min
     member. Singletons are not emitted (docs absent from ``pairs`` are their
     own cluster by definition).
+
+    Labels move one hop per iteration, so ``max_iter`` bounds the component
+    diameter the loop can label. A loop that reaches ``max_iter`` without a
+    fixed point raises ``RuntimeError``: its labels would break the
+    cluster_id = component-min contract.
 
     Verified-duplicate edge sets are typically tiny relative to the corpus
     (clusters are near-cliques of 2-5 docs); when the edge count is below
@@ -73,7 +78,9 @@ def connected_components(pairs: DataFrame, max_iter: int = 50,
                 labels = store.read(spark, f"{stage_prefix}_iter{i}")
                 start_iter = i
                 break
-    for _it in range(start_iter, max_iter):
+    # a resume re-checks the committed labels with one more iteration, even
+    # when the committed run already used up max_iter
+    for _it in range(start_iter, max(max_iter, start_iter + 1)):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.doc_id)
             .groupBy("src")
@@ -95,128 +102,13 @@ def connected_components(pairs: DataFrame, max_iter: int = 50,
         if store is not None:
             labels = store.write(labels, f"{stage_prefix}_iter{_it + 1}")
         if changed == 0:
-            break
-    return labels
-
-
-def connected_components_star(pairs: DataFrame, max_rounds: int = 30,
-                              small_graph_partitions: int = 8,
-                              small_graph_edges: int = 2_000_000,
-                              store=None,
-                              stage_prefix: str = "ccstar") -> DataFrame:
-    """(doc_a, doc_b) edges → (doc_id, cluster_id) via alternating
-    large-star / small-star rewrites (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14 — public algorithm).
-
-    Hash-min label propagation moves labels ONE hop per iteration, so
-    rounds scale with component diameter — fine for near-clique duplicate
-    clusters, but containment/substring chains at 10^12 turns can be
-    long.  The star rewrites contract paths doubly-exponentially:
-    convergence in O(log diameter) alternating rounds.
-
-     * large-star: per node u, hook every LARGER neighbor to
-       m = min(N(u) ∪ {u});
-     * small-star: per directed edge u→v with v < u, hook u and its
-       smaller neighbors to their minimum;
-     * converged when a round leaves the edge multiset fixed (checked
-       with an order-insensitive count+hash signature aggregate — no
-       collect, no anti-join).
-
-    Semantics match ``connected_components`` exactly (same (doc_id,
-    cluster_id = component min) contract, singletons not emitted) —
-    property-tested equivalent in tests/test_cc.py.  ``store`` commits
-    the edge state per round (stage ``{stage_prefix}_round{n}``) for
-    resumable runs, mirroring the hash-min loop's label-state commits.
-    """
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    if edges.count() <= small_graph_edges:
-        # narrow re-read of the checkpoint, see connected_components
-        edges = edges.coalesce(small_graph_partitions)
-
-    members = (edges.select(F.col("src").alias("doc_id"))
-               .unionByName(edges.select(F.col("dst").alias("doc_id")))
-               .distinct()
-               .localCheckpoint())
-
-    def signature(e: DataFrame):
-        # order-insensitive multiset signature; both stars emit the
-        # canonical src > dst orientation so equality is well-defined.
-        # decimal(38,0) accumulator: summing int64 hashes over 10^12
-        # edges overflows long under ANSI mode
-        row = e.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h")
-        ).first()
-        return row["n"], row["h"]
-
-    def large_star(e: DataFrame) -> DataFrame:
-        # per node u over the SYMMETRIZED neighborhood: hook every larger
-        # neighbor to m = min(N(u) ∪ {u})
-        sym = (e.unionByName(e.select(F.col("dst").alias("src"),
-                                      F.col("src").alias("dst"))))
-        m = (sym.groupBy("src")
-             .agg(F.least(F.min("dst"), F.first("src")).alias("m")))
-        return (sym.join(m, "src")
-                .filter(F.col("dst") > F.col("src"))
-                .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-                .filter(F.col("src") != F.col("dst"))
-                .distinct())
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # per node u over its SMALLER neighborhood (edges oriented
-        # larger → smaller): hook u and all smaller neighbors to the min
-        directed = (e.select(F.greatest("src", "dst").alias("src"),
-                             F.least("src", "dst").alias("dst"))
-                    .distinct())
-        m = directed.groupBy("src").agg(F.min("dst").alias("m"))
-        hooked = (directed.join(m, "src")
-                  .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-                  .unionByName(m.select("src", F.col("m").alias("dst"))))
-        return hooked.filter(F.col("src") != F.col("dst")).distinct()
-
-    start_round = 0
-    if store is not None:
-        spark = pairs.sparkSession
-        for i in range(max_rounds, 0, -1):
-            if store.exists(f"{stage_prefix}_round{i}", spark):
-                edges = store.read(spark, f"{stage_prefix}_round{i}")
-                start_round = i
-                break
-
-    sig = signature(edges)
-    converged = False
-    for _round in range(start_round, max_rounds):
-        edges = small_star(large_star(edges)).localCheckpoint()
-        if store is not None:
-            edges = store.write(edges, f"{stage_prefix}_round{_round + 1}")
-        new_sig = signature(edges)
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        # ADVICE r4: labels derived from a non-converged edge set violate
-        # the (doc_id, cluster_id = component min) contract — a node can
-        # still appear as src of several edges with conflicting targets.
-        # Never return them silently.
-        raise RuntimeError(
-            f"connected_components_star did not reach a fixed point within "
-            f"max_rounds={max_rounds} (resumed at round {start_round}); "
-            f"labels would be unsound — raise max_rounds (rounds needed "
-            f"grow ~log2 of component diameter) or resume from the "
-            f"checkpointed '{stage_prefix}_round*' state")
-
-    # converged: every non-root points directly at its component min
-    labels = edges.select(F.col("src").alias("doc_id"),
-                          F.col("dst").alias("cluster_id"))
-    roots = (members.join(labels, "doc_id", "left_anti")
-             .select("doc_id", F.col("doc_id").alias("cluster_id")))
-    return labels.unionByName(roots)
+            return labels
+    raise RuntimeError(
+        f"connected_components did not reach a fixed point within "
+        f"max_iter={max_iter} (resumed at iteration {start_iter}); labels "
+        f"move one hop per iteration, so a component wider than max_iter "
+        f"hops would get wrong labels — raise max_iter or resume from the "
+        f"committed '{stage_prefix}_iter*' state")
 
 
 def clusters_with_members(labels: DataFrame) -> DataFrame:

@@ -29,11 +29,3 @@ def exact_dup_groups(docs: DataFrame, normalize: bool = False) -> DataFrame:
         .filter(F.col("dup_count") >= 2)
     )
 
-
-def drop_exact_dups(docs: DataFrame) -> DataFrame:
-    """Keep one doc (min doc_id) per identical text."""
-    w_min = (
-        docs.groupBy(F.md5("text").alias("text_hash"))
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
-    return docs.join(w_min, "doc_id", "left_semi")

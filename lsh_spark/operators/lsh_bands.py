@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from lsh_spark.config import DedupConfig
-from lsh_spark.operators.skew import all_pair_rows, bucket_census, capped_pair_rows
+from lsh_spark.operators.skew import all_pair_rows, capped_pair_rows
 
 
 def band_buckets(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -71,11 +71,6 @@ def band_buckets(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
         .select("doc_id", F.posexplode("_bands").alias("band_id", "band_hash"))
         .select(F.col("band_id").cast("int"), "band_hash", "doc_id")
     )
-
-
-def bucket_sizes_salted(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Bucket-size census (see operators/skew.py — shared by all passes)."""
-    return bucket_census(bands, ["band_id", "band_hash"], cfg)
 
 
 def candidate_pairs(bands: DataFrame, cfg: DedupConfig,

@@ -15,7 +15,7 @@ All are plain windowed/grouped aggregations — no UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def mrr(ranked: DataFrame, labels: DataFrame,
@@ -113,14 +113,3 @@ def load_threshold(path: str) -> float:
     with open(path) as f:
         return float(f.read().strip())
 
-
-def rank_results(scored: DataFrame, query_col: str, score_col: str,
-                 ascending: bool = True, top_x: int | None = None) -> DataFrame:
-    """O1/O2: per-query ranking + top-X cut (reference
-    ``matching_algorithms.py:375-383``, ``lsh.py:359``)."""
-    order = F.asc(score_col) if ascending else F.desc(score_col)
-    w = Window.partitionBy(query_col).orderBy(order, F.asc("result_id"))
-    out = scored.withColumn("rank", F.row_number().over(w))
-    if top_x is not None:
-        out = out.filter(F.col("rank") <= top_x)
-    return out

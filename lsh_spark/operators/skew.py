@@ -65,18 +65,6 @@ def bucket_census(keyed: DataFrame, key_cols: list[str],
     )
 
 
-def _tagged_members(keyed: DataFrame, sized: DataFrame,
-                    key_cols: list[str], id_col: str) -> DataFrame:
-    """Multi-member keyed rows with their bucket_size attached via ONE
-    broadcast inner join against the census (one row per key ⇒ no row
-    duplication; ≡ a left_semi on the multi-member keys). Factored out so
-    tests can pin the join shape — inside ``capped_pair_rows`` this
-    subtree is materialized eagerly and disappears behind the checkpoint
-    scan in downstream plans."""
-    return (keyed.join(F.broadcast(sized), key_cols)
-            .select(*key_cols, id_col, "bucket_size"))
-
-
 def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cfg: DedupConfig,
                      id_col: str = "doc_id",
                      cap: int | None = None) -> DataFrame:
@@ -88,32 +76,34 @@ def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cfg: DedupConfig,
     Plan shape: the census (one partially-aggregated groupBy, guide §2.3)
     yields ~one row per multi-member key — a small relation, since the
     overwhelming majority of keys are singletons (measured 88-96% at
-    sf0.1) that can never produce a pair. ONE broadcast inner join
-    attaches bucket_size to the keyed rows (the census has one row per
-    key, so no duplication), and the materialized multi-member subset
-    (~5-12% of keyed rows) feeds the small/hot splits as plain filters —
-    the full keyed table is scanned ONCE for membership, and singletons
-    never reach the collect_list exchange. The naive alternative (join
-    every keyed row back to its bucket size without stats) was a full
-    N×N sort-merge join that at 17M band rows cost 4× the census itself.
-    If the multi-member key set ever outgrows the broadcast threshold
-    Catalyst falls back to a shuffle join on its own — correctness is
-    unaffected. AQE skew-join splitting stays on as the backstop
-    (session.py).
+    sf0.1) that can never produce a pair. ONE inner join attaches
+    bucket_size to the keyed rows (the census has one row per key, so no
+    duplication), and the materialized multi-member subset (~5-12% of
+    keyed rows) feeds the small/hot splits as plain filters — the full
+    keyed table is scanned ONCE for membership, and singletons never reach
+    the collect_list exchange. The census is checkpointed first, so the
+    planner sizes that join from its real row count: it broadcasts the
+    census when it fits ``spark.sql.autoBroadcastJoinThreshold`` and plans
+    a shuffle join when it does not (no hint forces a broadcast of an
+    unbounded build side). AQE skew-join splitting stays on as the
+    backstop (session.py).
     """
     cap = cap if cap is not None else cfg.hot_bucket_cap
-    # census not checkpointed: its single consumer is the tagged join's
-    # broadcast build, so a separate materialization would only add a
-    # barrier job per pass
+    # census materialized so the membership join sees REAL stats (the
+    # cand_docs pattern, operators/pairs.py): an aggregate's output size is
+    # unknown before execution
     sized = (bucket_census(keyed, key_cols, cfg, id_col=id_col)
-             .filter(F.col("bucket_size") >= 2))
+             .filter(F.col("bucket_size") >= 2)
+             .localCheckpoint())
     # ONE membership scan instead of three (round-6 mid-round shape:
     # small semi-join + hot semi-join for the star-min build + hot
     # semi-join again for the star edges, each re-probing a broadcast
     # against every keyed row); the checkpoint bounds re-execution — the
     # three consumers below (small groupBy, star-min build, star join)
     # rescan the small tagged subset instead of the keyed table
-    tagged = _tagged_members(keyed, sized, key_cols, id_col).localCheckpoint()
+    tagged = (keyed.join(sized, key_cols)
+              .select(*key_cols, id_col, "bucket_size")
+              .localCheckpoint())
     small = tagged.filter(F.col("bucket_size") <= cap) \
                   .select(*key_cols, id_col)
     hot = tagged.filter(F.col("bucket_size") > cap) \

@@ -6,7 +6,8 @@ but that share a long verbatim span (the `substring` mutation class —
 fixture jaccard_true ≈ 0.3 < threshold); this pass catches them.
 
 Spark-first decomposition:
- * ``substring_candidate_pairs`` — docs sharing ANY exact k-token window:
+ * ``substring_candidate_pairs`` — docs sharing ANY exact k-token window
+   (``gram_keys`` fed to ``shared_key_pairs``):
    the k-gram fingerprints ARE suffix-array buckets of depth k; a shared
    ≥k-token substring implies a shared k-gram (stride 1), so candidate
    generation is a fingerprint equi-join — fully relational, skew-handled
@@ -56,12 +57,7 @@ def substring_candidate_pairs(docs: DataFrame, cfg: DedupConfig,
     """Pairs sharing ≥1 exact ``substring_k``-token window, with the count
     of shared distinct windows. Output: (doc_a, doc_b, shared_grams).
 
-    ``sample_mod=None`` → dense, exact, oracle-checkable (built-in exprs).
-    ``sample_mod=w`` → the 100 TB path: rolling-hash gram fingerprints via
-    the Arrow kernel with content-defined sampling (both docs of a shared
-    span select the SAME grams; a span of m grams is missed with prob
-    (1-1/w)^m — at w=8 and a 100-gram span that is 2e-6). Join input and
-    gram hashing drop by ~w×.
+    ``sample_mod`` selects the gram keys (see ``gram_keys``).
 
     ``hot_gram_cap=c`` star-links gram buckets larger than ``c`` via
     operators/skew.py: a boilerplate 20-token span shared by k docs emits
@@ -71,19 +67,32 @@ def substring_candidate_pairs(docs: DataFrame, cfg: DedupConfig,
     lower bound for pairs touched by hot grams. None → exact counts
     (oracle mode).
     """
-    if sample_mod:
-        from lsh_spark.operators.shingle import gram_hashes_fast
-        # checkpoint the ARRAY form (compact) before exploding: the capped
-        # pair path consumes the keyed frame three times (census + small +
-        # hot membership) and would otherwise re-run the Arrow
-        # tokenize+hash kernel per consumer; the explode stays narrow.
-        g = (gram_hashes_fast(docs, cfg.substring_k, 1, sample_mod=sample_mod)
-             .localCheckpoint()
-             .select("doc_id", F.explode("hashes").alias("gram_hash")))
-    else:
-        g = _gram_hashes(docs, cfg.substring_k, cfg.hash_mode)
-    return shared_key_pairs(g, "gram_hash", cfg, hot_gram_cap,
-                            count_col="shared_grams")
+    return shared_key_pairs(gram_keys(docs, cfg, sample_mod), "gram_hash",
+                            cfg, hot_gram_cap, count_col="shared_grams")
+
+
+def gram_keys(docs: DataFrame, cfg: DedupConfig,
+              sample_mod: int | None = None) -> DataFrame:
+    """(doc_id, text) → (doc_id, gram_hash): one row per distinct
+    ``substring_k``-token gram of each doc.
+
+    ``sample_mod=None`` → dense, exact, oracle-checkable (built-in exprs).
+    ``sample_mod=w`` → the 100 TB path: rolling-hash gram fingerprints via
+    the Arrow kernel with content-defined sampling (both docs of a shared
+    span select the SAME grams; a span of m grams is missed with prob
+    (1-1/w)^m — at w=8 and a 100-gram span that is 2e-6). Join input and
+    gram hashing drop by ~w×. This form is checkpointed EAGERLY.
+    """
+    if not sample_mod:
+        return _gram_hashes(docs, cfg.substring_k, cfg.hash_mode)
+    from lsh_spark.operators.shingle import gram_hashes_fast
+    # checkpoint the ARRAY form (compact) before exploding: the capped
+    # pair path consumes the keyed frame three times (census + small +
+    # hot membership) and would otherwise re-run the Arrow
+    # tokenize+hash kernel per consumer; the explode stays narrow.
+    return (gram_hashes_fast(docs, cfg.substring_k, 1, sample_mod=sample_mod)
+            .localCheckpoint()
+            .select("doc_id", F.explode("hashes").alias("gram_hash")))
 
 
 def shared_key_pairs(keyed: DataFrame, key_col: str, cfg: DedupConfig,

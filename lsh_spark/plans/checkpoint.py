@@ -11,9 +11,10 @@ the SAME interface (atomic via write-to-temp + rename; resume = read last
 committed stage) — call sites never change (SURVEY.md §7.4 item 5).
 
 Every checkpoint write stamps per-partition lineage columns
-(_run_id, _stage, _part_id, _row_count via observe metrics) and appends a
-row to a run-manifest JSON — the reference's filenames-manifest analog
-(reference ``json_manipulator.py:184-192``), minus the append-mode race.
+(_run_id, _stage, _part_id; ``read_lineage`` counts rows per partition)
+and appends a row to a run-manifest JSON — the reference's
+filenames-manifest analog (reference ``json_manipulator.py:184-192``),
+minus the append-mode race.
 """
 
 from __future__ import annotations
@@ -325,5 +326,12 @@ class CheckpointStore:
             with open(self._manifest()) as f:
                 entries = json.load(f)
         entries.append({"run_id": self.run_id, "stage": stage, **extra})
-        with open(self._manifest(), "w") as f:
+        # write-then-rename: a crash mid-dump leaves the previous manifest
+        # whole (os.replace is atomic within one directory), so geometry()
+        # and _bucket_spec() still read it on resume
+        tmp = self._manifest() + ".tmp"
+        with open(tmp, "w") as f:
             json.dump(entries, f, indent=1)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self._manifest())

@@ -1,4 +1,4 @@
-"""The full dedup cascade: exact → MinHash-LSH → SimHash → substring → CC.
+"""The full dedup cascade: MinHash-LSH → SimHash → substring → CC.
 
 Cascade semantics follow the reference's NLSH→PLSH two-stage filter
 (reference ``lsh.py:476-570``): each pass only contributes edges the earlier
@@ -6,8 +6,8 @@ passes didn't already produce; the union of accepted edges feeds one
 connected-components run. (The reference *removes* candidates rejected by
 pass 1 from pass 2, ``lsh.py:466-471`` — for dedup we keep the
 union-of-evidence semantics instead, which is strictly more conservative
-about false negatives; the subtraction variant is `left_anti` one-liner and
-noted here for parity.)
+about false negatives; the subtraction variant is kept for parity as
+``cascade_mode="subtract"``.)
 
 Stage boundaries are checkpointable (CheckpointStore) so a killed run
 resumes from the last committed stage; each stage is also the natural
@@ -17,11 +17,13 @@ truncates lineage.
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lsh_spark.canonicalize import conversation_docs, turn_docs
 from lsh_spark.config import DedupConfig
-from lsh_spark.operators import exact_dedup, lsh_bands, minhash, pairs, simhash, suffix
+from lsh_spark.operators import lsh_bands, minhash, pairs, simhash, suffix
 from lsh_spark.operators.connected_components import connected_components
 from lsh_spark.operators.shingle import doc_shingle_hashes_arrow
 from lsh_spark.plans.checkpoint import CheckpointStore
@@ -66,115 +68,121 @@ def dedup_pipeline(
         # checkpoint there would only add a full extra materialization of
         # the text column plus a driver barrier.
         docs = ck("docs", lambda: docs)
-    rejected_ref: dict[str, DataFrame] = {}
 
-    def boilerplate_filter(h: DataFrame) -> DataFrame:
+    # per-doc sources, chosen once. Each is a thunk called only inside a
+    # pass's stage thunk, so a store resume that finds the pass committed
+    # never builds it (suffix.gram_keys' sampled form checkpoints eagerly)
+    if cfg.hash_mode == "fast":
+        # single-scan source: ONE Arrow pass over the text column produces
+        # shingle hashes + MinHash signature + SimHash + sampled grams —
+        # the corpus is shipped through Python exactly once
+        from lsh_spark.operators.fused import fused_doc_features
+
+        @cache
+        def fused() -> DataFrame:
+            return ck("fused", lambda: fused_doc_features(docs, cfg))
+
+        def shingle_hashes() -> DataFrame:
+            return fused().select("doc_id", "hashes")
+
+        def signatures() -> DataFrame:
+            if cfg.max_shingle_df_frac is not None:
+                # fused sigs were computed pre-filter; re-derive from the
+                # filtered hash arrays so signature and verification agree
+                return minhash.minhash_signatures(hashes(), cfg)
+            return (fused().filter(F.col("sig").isNotNull())
+                    .select("doc_id", "sig"))
+
+        def simhashes() -> DataFrame:
+            return fused().select("doc_id", "simhash")
+
+        def gram_keys() -> DataFrame:
+            return fused().select("doc_id",
+                                  F.explode("grams").alias("gram_hash"))
+    else:
+        @cache
+        def shingle_hashes() -> DataFrame:
+            return ck("shingle_hashes",
+                      lambda: doc_shingle_hashes_arrow(docs, cfg))
+
+        def signatures() -> DataFrame:
+            return minhash.minhash_signatures(hashes(), cfg)
+
+        def simhashes() -> DataFrame:
+            return simhash.simhash_docs_arrow(docs, cfg)
+
+        def gram_keys() -> DataFrame:
+            return suffix.gram_keys(docs, cfg, cfg.substring_sample_mod)
+
+    @cache
+    def hashes() -> DataFrame:
         # opt-in recall/precision knob (cfg.max_shingle_df_frac): drop
         # boilerplate shingles before signatures AND verification — the
         # dedup analog of the reference's min-tfidf pitch filter
         # (scripts/tfidf_pitch_extraction.py:114-181). Hot-bucket caps
         # already guarantee survival; this improves candidate precision.
         if cfg.max_shingle_df_frac is None:
-            return h
+            return shingle_hashes()
         from lsh_spark.operators.tfidf import filter_common_shingles_arrays
         return ck("shingle_hashes_filtered",
                   lambda: filter_common_shingles_arrays(
-                      h, cfg.max_shingle_df_frac))
+                      shingle_hashes(), cfg.max_shingle_df_frac))
 
-    if cfg.hash_mode == "fast":
-        # single-scan path: ONE Arrow pass over the text column produces
-        # shingle hashes + MinHash signature + SimHash + sampled grams —
-        # the corpus is shipped through Python exactly once
-        from lsh_spark.operators.fused import fused_doc_features
-        fused = ck("fused", lambda: fused_doc_features(docs, cfg))
-        hashes = boilerplate_filter(fused.select("doc_id", "hashes"))
-
-        def minhash_pass():
-            if cfg.max_shingle_df_frac is not None:
-                # fused sigs were computed pre-filter; re-derive from the
-                # filtered hash arrays so signature and verification agree
-                sigs = minhash.minhash_signatures(hashes, cfg)
-            else:
-                sigs = fused.filter(F.col("sig").isNotNull()).select("doc_id", "sig")
-            bands = lsh_bands.band_buckets(sigs, cfg)
-            cand = lsh_bands.candidate_pairs(bands, cfg)
-            verified = pairs.verify_pairs(cand, hashes, cfg).select("doc_a", "doc_b")
-            if cascade_mode == "subtract":
-                rejected_ref["df"] = cand.select("doc_a", "doc_b") \
-                    .exceptAll(verified).localCheckpoint()
+    def minhash_pass() -> DataFrame:
+        bands = lsh_bands.band_buckets(signatures(), cfg)
+        cand = lsh_bands.candidate_pairs(bands, cfg)
+        verified = pairs.verify_pairs(cand, hashes(), cfg).select("doc_a", "doc_b")
+        if cascade_mode != "subtract":
             return verified
+        # the REJECTED candidates ride in the same stage, flagged, so the
+        # later passes can drop them and a store resume restores them
+        return (cand.join(verified.withColumn("accepted", F.lit(True)),
+                          ["doc_a", "doc_b"], "left")
+                .select("doc_a", "doc_b",
+                        F.coalesce("accepted", F.lit(False)).alias("accepted")))
 
-        def simhash_pass():
-            sh = fused.select("doc_id", "simhash")
-            return (simhash.simhash_candidate_pairs(sh, cfg)
-                    .select("doc_a", "doc_b"))
+    def simhash_pass() -> DataFrame:
+        return (simhash.simhash_candidate_pairs(simhashes(), cfg)
+                .select("doc_a", "doc_b"))
 
-        def substring_pass():
-            g = fused.select("doc_id", F.explode("grams").alias("gram_hash"))
-            return (suffix.shared_key_pairs(
-                        g, "gram_hash", cfg, cfg.hot_bucket_cap,
-                        count_col="shared_grams")
-                    .select("doc_a", "doc_b"))
-    else:
-        hashes = boilerplate_filter(
-            ck("shingle_hashes", lambda: doc_shingle_hashes_arrow(docs, cfg)))
+    def substring_pass() -> DataFrame:
+        return (suffix.shared_key_pairs(
+                    gram_keys(), "gram_hash", cfg, cfg.hot_bucket_cap,
+                    count_col="shared_grams")
+                .select("doc_a", "doc_b"))
 
-        def minhash_pass():
-            sigs = minhash.minhash_signatures(hashes, cfg)
-            bands = lsh_bands.band_buckets(sigs, cfg)
-            cand = lsh_bands.candidate_pairs(bands, cfg)
-            verified = pairs.verify_pairs(cand, hashes, cfg).select("doc_a", "doc_b")
-            if cascade_mode == "subtract":
-                rejected_ref["df"] = cand.select("doc_a", "doc_b") \
-                    .exceptAll(verified).localCheckpoint()
-            return verified
-
-        def simhash_pass():
-            sh = simhash.simhash_docs_arrow(docs, cfg)
-            return (simhash.simhash_candidate_pairs(sh, cfg)
-                    .select("doc_a", "doc_b"))
-
-        def substring_pass():
-            return (suffix.substring_candidate_pairs(
-                        docs, cfg, sample_mod=cfg.substring_sample_mod,
-                        hot_gram_cap=cfg.hot_bucket_cap)
-                    .select("doc_a", "doc_b"))
-
-    thunks = {"minhash": minhash_pass, "simhash": simhash_pass,
+    bodies = {"minhash": minhash_pass, "simhash": simhash_pass,
               "substring": substring_pass}
-    wanted = [(name, thunks[name]) for name in passes if name in thunks]
     # passes run sequentially: each is internally fully parallel, and
     # measured A/B showed concurrent submission thrashes Python workers /
     # shuffle I/O in local mode (98s sequential vs 160s threaded at 16
     # cores on the scale tier) — on a real cluster the scheduler pools
     # would make concurrency a wash too
     edge_frames = []
-    for name, fn in wanted:
-        ef = ck(f"edges_{name}", fn)
-        if (cascade_mode == "subtract" and name != "minhash"
-                and rejected_ref.get("df") is not None):
+    rejected = None
+    for name in passes:
+        if name not in bodies:
+            continue
+        ef = ck(f"edges_{name}", bodies[name])
+        if cascade_mode == "subtract" and name == "minhash":
+            rejected = ef.filter(~F.col("accepted")).select("doc_a", "doc_b")
+            ef = ef.filter(F.col("accepted")).select("doc_a", "doc_b")
+        elif rejected is not None:
             # reference C4: pairs clipped by the earlier filter do not
             # re-enter via later passes (lsh.py:466-471)
-            ef = ef.join(rejected_ref["df"], ["doc_a", "doc_b"], "left_anti")
+            ef = ef.join(rejected, ["doc_a", "doc_b"], "left_anti")
         edge_frames.append(ef)
 
     edges = edge_frames[0]
     for ef in edge_frames[1:]:
         edges = edges.unionByName(ef)
-    # no .distinct() here: both CC variants symmetrize + distinct their
-    # edge input themselves, so the pre-distinct was a redundant extra
-    # full shuffle of the edge set (guide §2.4 — remove shuffles outright)
+    # no .distinct() here: connected_components symmetrizes + distincts its
+    # edge input itself, so a pre-distinct would be a redundant extra full
+    # shuffle of the edge set (guide §2.4 — remove shuffles outright)
 
     # with a store, the CC loop also commits per-iteration label state
-    # (cc_iter{n} stages) — a killed run resumes label propagation itself.
-    # cfg.cc_algorithm="star" swaps in the O(log diameter) alternating
-    # star rewrites for graphs with long containment chains
-    if cfg.cc_algorithm == "star":
-        from lsh_spark.operators.connected_components import \
-            connected_components_star
-        labels = connected_components_star(edges, store=store)
-    else:
-        labels = connected_components(edges, store=store)
+    # (cc_iter{n} stages) — a killed run resumes label propagation itself
+    labels = connected_components(edges, store=store)
     if store is not None:
         labels = store.write(labels, "clusters")
     return labels
@@ -329,14 +337,3 @@ def incremental_dedup(spark: SparkSession, new_docs: DataFrame,
             store.append(new_bands, bands_stage)
     return flags
 
-
-def exact_pass(docs: DataFrame) -> DataFrame:
-    """Exact-dup edges (doc → group canonical) for the cascade's pass 0."""
-    groups = exact_dedup.exact_dup_groups(docs)
-    with_hash = docs.select("doc_id", F.md5("text").alias("text_hash"))
-    return (
-        with_hash.join(groups, "text_hash")
-        .filter(F.col("doc_id") != F.col("canonical_id"))
-        .select(F.least("doc_id", "canonical_id").alias("doc_a"),
-                F.greatest("doc_id", "canonical_id").alias("doc_b"))
-    )

@@ -80,9 +80,8 @@ def _sig_from_hashes(cfg, hashes: "F.Column") -> "F.Column":
     kernel's ``keep = lengths > 0`` drop (operators/minhash.py) — otherwise
     every short turn would land in one permanent NULL bucket downstream.
     """
-    from lsh_spark.functions.hashing import minhash_params
+    from lsh_spark.functions.hashing import M, minhash_params
     a_vec, b_vec = minhash_params(cfg.num_perms)
-    m = cfg.minhash_prime
     a_arr = F.array(*[F.lit(int(x)) for x in a_vec])
     b_arr = F.array(*[F.lit(int(x)) for x in b_vec])
     return F.when(
@@ -91,15 +90,8 @@ def _sig_from_hashes(cfg, hashes: "F.Column") -> "F.Column":
             F.sequence(F.lit(0), F.lit(cfg.num_perms - 1)),
             lambda p: F.array_min(F.transform(
                 hashes,
-                lambda h: (F.element_at(a_arr, p + 1) * (h % m)
-                           + F.element_at(b_arr, p + 1)) % m))))
-
-
-def _sig_col(cfg, text_col: "F.Column") -> "F.Column":
-    """Single-expression signature (kept for API/tests). Prefer the
-    two-projection form (``_shingle_hashes_col`` select, then
-    ``_sig_from_hashes``) in query plans — see ``_sig_from_hashes``."""
-    return _sig_from_hashes(cfg, _shingle_hashes_col(cfg, text_col))
+                lambda h: (F.element_at(a_arr, p + 1) * (h % M)
+                           + F.element_at(b_arr, p + 1)) % M))))
 
 
 _UNIT_MS = {

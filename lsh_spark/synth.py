@@ -45,7 +45,7 @@ TIERS = {
     "xxxl": 7200000,  # gate-closure tier (~65M turns): 4x xxl — the next
                       # doubling the round-5 Amdahl decomposition
                       # (s ≈ 34-47 s fixed term) predicts raw 3v12
-                      # efficiency ≥ 0.8 at
+                      # efficiency ≥ 0.8 at this size
 }
 SF_TO_TIER = {"sf0.001": "t1", "sf0.01": "t2", "sf0.1": "bench"}
 

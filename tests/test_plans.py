@@ -107,34 +107,48 @@ def test_tfidf_explode_executes_once(spark):
     assert "Scan ExistingRDD" in plan_of(df)
 
 
-def test_capped_pairs_hot_split_is_broadcast(spark):
-    """The hot-key membership split must be broadcast joins (map-side),
-    never a full sort-merge of keyed rows against the census."""
+def test_capped_pairs_shuffle_join_without_broadcast(spark, monkeypatch):
+    """With broadcasts disabled, the membership join against the
+    bucket-size census must run as a shuffle join (no hint may force a
+    broadcast of the unbounded census) and give the same pair rows."""
     from lsh_spark.operators.skew import capped_pair_rows
-    cfg = DedupConfig(num_perms=8)
+    cfg = DedupConfig(num_perms=8, hot_bucket_cap=3)
     docs = spark.createDataFrame(
-        [(f"d{i}", "a b c d e f g h") for i in range(10)],
+        [(f"d{i}", "a b c d e f g h") for i in range(10)]
+        + [(f"p{i}", f"p q r s t u v {i // 2}") for i in range(6)],
         "doc_id string, text string")
     hashes = shingle.doc_shingle_hashes(docs, cfg)
-    bands = lsh_bands.band_buckets(minhash.minhash_signatures(hashes, cfg), cfg)
-    from lsh_spark.operators.skew import _tagged_members, bucket_census
-    sized = (bucket_census(bands, ["band_id", "band_hash"], cfg)
-             .filter("bucket_size >= 2"))
-    plan = plan_of(_tagged_members(bands, sized,
-                                   ["band_id", "band_hash"], "doc_id"))
-    # round 6 shape: membership is ONE broadcast INNER join attaching
-    # bucket_size from the checkpointed census (the census has one row per
-    # key, so no duplication); small/hot are filters over the materialized
-    # multi-member subset. Singleton buckets never reach the grouping
-    # shuffle, and keyed rows are never sort-merged against the census.
-    # (Inside capped_pair_rows this subtree sits behind an eager
-    # checkpoint, so its join shape is pinned here directly.)
-    assert plan.count("BroadcastHashJoin") >= 1
-    assert "SortMergeJoin" not in plan
-    # (the star branch's hot⋈hot_min join shows as SortMergeJoin in the
-    # pre-execution plan only because the checkpoint-scan filters carry no
-    # stats; AQE converts it at runtime — both sides are ≤ the hot-key
-    # row count by construction)
+    bands = lsh_bands.band_buckets(
+        minhash.minhash_signatures(hashes, cfg), cfg).localCheckpoint()
+    key = ["band_id", "band_hash"]
+    expected = sorted(capped_pair_rows(bands, key, cfg).collect())
+
+    # every frame capped_pair_rows materializes, with its plan after AQE
+    executed = []
+    frame_cls = type(bands)
+    local_checkpoint = frame_cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        out = local_checkpoint(self, *args, **kwargs)
+        executed.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(threshold)
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    spark.conf.set(threshold, "-1")
+    try:
+        out = capped_pair_rows(bands, key, cfg)
+        got = sorted(out.collect())
+        executed.append(out._jdf.queryExecution().executedPlan().toString())
+    finally:
+        spark.conf.set(threshold, saved)
+    membership = [p for p in executed if "bucket_size" in p and "Join" in p]
+    assert membership and all("isFinalPlan=true" in p for p in membership)
+    assert all("SortMergeJoin" in p or "ShuffledHashJoin" in p
+               for p in membership)
+    assert not any("BroadcastHashJoin" in p for p in executed)
+    assert got == expected
 
 
 def test_search_probe_broadcasts_probe_side(spark):

@@ -1,5 +1,5 @@
-"""Round-5 fixes: ANN hot-bucket defusal, index-geometry validation,
-star-CC convergence guard, ingest-delta report precedence."""
+"""Round-5 fixes: ANN hot-bucket defusal, index-geometry validation and
+the atomic run manifest it is stored in."""
 
 from __future__ import annotations
 
@@ -127,15 +127,24 @@ def test_incremental_dedup_rejects_geometry_drift(spark, tmp_path):
     assert flags.filter(F.col("match_kind") == "index").count() >= 1
 
 
-def test_star_cc_raises_without_convergence(spark):
-    from lsh_spark.operators.connected_components import (
-        connected_components_star,
-    )
-    # a 64-node chain needs several alternating rounds; max_rounds=1
-    # cannot reach the fixed point and must raise, never return labels
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(63)], "doc_a long, doc_b long")
-    with pytest.raises(RuntimeError, match="fixed point"):
-        connected_components_star(edges, max_rounds=1)
-    labels = connected_components_star(edges, max_rounds=30)
-    assert labels.filter(F.col("cluster_id") != 0).count() == 0
+def test_manifest_survives_crash_mid_write(tmp_path, monkeypatch):
+    """A _log call that dies partway through writing the manifest must
+    leave the previous manifest intact and readable."""
+    import json
+    store = CheckpointStore(str(tmp_path / "ckpt"))
+    cfg = DedupConfig(band_rows=1, num_perms=16)
+    store.record_geometry(cfg)
+    manifest = tmp_path / "ckpt" / "_manifest.json"
+    before = manifest.read_text()
+
+    def torn_dump(obj, f, **kw):
+        f.write(json.dumps(obj, **kw)[:20])
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError, match="disk full"):
+            store._log("edges_minhash")
+    assert manifest.read_text() == before
+    assert store.geometry() == {f: getattr(cfg, f)
+                                for f in CheckpointStore.GEOMETRY_FIELDS}

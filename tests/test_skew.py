@@ -49,16 +49,19 @@ def test_star_pair_count_linear_in_bucket(spark):
 
 
 def test_salted_census_counts_match_plain(spark):
-    cfg = DedupConfig(num_perms=8, salt_buckets=16)
+    """The census must equal a plain groupBy count, mega-buckets
+    included."""
+    from lsh_spark.operators.skew import bucket_census
+    cfg = DedupConfig(num_perms=8)
     docs = _hot_corpus(spark)
     hashes = shingle.doc_shingle_hashes(docs, cfg)
     sigs = minhash.minhash_signatures(hashes, cfg)
     bands = lsh_bands.band_buckets(sigs, cfg)
-    salted = lsh_bands.bucket_sizes_salted(bands, cfg)
+    census = bucket_census(bands, ["band_id", "band_hash"], cfg)
     plain = bands.groupBy("band_id", "band_hash").agg(
         F.count("*").cast("long").alias("bucket_size"))
-    assert salted.exceptAll(plain).count() == 0
-    assert plain.exceptAll(salted).count() == 0
+    assert census.exceptAll(plain).count() == 0
+    assert plain.exceptAll(census).count() == 0
 
 
 from hypothesis import given, settings, strategies as st
@@ -72,7 +75,7 @@ def test_capped_pairs_component_equivalence_random(spark, keyed_rows):
     star-linked pair rows connect exactly the same components as the dense
     expansion, and never exceed it."""
     from lsh_spark.operators.skew import all_pair_rows, capped_pair_rows
-    cfg = DedupConfig(hot_bucket_cap=3, salt_buckets=4)
+    cfg = DedupConfig(hot_bucket_cap=3)
     rows = [(f"k{k}", f"d{d:02d}") for k, d in keyed_rows]
     keyed = spark.createDataFrame(rows, "key string, doc_id string").distinct()
     dense = all_pair_rows(keyed, ["key"]).select("doc_a", "doc_b")
