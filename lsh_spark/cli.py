@@ -21,7 +21,9 @@ Commands:
 
 On a real cluster, --transcripts points at the Iceberg/parquet transcripts
 table and --checkpoint-dir at a durable store; each stage resumes from the
-last committed checkpoint (plans/checkpoint.py).
+last committed checkpoint (plans/checkpoint.py). Only `index` chooses a
+stage layout (--bucketed-index); `ingest-delta`, `search` and `pairs` read
+and append the committed index in whatever layout the store recorded.
 """
 
 from __future__ import annotations
@@ -118,24 +120,20 @@ def main(argv=None):
                      else turn_docs(tr)).select("doc_id", "text"))
 
         if args.command == "index":
-            if args.bucketed_index:
-                hashes = (
-                    store.read_bucketed(spark, "shingle_hashes")
-                    if store.exists_bucketed("shingle_hashes", spark)
-                    else store.write_bucketed(
-                        doc_shingle_hashes_arrow(docs, cfg),
-                        "shingle_hashes", ("doc_id",), 16))
-                sigs = minhash.minhash_signatures(hashes, cfg)
-                bands = store.write_bucketed(
-                    lsh_bands.band_buckets(sigs, cfg), "band_buckets",
-                    ("band_hash",), 16)
-            else:
-                hashes = store.get_or_compute(
-                    spark, "shingle_hashes",
-                    lambda: doc_shingle_hashes_arrow(docs, cfg))
-                sigs = minhash.minhash_signatures(hashes, cfg)
-                bands = store.write(lsh_bands.band_buckets(sigs, cfg),
-                                    "band_buckets")
+            # the one layout choice callers make, at write time; every
+            # later command reads and appends in the layout the store
+            # recorded (bands bucketed on band_hash, hashes on doc_id)
+            def commit(df, stage, key):
+                if args.bucketed_index:
+                    return store.write_bucketed(df, stage, (key,), 16)
+                return store.write(df, stage)
+            hashes = (store.read(spark, "shingle_hashes")
+                      if store.exists("shingle_hashes", spark)
+                      else commit(doc_shingle_hashes_arrow(docs, cfg),
+                                  "shingle_hashes", "doc_id"))
+            sigs = minhash.minhash_signatures(hashes, cfg)
+            bands = commit(lsh_bands.band_buckets(sigs, cfg),
+                           "band_buckets", "band_hash")
             # stamp the banding geometry so a later ingest-delta with a
             # drifted session cfg fails loudly instead of joining disjoint
             # band keys (plans/checkpoint.py:validate_geometry)
@@ -152,8 +150,7 @@ def main(argv=None):
                 raise SystemExit(
                     "ingest-delta requires --delta <transcripts parquet>")
             for stage in ("band_buckets", "shingle_hashes"):
-                if not (store.exists(stage, spark)
-                        or store.exists_bucketed(stage, spark)):
+                if not store.exists(stage, spark):
                     raise SystemExit(
                         f"ingest-delta needs the '{stage}' stage in "
                         f"{args.checkpoint_dir}; run the `index` command "
@@ -168,19 +165,13 @@ def main(argv=None):
             by_kind = {r["match_kind"]: r["n"] for r in
                        flags.groupBy("match_kind")
                             .agg(F.count("*").alias("n")).collect()}
-            # mirror incremental_dedup's auto-detect precedence (bucketed
-            # first) so the reported index_rows counts the same table the
-            # probe and fold-in actually used
-            read_bands = (store.read_bucketed
-                          if store.exists_bucketed("band_buckets", spark)
-                          else store.read)
             print(json.dumps({
                 "stage": "ingest_delta",
                 "batch_docs": new_docs.count(),
                 "dup_flags": sum(by_kind.values()),
                 "vs_index": by_kind.get("index", 0),
                 "within_batch": by_kind.get("batch", 0),
-                "index_rows": read_bands(spark, "band_buckets").count()}))
+                "index_rows": store.read(spark, "band_buckets").count()}))
             return
 
         if args.command == "search":

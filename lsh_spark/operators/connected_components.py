@@ -21,11 +21,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# edge sets up to SMALL_GRAPH_EDGES run the loop on SMALL_GRAPH_PARTITIONS
+SMALL_GRAPH_EDGES = 2_000_000
+SMALL_GRAPH_PARTITIONS = 8
+# store stages of the label state: f"{STAGE_PREFIX}_iter{n}"
+STAGE_PREFIX = "cc"
+
 
 def connected_components(pairs: DataFrame, max_iter: int = 100,
-                         small_graph_partitions: int = 8,
-                         small_graph_edges: int = 2_000_000,
-                         store=None, stage_prefix: str = "cc") -> DataFrame:
+                         store=None) -> DataFrame:
     """(doc_a, doc_b) edges → (doc_id, cluster_id) with cluster_id = min
     member. Singletons are not emitted (docs absent from ``pairs`` are their
     own cluster by definition).
@@ -37,7 +41,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 100,
 
     Verified-duplicate edge sets are typically tiny relative to the corpus
     (clusters are near-cliques of 2-5 docs); when the edge count is below
-    ``small_graph_edges`` the loop runs on ``small_graph_partitions``
+    ``SMALL_GRAPH_EDGES`` the loop runs on ``SMALL_GRAPH_PARTITIONS``
     partitions so each iteration is a handful of tasks instead of
     shuffle_partitions-many — the per-iteration scheduling overhead is the
     serial term of the whole pipeline's Amdahl fraction. Above the cutoff
@@ -45,7 +49,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 100,
 
     ``store`` (plans/checkpoint.CheckpointStore): when given, the LABEL
     STATE itself is committed per iteration as stage
-    ``{stage_prefix}_iter{n}`` (north_rule: "component state to Iceberg
+    ``cc_iter{n}`` (north_rule: "component state to Iceberg
     for resumable runs") — a killed run resumes label propagation from the
     last committed iteration instead of restarting the loop. At 10^12
     turns an iteration is a multi-TB shuffle; re-running converged
@@ -58,12 +62,12 @@ def connected_components(pairs: DataFrame, max_iter: int = 100,
         .distinct()
         .localCheckpoint()
     )
-    if edges.count() <= small_graph_edges:
+    if edges.count() <= SMALL_GRAPH_EDGES:
         # no second checkpoint: coalesce over the already-materialized
         # edge set is a narrow re-read, so each iteration pays a cheap
         # partition merge instead of the loop paying one extra full
         # materialization job up front
-        edges = edges.coalesce(small_graph_partitions)
+        edges = edges.coalesce(SMALL_GRAPH_PARTITIONS)
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
@@ -74,8 +78,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 100,
     if store is not None:
         spark = pairs.sparkSession
         for i in range(max_iter, 0, -1):
-            if store.exists(f"{stage_prefix}_iter{i}", spark):
-                labels = store.read(spark, f"{stage_prefix}_iter{i}")
+            if store.exists(f"{STAGE_PREFIX}_iter{i}", spark):
+                labels = store.read(spark, f"{STAGE_PREFIX}_iter{i}")
                 start_iter = i
                 break
     # a resume re-checks the committed labels with one more iteration, even
@@ -100,7 +104,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 100,
         changed = new_labels.filter(F.col("changed")).limit(1).count()
         labels = new_labels.drop("changed")
         if store is not None:
-            labels = store.write(labels, f"{stage_prefix}_iter{_it + 1}")
+            labels = store.write(labels, f"{STAGE_PREFIX}_iter{_it + 1}")
         if changed == 0:
             return labels
     raise RuntimeError(
@@ -108,7 +112,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 100,
         f"max_iter={max_iter} (resumed at iteration {start_iter}); labels "
         f"move one hop per iteration, so a component wider than max_iter "
         f"hops would get wrong labels — raise max_iter or resume from the "
-        f"committed '{stage_prefix}_iter*' state")
+        f"committed '{STAGE_PREFIX}_iter*' state")
 
 
 def clusters_with_members(labels: DataFrame) -> DataFrame:

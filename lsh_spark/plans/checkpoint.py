@@ -6,25 +6,39 @@ has an Iceberg catalog configured (``spark.sql.catalog.<name>`` set, e.g.
 via --packages org.apache.iceberg:iceberg-spark-runtime + a SparkCatalog),
 stages are Iceberg tables written with ``writeTo(...).createOrReplace()``
 (atomic snapshot swap, time-travel for free). The sandbox image has no
-Iceberg runtime jars, so the store degrades to parquet-backed tables behind
-the SAME interface (atomic via write-to-temp + rename; resume = read last
-committed stage) — call sites never change (SURVEY.md §7.4 item 5).
+Iceberg runtime jars, so the store degrades to parquet directories under
+``root`` behind the SAME interface (atomic via write-to-temp + rename;
+resume = read last committed stage) — call sites never change (SURVEY.md
+§7.4 item 5).
 
-Every checkpoint write stamps per-partition lineage columns
-(_run_id, _stage, _part_id; ``read_lineage`` counts rows per partition)
-and appends a row to a run-manifest JSON — the reference's
-filenames-manifest analog (reference ``json_manipulator.py:184-192``),
-minus the append-mode race.
+The store owns each stage's layout. A stage is plain or BUCKETED (written
+with ``write_bucketed``); the stage's latest run-manifest entry records
+which (``bucket_cols`` + ``n_buckets`` for a bucketed one), and ``exists``,
+``read`` and ``append`` follow it, so callers never choose. Both layouts
+commit through one path (``_commit``): stamp per-partition lineage
+columns (_run_id, _stage, _part_id; ``read_lineage`` counts rows per
+partition), write a temp dir and rename it into ``root/<stage>`` (or
+append part files to it), then append a row to the run manifest — the
+reference's filenames-manifest analog (reference
+``json_manipulator.py:184-192``), minus the append-mode race. A bucketed
+stage is additionally an external ``CLUSTERED BY`` session-catalog table
+over its directory, registered from the manifest on first use in a
+session; the catalog entry is only metadata, so a failed rewrite or a
+fresh session loses nothing.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, \
+    functions as F
+
+LINEAGE = ("_run_id", "_stage", "_part_id")
 
 
 class CheckpointStore:
@@ -60,78 +74,8 @@ class CheckpointStore:
         return os.path.exists(os.path.join(self._path(stage), "_SUCCESS"))
 
     def write(self, df: DataFrame, stage: str) -> DataFrame:
-        """Materialize a stage with lineage columns; atomic replace."""
-        spark = df.sparkSession
-        stamped = (
-            df.withColumn("_run_id", F.lit(self.run_id))
-              .withColumn("_stage", F.lit(stage))
-              .withColumn("_part_id", F.spark_partition_id())
-        )
-        if self._iceberg(spark):
-            # Iceberg path: createOrReplace is an atomic snapshot swap;
-            # partitioned by the lineage partition id so per-partition
-            # metrics prune to single files
-            (stamped.writeTo(self._table(stage))
-             .using("iceberg")
-             .createOrReplace())
-        else:
-            tmp = self._path(stage) + ".tmp"
-            final = self._path(stage)
-            stamped.write.mode("overwrite").parquet(tmp)
-            if os.path.exists(final):
-                shutil.rmtree(final)
-            os.rename(tmp, final)
-        self._log(stage)
-        return self.read(spark, stage)
-
-    def _read_stamped(self, spark: SparkSession, stage: str) -> DataFrame:
-        if self._iceberg(spark):
-            return spark.read.table(self._table(stage))
-        return spark.read.parquet(self._path(stage))
-
-    def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return self._read_stamped(spark, stage).drop(
-            "_run_id", "_stage", "_part_id")
-
-    def read_lineage(self, spark: SparkSession, stage: str) -> DataFrame:
-        """Per-partition lineage/metrics view of a checkpointed stage."""
-        return (
-            self._read_stamped(spark, stage)
-            .groupBy("_run_id", "_stage", "_part_id")
-            .agg(F.count("*").alias("rows"))
-        )
-
-    def get_or_compute(self, spark: SparkSession, stage: str, thunk) -> DataFrame:
-        """Resume-aware: reuse the committed stage if present."""
-        if self.exists(stage, spark):
-            return self.read(spark, stage)
-        return self.write(thunk(), stage)
-
-    def append(self, df: DataFrame, stage: str) -> DataFrame:
-        """APPEND rows to an existing plain stage — the non-bucketed delta
-        fold-in primitive: the batch lands as new part files next to the
-        stage's committed ones, so folding a delta into the index costs
-        O(delta), never the read-union-rewrite O(corpus) that ``write``
-        of a union implies (at 10^12 rows the rewrite IS the ingest cost).
-        Falls back to ``write`` when the stage does not exist yet.
-
-        Crash safety matches ``write``: task files are committed through
-        the Hadoop commit protocol (renamed out of ``_temporary`` only at
-        job commit), so a crash mid-append leaves the previously committed
-        stage intact plus an ignorable ``_temporary`` dir — the delta
-        simply re-runs. Iceberg mode appends a snapshot."""
-        spark = df.sparkSession
-        if not self.exists(stage, spark):
-            return self.write(df, stage)
-        stamped = (df.withColumn("_run_id", F.lit(self.run_id))
-                     .withColumn("_stage", F.lit(stage))
-                     .withColumn("_part_id", F.spark_partition_id()))
-        if self._iceberg(spark):
-            stamped.writeTo(self._table(stage)).append()
-        else:
-            stamped.write.mode("append").parquet(self._path(stage))
-        self._log(stage)
-        return self.read(spark, stage)
+        """Materialize a plain stage with lineage columns; atomic replace."""
+        return self._commit(df, stage)
 
     def write_bucketed(self, df: DataFrame, stage: str,
                        bucket_cols: tuple[str, ...] = ("doc_id",),
@@ -142,40 +86,122 @@ class CheckpointStore:
         map-side join; asserted in tests/test_plans.py). At 100 TB this is
         how the repeatedly-joined tables (doc_hashes for verification, band
         buckets for probing) avoid re-shuffling the corpus per consumer.
-        Backed by ``saveAsTable`` (bucket metadata needs the session
-        catalog; a plain parquet path cannot carry it). Iceberg mode writes
-        a ``bucket(n, col)``-partitioned table instead — same property.
-        """
+        Atomic replace like ``write``; Iceberg mode writes a
+        ``bucket(n, col)``-partitioned table instead — same property."""
+        return self._commit(df, stage, {"bucket_cols": list(bucket_cols),
+                                        "n_buckets": n_buckets})
+
+    def append(self, df: DataFrame, stage: str) -> DataFrame:
+        """APPEND rows to a stage in its own layout — the delta fold-in
+        primitive: the batch lands as new part files next to the stage's
+        committed ones (bucket-aligned files for a bucketed stage, so the
+        co-located-join property survives), so folding a delta into the
+        index costs O(delta), never the read-union-rewrite O(corpus) that
+        ``write`` of a union implies (at 10^12 rows the rewrite IS the
+        ingest cost). A missing stage is written plain.
+
+        Crash safety matches ``write``: task files are committed through
+        the Hadoop commit protocol (renamed out of ``_temporary`` only at
+        job commit), so a crash mid-append leaves the previously committed
+        stage intact plus an ignorable ``_temporary`` dir — the delta
+        simply re-runs. Iceberg mode appends a snapshot."""
+        return self._commit(df, stage, append=True)
+
+    def append_bucketed(self, df: DataFrame, stage: str,
+                        bucket_cols: tuple[str, ...] = ("doc_id",),
+                        n_buckets: int = 16) -> DataFrame:
+        """``append``, writing a missing stage bucketed on ``bucket_cols``
+        into ``n_buckets``. An existing stage keeps the layout its manifest
+        entry records, so appends can never disagree with it."""
+        return self._commit(df, stage, {"bucket_cols": list(bucket_cols),
+                                        "n_buckets": n_buckets}, append=True)
+
+    def _commit(self, df: DataFrame, stage: str, layout: dict | None = None,
+                append: bool = False) -> DataFrame:
+        """The one commit path of both layouts: stamp lineage, write (temp
+        dir + rename) or append, then log the layout to the manifest."""
         spark = df.sparkSession
         stamped = (df.withColumn("_run_id", F.lit(self.run_id))
                      .withColumn("_stage", F.lit(stage))
                      .withColumn("_part_id", F.spark_partition_id()))
+        append = append and self.exists(stage, spark)
+        if append:  # an existing stage keeps its recorded layout
+            layout = self._layout(stage)
+        layout = layout or {}
         if self._iceberg(spark):
-            writer = stamped.writeTo(self._table(stage)).using("iceberg")
-            writer = writer.partitionedBy(
-                F.bucket(n_buckets, F.col(bucket_cols[0])))
-            writer.createOrReplace()
-            self._log(stage)
+            if append:
+                stamped.writeTo(self._table(stage)).append()
+            else:
+                writer = stamped.writeTo(self._table(stage)).using("iceberg")
+                if layout:
+                    writer = writer.partitionedBy(F.bucket(
+                        layout["n_buckets"], F.col(layout["bucket_cols"][0])))
+                writer.createOrReplace()
+        elif append and layout:
+            self._register(spark, stage, layout)
+            _bucketed(stamped.write.mode("append"), layout) \
+                .saveAsTable(self._bucketed_name(stage))
+        elif append:
+            stamped.write.mode("append").parquet(self._path(stage))
+        else:
+            final = self._path(stage)
+            tmp = final + ".tmp"
+            shutil.rmtree(tmp, ignore_errors=True)
+            # a bucketed stage's catalog entry is an external table over
+            # its directory: dropping it keeps the files, and the next use
+            # registers the committed stage again from the manifest
+            name = self._bucketed_name(stage)
+            if layout or self._layout(stage):
+                spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+            if layout:
+                # bucket metadata needs a catalog table; write it at tmp
+                _bucketed(stamped.write.mode("overwrite"), layout) \
+                    .option("path", os.path.abspath(tmp)).saveAsTable(name)
+                spark.sql(f"DROP TABLE `{name}`")
+            else:
+                stamped.write.mode("overwrite").parquet(tmp)
+            if os.path.exists(final):
+                shutil.rmtree(final)
+            os.rename(tmp, final)
+        self._log(stage, **layout)
+        return self._scan(spark, stage).drop(*LINEAGE)
+
+    def _layout(self, stage: str) -> dict:
+        """Bucket spec from the stage's latest manifest entry ({} = plain)."""
+        e = self._latest(stage) or {}
+        return {k: e[k] for k in ("bucket_cols", "n_buckets") if k in e}
+
+    def _scan(self, spark: SparkSession, stage: str) -> DataFrame:
+        """The committed stage, lineage columns included, in its layout."""
+        if self._iceberg(spark):
+            return spark.read.table(self._table(stage))
+        layout = self._layout(stage)
+        if layout:
+            self._register(spark, stage, layout)
+            return spark.read.table(self._bucketed_name(stage))
+        return spark.read.parquet(self._path(stage))
+
+    def read(self, spark: SparkSession, stage: str) -> DataFrame:
+        return self._scan(spark, stage).drop(*LINEAGE)
+
+    def read_bucketed(self, spark: SparkSession, stage: str) -> DataFrame:
+        """``read``, for callers that name the layout; the manifest decides
+        it either way."""
+        return self._scan(spark, stage).drop(*LINEAGE)
+
+    def read_lineage(self, spark: SparkSession, stage: str) -> DataFrame:
+        """Per-partition lineage/metrics view of a checkpointed stage."""
+        return (
+            self._scan(spark, stage)
+            .groupBy(*LINEAGE)
+            .agg(F.count("*").alias("rows"))
+        )
+
+    def get_or_compute(self, spark: SparkSession, stage: str, thunk) -> DataFrame:
+        """Resume-aware: reuse the committed stage if present."""
+        if self.exists(stage, spark):
             return self.read(spark, stage)
-        # saveAsTable writes under spark.sql.warehouse.dir (a static conf,
-        # set at session build — see session.py). The in-memory catalog
-        # forgets tables between sessions while their directories persist,
-        # so clear both before writing (idempotent re-run / resume).
-        name = self._bucketed_name(stage)
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        loc = os.path.join(wh.removeprefix("file:"), name)
-        shutil.rmtree(loc, ignore_errors=True)
-        (stamped.write.mode("overwrite")
-         .bucketBy(n_buckets, *bucket_cols)
-         .sortBy(*bucket_cols)
-         .format("parquet")
-         .saveAsTable(name))
-        # the manifest-recorded bucket spec lets a FRESH session (whose
-        # in-memory catalog forgot the table) re-register it over the
-        # persisted directory — see _ensure_bucketed_registered
-        self._log(stage, bucket_cols=list(bucket_cols), n_buckets=n_buckets)
-        return spark.read.table(name).drop("_run_id", "_stage", "_part_id")
+        return self.write(thunk(), stage)
 
     def _bucketed_name(self, stage: str) -> str:
         """Session-catalog table name for a bucketed stage, namespaced by a
@@ -183,99 +209,26 @@ class CheckpointStore:
         concurrent runs) must not clobber each other's same-named stages.
         A root hash (not run_id) keeps resume working — a fresh store over
         the same root, with a new auto run_id, still finds the table."""
-        import hashlib
         tag = hashlib.md5(self.root.encode()).hexdigest()[:10]
         return f"lsh_ckpt_{tag}_{stage}"
 
-    def read_bucketed(self, spark: SparkSession, stage: str) -> DataFrame:
-        if self._iceberg(spark):
-            return self.read(spark, stage)
-        self._ensure_bucketed_registered(spark, stage)
-        return spark.read.table(self._bucketed_name(stage)).drop(
-            "_run_id", "_stage", "_part_id")
-
-    def exists_bucketed(self, stage: str, spark: SparkSession) -> bool:
-        if self._iceberg(spark):
-            return self.exists(stage, spark)
-        if spark.catalog.tableExists(self._bucketed_name(stage)):
-            return True
-        # the in-memory catalog forgets tables between sessions while
-        # their warehouse directories persist; the manifest's recorded
-        # bucket spec + the directory are the durable truth
-        return (self._bucket_spec(stage) is not None
-                and os.path.isdir(self._bucketed_location(spark, stage)))
-
-    def _bucketed_location(self, spark: SparkSession, stage: str) -> str:
-        wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        return os.path.join(wh.removeprefix("file:"),
-                            self._bucketed_name(stage))
-
-    def _bucket_spec(self, stage: str) -> dict | None:
-        if not os.path.exists(self._manifest()):
-            return None
-        with open(self._manifest()) as f:
-            entries = json.load(f)
-        for e in reversed(entries):
-            if e.get("stage") == stage and "bucket_cols" in e:
-                return e
-        return None
-
-    def _ensure_bucketed_registered(self, spark: SparkSession,
-                                    stage: str) -> None:
-        """Re-register a bucketed stage in a FRESH session: the in-memory
-        catalog loses table metadata across sessions, but the bucket-file
-        layout (bucket id encoded in file names) persists — an external
-        CLUSTERED BY table over the existing location restores the
-        shuffle-free join property for resumed runs."""
+    def _register(self, spark: SparkSession, stage: str,
+                  layout: dict) -> None:
+        """Register a bucketed stage in this session's catalog, once: an
+        external CLUSTERED BY table over the committed directory (the
+        bucket id is encoded in the file names) restores the shuffle-free
+        join property, also for a fresh session whose in-memory catalog
+        never saw the write."""
         name = self._bucketed_name(stage)
         if spark.catalog.tableExists(name):
             return
-        spec = self._bucket_spec(stage)
-        loc = self._bucketed_location(spark, stage)
-        if spec is None or not os.path.isdir(loc):
-            raise FileNotFoundError(
-                f"bucketed stage {stage!r} not found (no catalog table, "
-                f"no manifest spec + directory at {loc})")
+        loc = os.path.abspath(self._path(stage))
         ddl = spark.read.parquet(loc)._jdf.schema().toDDL()
-        cols = ", ".join(f"`{c}`" for c in spec["bucket_cols"])
+        cols = ", ".join(f"`{c}`" for c in layout["bucket_cols"])
         spark.sql(
-            f"CREATE TABLE {name} ({ddl}) USING parquet "
+            f"CREATE TABLE `{name}` ({ddl}) USING parquet "
             f"CLUSTERED BY ({cols}) SORTED BY ({cols}) "
-            f"INTO {spec['n_buckets']} BUCKETS LOCATION '{loc}'")
-
-    def append_bucketed(self, df: DataFrame, stage: str,
-                        bucket_cols: tuple[str, ...] = ("doc_id",),
-                        n_buckets: int = 16) -> DataFrame:
-        """APPEND rows to an existing bucketed stage — the delta fold-in
-        primitive: each append adds bucket-aligned files, so folding a
-        batch into a 10^12-row index costs O(delta), never an O(corpus)
-        rewrite, and the co-located-join property is preserved across
-        appends (every file in bucket i holds only hash(col)%n == i rows).
-        ``bucket_cols`` must match the original write_bucketed call
-        (Spark validates and fails loudly on a mismatch); the bucket
-        COUNT is read from the existing table's spec so appends can never
-        silently disagree with it."""
-        spark = df.sparkSession
-        stamped = (df.withColumn("_run_id", F.lit(self.run_id))
-                     .withColumn("_stage", F.lit(stage))
-                     .withColumn("_part_id", F.spark_partition_id()))
-        if self._iceberg(spark):
-            stamped.writeTo(self._table(stage)).append()
-            self._log(stage)
-            return self.read(spark, stage)
-        self._ensure_bucketed_registered(spark, stage)
-        for row in spark.sql(
-                f"DESCRIBE FORMATTED {self._bucketed_name(stage)}").collect():
-            if row["col_name"] == "Num Buckets":
-                n_buckets = int(row["data_type"])
-                break
-        (stamped.write.mode("append")
-         .bucketBy(n_buckets, *bucket_cols)
-         .sortBy(*bucket_cols)
-         .format("parquet")
-         .saveAsTable(self._bucketed_name(stage)))
-        self._log(stage, bucket_cols=list(bucket_cols), n_buckets=n_buckets)
-        return self.read_bucketed(spark, stage)
+            f"INTO {layout['n_buckets']} BUCKETS LOCATION '{loc}'")
 
     # banding-geometry fields that determine band-key compatibility between
     # an index and a probe (ADVICE r4: probing an r=1 index with r=2 session
@@ -292,14 +245,8 @@ class CheckpointStore:
 
     def geometry(self) -> dict | None:
         """Last recorded index geometry, or None for a pre-geometry store."""
-        if not os.path.exists(self._manifest()):
-            return None
-        with open(self._manifest()) as f:
-            entries = json.load(f)
-        for e in reversed(entries):
-            if e.get("stage") == "_geometry":
-                return e["geometry"]
-        return None
+        e = self._latest("_geometry")
+        return e["geometry"] if e else None
 
     def validate_geometry(self, cfg) -> None:
         """Raise if the session cfg's banding geometry differs from what the
@@ -320,18 +267,31 @@ class CheckpointStore:
                 f"the cfg (e.g. DedupConfig(band_rows=...)) to the "
                 f"recorded values.")
 
+    def _entries(self) -> list[dict]:
+        if not os.path.exists(self._manifest()):
+            return []
+        with open(self._manifest()) as f:
+            return json.load(f)
+
+    def _latest(self, stage: str) -> dict | None:
+        return next((e for e in reversed(self._entries())
+                     if e.get("stage") == stage), None)
+
     def _log(self, stage: str, **extra) -> None:
-        entries = []
-        if os.path.exists(self._manifest()):
-            with open(self._manifest()) as f:
-                entries = json.load(f)
+        entries = self._entries()
         entries.append({"run_id": self.run_id, "stage": stage, **extra})
         # write-then-rename: a crash mid-dump leaves the previous manifest
         # whole (os.replace is atomic within one directory), so geometry()
-        # and _bucket_spec() still read it on resume
+        # and each stage's layout still read it on resume
         tmp = self._manifest() + ".tmp"
         with open(tmp, "w") as f:
             json.dump(entries, f, indent=1)
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, self._manifest())
+
+
+def _bucketed(writer: DataFrameWriter, layout: dict) -> DataFrameWriter:
+    cols = layout["bucket_cols"]
+    return (writer.bucketBy(layout["n_buckets"], *cols).sortBy(*cols)
+            .format("parquet"))

@@ -274,21 +274,17 @@ def incremental_dedup(spark: SparkSession, new_docs: DataFrame,
                       store: CheckpointStore, cfg: DedupConfig | None = None,
                       bands_stage: str = "bands",
                       hashes_stage: str = "shingle_hashes",
-                      update_index: bool = True,
-                      bucketed: bool | None = None,
-                      n_buckets: int = 16) -> DataFrame:
+                      update_index: bool = True) -> DataFrame:
     """Store-aware wrapper: probe the checkpointed index, then fold the new
     batch's bands + shingle hashes back into the store so the next delta
     sees this one.
 
-    ``bucketed`` (default: auto-detect from the store) is the 100 TB
-    shape: the index stages live as BUCKETED tables (bands on band_hash,
-    hashes on doc_id), so the probe join and verify semi-join never
-    reshuffle the corpus side, and the fold-in is an O(delta)
-    ``append_bucketed`` — never an O(corpus) union-rewrite.  Build such
-    an index with ``store.write_bucketed(..., ("band_hash",)/("doc_id",),
-    n_buckets)``; a plain ``store.write`` index keeps the original
-    read/union/rewrite path.
+    The store owns the index stages' layout. For the 100 TB shape they are
+    BUCKETED (bands on band_hash, hashes on doc_id — ``cli index
+    --bucketed-index`` or ``store.write_bucketed``): the probe join and
+    the verify semi-join then never reshuffle the corpus side. Either way
+    the fold-in is an O(delta) ``store.append`` in the stage's own layout,
+    never an O(corpus) union-rewrite.
 
     Crash-ordering invariant (ADVICE r3): the HASHES stage is written
     BEFORE the bands stage.  A crash between the two writes then leaves
@@ -297,19 +293,12 @@ def incremental_dedup(spark: SparkSession, new_docs: DataFrame,
     whose shingle hashes are missing, and verify_pairs' inner join on
     hashes would silently drop those candidates on the next delta."""
     cfg = cfg or DedupConfig()
-    from lsh_spark.operators.shingle import doc_shingle_hashes_arrow
     # ADVICE r4: a probe whose banding geometry differs from the index's
     # (e.g. r=2 session defaults against an r=1-era index) joins disjoint
     # band keys and silently reports zero vs-index dups — fail loudly
     store.validate_geometry(cfg)
-    if bucketed is None:
-        bucketed = store.exists_bucketed(bands_stage, spark)
-    if bucketed:
-        index_bands = store.read_bucketed(spark, bands_stage)
-        index_hashes = store.read_bucketed(spark, hashes_stage)
-    else:
-        index_bands = store.read(spark, bands_stage)
-        index_hashes = store.read(spark, hashes_stage)
+    index_bands = store.read(spark, bands_stage)
+    index_hashes = store.read(spark, hashes_stage)
     # the delta's hashes/bands are needed TWICE (probe flags + index
     # fold-in): compute them once, checkpointed — round 5 re-ran the
     # Arrow tokenize+hash kernel and the signature kernel per use
@@ -321,19 +310,6 @@ def incremental_dedup(spark: SparkSession, new_docs: DataFrame,
                                     new_bands=new_bands)
     if update_index:
         flags = flags.localCheckpoint()  # materialize before index mutation
-        if bucketed:
-            store.append_bucketed(new_hashes, hashes_stage,
-                                  ("doc_id",), n_buckets)
-            store.append_bucketed(new_bands, bands_stage,
-                                  ("band_hash",), n_buckets)
-        else:
-            # O(delta) fold-in for the plain store too: append the batch's
-            # part files next to the committed stage instead of reading and
-            # rewriting the whole index per delta (round 5 unioned + rewrote
-            # — an O(corpus) write inside every steady-state ingest). Stage
-            # contents are identical (old ∪ new rows); the hashes-before-
-            # bands crash ordering is preserved.
-            store.append(new_hashes, hashes_stage)
-            store.append(new_bands, bands_stage)
+        store.append(new_hashes, hashes_stage)
+        store.append(new_bands, bands_stage)
     return flags
-

@@ -202,3 +202,45 @@ def test_incremental_dedup_bucketed_index(spark, tmp_path):
         assert cb < cp, (cb, cp)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+@pytest.mark.slow
+def test_cli_search_sees_ingested_delta_in_bucketed_index(spark, tmp_path):
+    """`search` after `index --bucketed-index` and `ingest-delta` probes
+    the committed bucketed index, delta included: a delta conv finds its
+    planted partner in the base, and the search writes no stage."""
+    from lsh_spark import synth
+    base_p, delta_p = _split_fixture(spark, tmp_path)
+    labels = spark.read.parquet(synth.dup_labels_path("t1")).collect()
+    partners = {r["conv_id_b"] for r in labels}
+    # the closest planted pair whose base side is in the index
+    _, probe, partner = max(
+        (r["jaccard_true"], r["conv_id_b"], r["conv_id_a"]) for r in labels
+        if r["conv_id_a"] not in partners and r["mutation"] != "substring")
+    ck = str(tmp_path / "ck")
+    common = ["--checkpoint-dir", ck, "--cores", "4", "--num-perms", "16"]
+    script = textwrap.dedent(f"""
+        import json, os, sys; sys.path.insert(0, {REPO!r})
+        from lsh_spark import cli
+
+        def snapshot():
+            return sorted((os.path.join(d, n), os.stat(os.path.join(d, n))
+                           .st_mtime_ns) for d, _, ns in os.walk({ck!r})
+                          for n in ns)
+        cli.main(["index", "--transcripts", {base_p!r}, "--bucketed-index",
+                  *{common!r}])
+        cli.main(["ingest-delta", "--delta", {delta_p!r}, *{common!r}])
+        before = snapshot()
+        cli.main(["search", "--probe", {probe!r}, *{common!r}])
+        print(json.dumps({{"store_unchanged": snapshot() == before}}))
+    """)
+    env = {**os.environ, "PYSPARK_PYTHON": sys.executable}
+    res = subprocess.run([sys.executable, "-c", script], text=True,
+                         capture_output=True, timeout=600, env=env)
+    assert res.returncode == 0, res.stderr[-4000:]
+    lines = [json.loads(ln) for ln in res.stdout.splitlines()
+             if ln.startswith("{")]
+    found = next(ln for ln in lines if ln.get("probe") == probe)
+    assert partner in {r["neighbor_id"] for r in found["results"]}, found
+    assert next(ln for ln in lines if "store_unchanged" in ln)[
+        "store_unchanged"]

@@ -148,7 +148,7 @@ def test_iceberg_branch_contract(monkeypatch, spark, tmp_path):
     pb = next(c for c in calls if c[0] == tb and c[1] == "partitionedBy")
     assert pb[2] == [str(F.bucket(8, F.col("doc_id")))]
     assert kinds[-1] == ("createOrReplace", None)
-    assert store.exists_bucketed("stage_b", spark)
+    assert store.exists("stage_b", spark)
     assert store.read_bucketed(spark, "stage_b").count() == 3
 
     # -- delta fold-in: bare append(), never a replace

@@ -48,7 +48,7 @@ def test_star_pair_count_linear_in_bucket(spark):
     assert star.count() == 299
 
 
-def test_salted_census_counts_match_plain(spark):
+def test_census_counts_match_groupby(spark):
     """The census must equal a plain groupBy count, mega-buckets
     included."""
     from lsh_spark.operators.skew import bucket_census
