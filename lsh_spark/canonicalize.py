@@ -66,3 +66,11 @@ def turn_docs(transcripts: DataFrame) -> DataFrame:
         F.col("text"),
         F.lit(1).alias("n_turns"),
     )
+
+
+def granular_docs(transcripts: DataFrame, granularity: str) -> DataFrame:
+    """(doc_id, text) at ``granularity`` ("conv" | "turn",
+    ``DedupConfig.granularity``): the documents every dedup pass reads."""
+    docs = (conversation_docs(transcripts) if granularity == "conv"
+            else turn_docs(transcripts))
+    return docs.select("doc_id", "text")

@@ -90,7 +90,7 @@ def main(argv=None):
         bench.main()
         return
 
-    from lsh_spark.canonicalize import conversation_docs, turn_docs
+    from lsh_spark.canonicalize import granular_docs
     from lsh_spark.operators import lsh_bands, minhash, pairs as pairs_op
     from lsh_spark.operators.shingle import doc_shingle_hashes_arrow
     from lsh_spark.plans.checkpoint import CheckpointStore
@@ -108,16 +108,24 @@ def main(argv=None):
             tr = load_transcripts(spark, args.sf_dir)
 
         if args.command == "ingest":
-            docs = (conversation_docs(tr) if cfg.granularity == "conv"
-                    else turn_docs(tr)).select("doc_id", "text")
-            out = store.write(docs, "docs")
+            out = store.write(granular_docs(tr, cfg.granularity), "docs")
             print(json.dumps({"stage": "docs", "rows": out.count()}))
             return
 
         docs = store.get_or_compute(
-            spark, "docs",
-            lambda: (conversation_docs(tr) if cfg.granularity == "conv"
-                     else turn_docs(tr)).select("doc_id", "text"))
+            spark, "docs", lambda: granular_docs(tr, cfg.granularity))
+
+        def index_stages():
+            """(shingle_hashes, band_buckets): the committed index, or
+            built from ``docs`` and committed plain when there is none."""
+            hashes = store.get_or_compute(
+                spark, "shingle_hashes",
+                lambda: doc_shingle_hashes_arrow(docs, cfg))
+            bands = store.get_or_compute(
+                spark, "band_buckets",
+                lambda: lsh_bands.band_buckets(
+                    minhash.minhash_signatures(hashes, cfg), cfg))
+            return hashes, bands
 
         if args.command == "index":
             # the one layout choice callers make, at write time; every
@@ -156,9 +164,7 @@ def main(argv=None):
                         f"{args.checkpoint_dir}; run the `index` command "
                         f"there first")
             delta_tr = spark.read.parquet(args.delta)
-            new_docs = (conversation_docs(delta_tr)
-                        if cfg.granularity == "conv"
-                        else turn_docs(delta_tr)).select("doc_id", "text")
+            new_docs = granular_docs(delta_tr, cfg.granularity)
             flags = incremental_dedup(
                 spark, new_docs, store, cfg,
                 bands_stage="band_buckets", hashes_stage="shingle_hashes")
@@ -181,13 +187,7 @@ def main(argv=None):
             from lsh_spark.operators.search import search_probe
             if not args.probe:
                 raise SystemExit("search requires --probe <doc_id>")
-            hashes = store.get_or_compute(
-                spark, "shingle_hashes",
-                lambda: doc_shingle_hashes_arrow(docs, cfg))
-            bands = store.get_or_compute(
-                spark, "band_buckets",
-                lambda: lsh_bands.band_buckets(
-                    minhash.minhash_signatures(hashes, cfg), cfg))
+            hashes, bands = index_stages()
             hits = search_probe(bands, hashes, args.probe, cfg,
                                 top_x=args.top).collect()
             print(json.dumps({"probe": args.probe,
@@ -195,13 +195,7 @@ def main(argv=None):
             return
 
         if args.command == "pairs":
-            hashes = store.get_or_compute(
-                spark, "shingle_hashes",
-                lambda: doc_shingle_hashes_arrow(docs, cfg))
-            bands = store.get_or_compute(
-                spark, "band_buckets",
-                lambda: lsh_bands.band_buckets(
-                    minhash.minhash_signatures(hashes, cfg), cfg))
+            hashes, bands = index_stages()
             cand = lsh_bands.candidate_pairs(bands, cfg)
             verified = store.write(
                 pairs_op.verify_pairs(cand, hashes, cfg), "verified_pairs")

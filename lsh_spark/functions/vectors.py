@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from lsh_spark.plans.checkpoint import materialize
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -211,26 +213,25 @@ def ktra_distance_pairs(pairs, q_col: str = "seq_a", c_col: str = "seq_b",
     DataFrame-level on purpose: a single fused Column would nest each
     level's greedy CASE inside the next level's 15 Manhattan terms —
     expression size grows ~15^depth and Catalyst OOMs converting the
-    plan (measured at depth 2). A ``localCheckpoint`` after each level
-    turns the level's outputs into leaf columns, so the plan stays
+    plan (measured at depth 2). A ``materialize`` after each level
+    (plans/checkpoint.py) turns the level's outputs into leaf columns, so the plan stays
     linear in depth. The full-recursion variant is
     ``operators/align.py:ktra`` (mapInArrow, pytest-pinned).
 
     Input: DataFrame with array<long> columns ``q_col``/``c_col``.
     Output: input columns minus the temporaries, plus ``out_col``."""
-    df = (pairs
-          .withColumn("_q", mean_subtract(F.col(q_col)))
-          .withColumn("_c", mean_subtract(F.col(c_col)))
-          .localCheckpoint())
+    df = materialize(pairs
+                     .withColumn("_q", mean_subtract(F.col(q_col)))
+                     .withColumn("_c", mean_subtract(F.col(c_col))))
     k = k0
     for depth in range(max_depth + 1):
         qm = F.transform(F.col("_q"), lambda v: v - F.lit(k))
         qp = F.transform(F.col("_q"), lambda v: v + F.lit(k))
-        df = (df.withColumn("_qm", qm).withColumn("_qp", qp)
-                .withColumn("_dm", _ra0_distance_d(F.col("_qm"), F.col("_c")))
-                .withColumn("_dz", _ra0_distance_d(F.col("_q"), F.col("_c")))
-                .withColumn("_dp", _ra0_distance_d(F.col("_qp"), F.col("_c")))
-                .localCheckpoint())
+        df = materialize(
+            df.withColumn("_qm", qm).withColumn("_qp", qp)
+            .withColumn("_dm", _ra0_distance_d(F.col("_qm"), F.col("_c")))
+            .withColumn("_dz", _ra0_distance_d(F.col("_q"), F.col("_c")))
+            .withColumn("_dp", _ra0_distance_d(F.col("_qp"), F.col("_c"))))
         if depth < max_depth:
             res = F.least(F.col("_dm"), F.col("_dz"), F.col("_dp"))
             df = df.withColumn(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from lsh_spark.functions.vectors import (MAX_FLOAT, _manhattan_padded_d,
                                          mean_subtract)
+from lsh_spark.plans.checkpoint import materialize
 
 # reference constants.py:119-123 and matching_algorithms.py:258
 MAX_RA_DEPTH = 3
@@ -100,7 +101,7 @@ def ktra_full_pairs(pairs: DataFrame, q_col: str = "seq_a",
     direction checked first on ties (``:303-306``), deepest level's
     triple-minimum returned (``:308-315``).
 
-    DataFrame-level with a ``localCheckpoint`` per KTRA level: each level
+    DataFrame-level with a ``materialize`` per KTRA level: each level
     evaluates three relational RA trees and joins them back as leaf
     columns, so the plan stays linear in depth (the same expression-
     blowup discipline as ktra_distance_pairs)."""
@@ -118,11 +119,10 @@ def ktra_full_pairs(pairs: DataFrame, q_col: str = "seq_a",
         d = delta
         return F.transform(F.col("_q"), lambda v: v + F.lit(d))
 
-    df = (pairs
-          .withColumn("_q", mean_subtract(F.col(q_col)))
-          .withColumn("_c", mean_subtract(F.col(c_col)))
-          .select(*ids, "_q", "_c")
-          .localCheckpoint())
+    df = materialize(pairs
+                     .withColumn("_q", mean_subtract(F.col(q_col)))
+                     .withColumn("_c", mean_subtract(F.col(c_col)))
+                     .select(*ids, "_q", "_c"))
     k = k0
     for depth in range(max_depth + 1):
         for name, delta in (("_dm", -k), ("_dz", 0.0), ("_dp", k)):
@@ -130,20 +130,18 @@ def ktra_full_pairs(pairs: DataFrame, q_col: str = "seq_a",
                 df.withColumn("_qd", shifted(delta)), q_col="_qd",
                 c_col="_c", out_col=name, id_cols=id_cols)
             df = df.join(ra, ids)
-        df = df.localCheckpoint()
+        df = materialize(df)
         if depth < max_depth:
             res = F.least(F.col("_dm"), F.col("_dz"), F.col("_dp"))
-            df = (df.withColumn(
-                      "_q",
-                      F.when(F.col("_dm") == res,
-                             F.transform(F.col("_q"),
-                                         lambda v: v - F.lit(k)))
-                       .when(F.col("_dp") == res,
-                             F.transform(F.col("_q"),
-                                         lambda v: v + F.lit(k)))
-                       .otherwise(F.col("_q")))
-                  .select(*ids, "_q", "_c")
-                  .localCheckpoint())
+            df = materialize(
+                df.withColumn(
+                    "_q",
+                    F.when(F.col("_dm") == res,
+                           F.transform(F.col("_q"), lambda v: v - F.lit(k)))
+                     .when(F.col("_dp") == res,
+                           F.transform(F.col("_q"), lambda v: v + F.lit(k)))
+                     .otherwise(F.col("_q")))
+                .select(*ids, "_q", "_c"))
             k = k / 2
     return df.select(*ids, F.round(F.least(F.col("_dm"), F.col("_dz"),
                                            F.col("_dp")), 6).alias(out_col))

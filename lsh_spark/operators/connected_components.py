@@ -8,9 +8,10 @@ propagation) join loop").
 
 Scale notes (SURVEY.md §7.4 item 2):
  * each iteration is join(edges, labels) + groupBy min — two shuffles;
- * lineage is truncated every iteration with localCheckpoint, otherwise the
-   logical plan doubles per iteration and Catalyst re-optimization time
-   explodes (the one place lazy plans actively hurt);
+ * lineage is truncated every iteration with ``materialize``
+   (plans/checkpoint.py), otherwise the logical plan doubles per
+   iteration and Catalyst re-optimization time explodes (the one place
+   lazy plans actively hurt);
  * convergence is detected by counting changed labels (an aggregate, no
    collect of the label table);
  * iteration count is bounded by graph diameter; duplicate clusters are
@@ -20,6 +21,8 @@ Scale notes (SURVEY.md §7.4 item 2):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from lsh_spark.plans.checkpoint import materialize
 
 # edge sets up to SMALL_GRAPH_EDGES run the loop on SMALL_GRAPH_PARTITIONS
 SMALL_GRAPH_EDGES = 2_000_000
@@ -55,12 +58,11 @@ def connected_components(pairs: DataFrame, max_iter: int = 100,
     turns an iteration is a multi-TB shuffle; re-running converged
     iterations is the single most expensive kind of lost work.
     """
-    edges = (
+    edges = materialize(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(pairs.select(F.col("doc_b").alias("src"),
                                   F.col("doc_a").alias("dst")))
         .distinct()
-        .localCheckpoint()
     )
     if edges.count() <= SMALL_GRAPH_EDGES:
         # no second checkpoint: coalesce over the already-materialized
@@ -68,11 +70,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 100,
         # partition merge instead of the loop paying one extra full
         # materialization job up front
         edges = edges.coalesce(SMALL_GRAPH_PARTITIONS)
-    labels = (
+    labels = materialize(
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .withColumn("cluster_id", F.col("doc_id"))
-        .localCheckpoint()
     )
     start_iter = 0
     if store is not None:
@@ -100,7 +101,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 100,
                 (F.col("nbr_min") < F.col("cluster_id")).alias("changed"),
             )
         )
-        new_labels = new_labels.localCheckpoint()
+        new_labels = materialize(new_labels)
         changed = new_labels.filter(F.col("changed")).limit(1).count()
         labels = new_labels.drop("changed")
         if store is not None:

@@ -32,24 +32,23 @@ overlap join — every keyed self-join in the engine gets the same defusal.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from lsh_spark.config import DedupConfig
 from lsh_spark.operators.skew import all_pair_rows, capped_pair_rows
+from lsh_spark.plans.checkpoint import materialize
 
 
-def band_buckets(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(doc_id, sig) → (band_id int, band_hash long, doc_id).
-
-    r = cfg.band_rows signature rows per band; for r=1 the band hash IS the
-    signature value (oracle-reproducible); for r>1 rows are combined with
-    xxhash64 over the slice.
-    """
+def band_hashes_col(sig: Column, cfg: DedupConfig) -> Column:
+    """Per-band hash array of a MinHash signature column; element i is
+    band i's key. r = cfg.band_rows signature rows per band; for r=1 the
+    band hash IS the signature value (oracle-reproducible); for r>1 rows
+    are combined with xxhash64 over the slice. The one banding both the
+    batch index (``band_buckets``) and the stream
+    (streaming/dedup_stream.py) key on."""
     r, b = cfg.band_rows, cfg.num_bands
     if r == 1:
-        return sigs.select(
-            F.posexplode("sig").alias("band_id", "band_hash"), "doc_id"
-        ).select(F.col("band_id").cast("int"), "band_hash", "doc_id")
+        return sig
     # r>1 (scale mode only — every oracle config pins r=1, where the band
     # hash IS the signature value): hash the r-slice DIRECTLY with the
     # multi-column xxhash64 instead of round 5's
@@ -59,15 +58,21 @@ def band_buckets(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     # materialization: the band table is re-derived per census/membership
     # consumer, so the string build+hash was paid 3× per pass
     # (guide §1.2 step 2 — per-task work).
-    bands = F.array(*[
-        F.xxhash64(*[F.element_at("sig", i * r + j + 1) for j in range(r)])
+    return F.array(*[
+        F.xxhash64(*[F.element_at(sig, i * r + j + 1) for j in range(r)])
         for i in range(b)
     ])
+
+
+def band_buckets(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(doc_id, sig) → (band_id int, band_hash long, doc_id), one row per
+    band (``band_hashes_col``)."""
     # stage the bands array in its own Project: exploding a plain column
     # attribute keeps Generate inside whole-stage codegen, while exploding
     # the higher-order expression inline does not (verified via .explain)
     return (
-        sigs.select("doc_id", bands.alias("_bands"))
+        sigs.select("doc_id",
+                    band_hashes_col(F.col("sig"), cfg).alias("_bands"))
         .select("doc_id", F.posexplode("_bands").alias("band_id", "band_hash"))
         .select(F.col("band_id").cast("int"), "band_hash", "doc_id")
     )
@@ -98,7 +103,7 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig,
         # (measured at turn granularity: ~4 s per derivation at 7.3M band
         # rows — the narrow (band_id, band_hash, doc_id) rows are far
         # cheaper to rescan than to rebuild)
-        bands = bands.localCheckpoint()
+        bands = materialize(bands)
         pair_rows = capped_pair_rows(bands, key, cfg)
     # one agreement unit per band: (band_id, doc_a, doc_b) rows are unique
     # by construction — a doc sits in exactly ONE bucket per band (one sig

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from lsh_spark.config import DedupConfig
 from lsh_spark.operators.shingle import explode_shingles
+from lsh_spark.plans.checkpoint import materialize
 
 
 def verify_pairs(pairs: DataFrame, doc_hashes: DataFrame,
@@ -39,7 +40,7 @@ def verify_pairs(pairs: DataFrame, doc_hashes: DataFrame,
     # checkpoint Catalyst re-executes that whole subtree per consumer
     # (measured: the bench verify plan held 64 copies of the band scan and
     # 172 HashAggregates; ~4x the candidate-generation work)
-    pairs = pairs.localCheckpoint()
+    pairs = materialize(pairs)
     # semi-join prefilter: only docs that appear in a candidate pair need
     # their (large) shingle arrays shuffled — after LSH pruning that is a
     # small fraction of the corpus, so this cuts the verify shuffle volume
@@ -52,10 +53,10 @@ def verify_pairs(pairs: DataFrame, doc_hashes: DataFrame,
     # candidate ids). With accurate sizes the planner broadcasts the id
     # list when it actually fits and falls back on its own when it does
     # not — no forced hint, so the 100 TB case keeps the robust plan.
-    cand_docs = (pairs.select(F.col("doc_a").alias("doc_id"))
-                 .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-                 .distinct()
-                 .localCheckpoint())
+    cand_docs = materialize(
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
+        .distinct())
     needed = doc_hashes.join(cand_docs, "doc_id", "left_semi")
     sets_a = needed.select(F.col("doc_id").alias("doc_a"),
                            F.col("hashes").alias("h_a"))

@@ -26,7 +26,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from lsh_spark.config import DedupConfig
 from lsh_spark.functions.hashing import hash64
@@ -35,13 +35,20 @@ from lsh_spark.functions.text import distinct_shingles_col, py_tokens, tokens_co
 SHINGLE_SCHEMA = "doc_id string, hashes array<bigint>"
 
 
+def shingle_hashes_col(text: Column, cfg: DedupConfig) -> Column:
+    """Row-local shingle-hash array of a text column: tokens → distinct
+    k-shingles → ``hash64`` (``cfg.hash_mode``), as built-in Column
+    expressions (JVM codegen, no Python) — usable in batch and streaming
+    plans alike."""
+    sh = distinct_shingles_col(tokens_col(text), cfg.shingle_k,
+                               cfg.shingle_stride)
+    return F.transform(sh, lambda s: hash64(s, cfg.hash_mode))
+
+
 def doc_shingle_hashes(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(doc_id, text) → (doc_id, hashes array<bigint>) via built-in exprs."""
-    sh = distinct_shingles_col(tokens_col(F.col("text")), cfg.shingle_k, cfg.shingle_stride)
     return docs.select(
-        "doc_id",
-        F.transform(sh, lambda s: hash64(s, cfg.hash_mode)).alias("hashes"),
-    )
+        "doc_id", shingle_hashes_col(F.col("text"), cfg).alias("hashes"))
 
 
 def doc_shingle_hashes_arrow(docs: DataFrame, cfg: DedupConfig) -> DataFrame:

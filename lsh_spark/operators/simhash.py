@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 from lsh_spark.config import DedupConfig
 from lsh_spark.functions.hashing import hash64, np_hash60
 from lsh_spark.functions.text import py_tokens, tokens_col
+from lsh_spark.plans.checkpoint import materialize
 
 N_CHUNKS = 4  # hamming_threshold 3 → 4 chunks by pigeonhole
 
@@ -211,7 +212,7 @@ def simhash_candidate_pairs(sh: DataFrame, cfg: DedupConfig,
     # legs) and when ``sh`` is the Arrow kernel the whole tokenize+hash
     # pass re-executes per consumer (measured: 8 MapInArrow nodes in the
     # bench simhash_pass plan). Two narrow columns per doc — tiny.
-    sh = sh.localCheckpoint()
+    sh = materialize(sh)
     keys = _chunk_keys(cfg) if mode == "chunk" else _combo_keys(cfg)
     # stage the key array in its own Project before exploding — same
     # shape as operators/lsh_bands.py band_buckets, where exploding the
@@ -231,7 +232,7 @@ def simhash_candidate_pairs(sh: DataFrame, cfg: DedupConfig,
         # one pair query, ~1-1.5 s each — the narrow (chunk_id, chunk_val,
         # doc_id) rows are far cheaper to rescan than to rebuild). The
         # oracle-exact all_pairs branch keeps its original two-scan plan.
-        keyed = keyed.localCheckpoint()
+        keyed = materialize(keyed)
     rows = (all_pair_rows(keyed, key_cols) if all_pairs
             else capped_pair_rows(keyed, key_cols, cfg))
     cand = rows.select("doc_a", "doc_b").distinct()

@@ -40,10 +40,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from lsh_spark.config import DedupConfig
+from lsh_spark.plans.checkpoint import materialize
 
 
-def bucket_census(keyed: DataFrame, key_cols: list[str],
-                  cfg: DedupConfig, id_col: str = "doc_id") -> DataFrame:
+def bucket_census(keyed: DataFrame, key_cols: list[str]) -> DataFrame:
     """(key..., bucket_size) via one partially-aggregated groupBy.
 
     Skew note (round 6): this was a two-phase SALTED aggregation through
@@ -92,18 +92,16 @@ def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cfg: DedupConfig,
     # census materialized so the membership join sees REAL stats (the
     # cand_docs pattern, operators/pairs.py): an aggregate's output size is
     # unknown before execution
-    sized = (bucket_census(keyed, key_cols, cfg, id_col=id_col)
-             .filter(F.col("bucket_size") >= 2)
-             .localCheckpoint())
+    sized = materialize(bucket_census(keyed, key_cols)
+                        .filter(F.col("bucket_size") >= 2))
     # ONE membership scan instead of three (round-6 mid-round shape:
     # small semi-join + hot semi-join for the star-min build + hot
     # semi-join again for the star edges, each re-probing a broadcast
     # against every keyed row); the checkpoint bounds re-execution — the
     # three consumers below (small groupBy, star-min build, star join)
     # rescan the small tagged subset instead of the keyed table
-    tagged = (keyed.join(sized, key_cols)
-              .select(*key_cols, id_col, "bucket_size")
-              .localCheckpoint())
+    tagged = materialize(keyed.join(sized, key_cols)
+                         .select(*key_cols, id_col, "bucket_size"))
     small = tagged.filter(F.col("bucket_size") <= cap) \
                   .select(*key_cols, id_col)
     hot = tagged.filter(F.col("bucket_size") > cap) \

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from lsh_spark.config import DedupConfig
 from lsh_spark.functions.hashing import hash64
 from lsh_spark.functions.text import shingles_col, tokens_col
+from lsh_spark.plans.checkpoint import materialize
 
 
 def _gram_hashes(docs: DataFrame, k: int, mode: str) -> DataFrame:
@@ -90,8 +91,8 @@ def gram_keys(docs: DataFrame, cfg: DedupConfig,
     # pair path consumes the keyed frame three times (census + small +
     # hot membership) and would otherwise re-run the Arrow
     # tokenize+hash kernel per consumer; the explode stays narrow.
-    return (gram_hashes_fast(docs, cfg.substring_k, 1, sample_mod=sample_mod)
-            .localCheckpoint()
+    return (materialize(gram_hashes_fast(docs, cfg.substring_k, 1,
+                                         sample_mod=sample_mod))
             .select("doc_id", F.explode("hashes").alias("gram_hash")))
 
 
@@ -304,7 +305,7 @@ def longest_common_run(docs: DataFrame, cfg: DedupConfig,
     ).select("doc_id", "pos", hash64(F.col("gram"), cfg.hash_mode).alias("gh"))
     if hot_gram_cap:
         from lsh_spark.operators.skew import bucket_census
-        df_g = bucket_census(g.select("gh", "doc_id").distinct(), ["gh"], cfg)
+        df_g = bucket_census(g.select("gh", "doc_id").distinct(), ["gh"])
         hot = df_g.filter(F.col("bucket_size") > hot_gram_cap).select("gh")
         g = g.join(F.broadcast(hot), "gh", "left_anti")
     a = g.select(F.col("doc_id").alias("doc_a"), F.col("pos").alias("pos_a"), "gh")

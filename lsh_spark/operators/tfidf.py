@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from lsh_spark.functions.text import tokens_col
+from lsh_spark.plans.checkpoint import materialize
 
 
 def doc_tokens(docs: DataFrame) -> DataFrame:
@@ -32,7 +33,7 @@ def doc_tokens(docs: DataFrame) -> DataFrame:
 def doc_token_counts(docs: DataFrame) -> DataFrame:
     """(doc_id, token, n) occurrence counts — the ONE tokenize-explode +
     (doc, token) shuffle every TF-IDF quantity derives from. Persist this
-    (localCheckpoint / CheckpointStore) when several quantities are
+    (``materialize`` / CheckpointStore) when several quantities are
     computed so the explode lineage is not re-run either."""
     return (doc_tokens(docs)
             .groupBy("doc_id", "token")
@@ -104,7 +105,7 @@ def tfidf_with_counts(docs: DataFrame,
     # (measured: two full 1.4M-group aggregation chains in the sf0.1
     # tfidf plan). This is the docstring's "persist when several
     # quantities are computed" applied inside the operator.
-    base = _counts_with_len(docs, counts).localCheckpoint()
+    base = materialize(_counts_with_len(docs, counts))
     df_tok = base.groupBy("token").agg(F.count("*").alias("df"))
     return (
         base

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from lsh_spark.config import DedupConfig
 from lsh_spark.functions.hashing import hash64
 from lsh_spark.functions.text import shingles_col, tokens_col
+from lsh_spark.plans.checkpoint import materialize
 
 
 def winnow_fingerprints(docs: DataFrame, cfg: DedupConfig,
@@ -55,7 +56,7 @@ def winnow_overlap_pairs(docs: DataFrame, cfg: DedupConfig,
     # it 2× (uncapped self-join) to 3× (capped census + membership), and
     # winnowing itself is a window-function pipeline over every gram —
     # re-running it per consumer dominated this operator's plan
-    fp = winnow_fingerprints(docs, cfg, window).localCheckpoint()
+    fp = materialize(winnow_fingerprints(docs, cfg, window))
     return (shared_key_pairs(fp.withColumnRenamed("fp_hash", "__key"),
                              "__key", cfg, hot_fp_cap, count_col="shared_fps")
             .filter(F.col("shared_fps") >= min_shared))

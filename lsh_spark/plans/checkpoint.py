@@ -1,4 +1,13 @@
-"""Checkpoint tables: resumable pipeline state with lineage + metrics.
+"""Materialization, in-session and durable: ``materialize`` and the
+checkpoint tables (resumable pipeline state with lineage + metrics).
+
+This module owns every point where the engine cuts lineage. In-session
+barriers (a frame several consumers read, a plan that must stop growing,
+a join side whose real size the planner should see) go through
+``materialize``, the one ``localCheckpoint`` call in the package; it
+skips a frame that is already materialized, so a producer and a consumer
+can both ask for the same frame and it is built once. Durable stages go
+through ``CheckpointStore``.
 
 north_rule: "checkpoint band-bucket and component state to Iceberg for
 resumable runs with per-partition lineage and metrics". When the session
@@ -39,6 +48,22 @@ from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, \
     functions as F
 
 LINEAGE = ("_run_id", "_stage", "_part_id")
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """``df`` computed once and held for the session (eager
+    ``localCheckpoint``); its lineage is cut, so later plans read the
+    held rows instead of re-running the subtree.
+
+    A frame that already is a materialized one (its optimized plan is a
+    scan of a checkpointed RDD: a checkpoint, or a re-select of all its
+    columns) is returned unchanged, so no frame is materialized twice —
+    that would cost one more Spark job for the same rows."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if (plan.getClass().getSimpleName() == "LogicalRDD"
+            and plan.rdd().isCheckpointed()):
+        return df
+    return df.localCheckpoint()
 
 
 class CheckpointStore:

@@ -21,12 +21,12 @@ from functools import cache
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from lsh_spark.canonicalize import conversation_docs, turn_docs
+from lsh_spark.canonicalize import granular_docs
 from lsh_spark.config import DedupConfig
 from lsh_spark.operators import lsh_bands, minhash, pairs, simhash, suffix
 from lsh_spark.operators.connected_components import connected_components
 from lsh_spark.operators.shingle import doc_shingle_hashes_arrow
-from lsh_spark.plans.checkpoint import CheckpointStore
+from lsh_spark.plans.checkpoint import CheckpointStore, materialize
 
 
 def dedup_pipeline(
@@ -53,12 +53,11 @@ def dedup_pipeline(
         (reference ``lsh.py:466-471``, C4).
     """
     cfg = cfg or DedupConfig()
-    docs = (conversation_docs(transcripts) if cfg.granularity == "conv"
-            else turn_docs(transcripts)).select("doc_id", "text")
+    docs = granular_docs(transcripts, cfg.granularity)
 
     def ck(stage: str, thunk):
         if store is None:
-            return thunk().localCheckpoint()
+            return materialize(thunk())
         return store.get_or_compute(spark, stage, thunk)
 
     if store is not None or cfg.hash_mode != "fast":
@@ -217,7 +216,6 @@ def incremental_dedup_flags(new_docs: DataFrame, index_bands: DataFrame,
     Output: (doc_a = new doc, doc_b = matched doc, band_agreement,
     jaccard, match_kind 'index'|'batch'), Jaccard-verified ≥ threshold.
     """
-    from lsh_spark.operators.shingle import doc_shingle_hashes_arrow
     from lsh_spark.operators.skew import bucket_census
 
     if new_hashes is None:
@@ -225,7 +223,7 @@ def incremental_dedup_flags(new_docs: DataFrame, index_bands: DataFrame,
         # the checkpoint the Arrow tokenize+hash kernel runs once per
         # consumer. Callers that already materialized the delta's hashes
         # (incremental_dedup's fold-in) pass them in instead.
-        new_hashes = doc_shingle_hashes_arrow(new_docs, cfg).localCheckpoint()
+        new_hashes = materialize(doc_shingle_hashes_arrow(new_docs, cfg))
     if new_bands is None:
         new_bands = lsh_bands.band_buckets(
             minhash.minhash_signatures(new_hashes, cfg), cfg)
@@ -233,10 +231,10 @@ def incremental_dedup_flags(new_docs: DataFrame, index_bands: DataFrame,
     # hot-key set materialized once (tiny by design): it is broadcast into
     # BOTH the reps semi-join and the cold anti-join — without the
     # checkpoint each broadcast build re-runs the full index census
-    hot_keys = (bucket_census(index_bands, ["band_id", "band_hash"], cfg)
-                .filter(F.col("bucket_size") > cfg.hot_bucket_cap)
-                .select("band_id", "band_hash")
-                .localCheckpoint())
+    hot_keys = materialize(
+        bucket_census(index_bands, ["band_id", "band_hash"])
+        .filter(F.col("bucket_size") > cfg.hot_bucket_cap)
+        .select("band_id", "band_hash"))
     reps = (index_bands
             .join(F.broadcast(hot_keys), ["band_id", "band_hash"],
                   "left_semi")
@@ -300,16 +298,17 @@ def incremental_dedup(spark: SparkSession, new_docs: DataFrame,
     index_bands = store.read(spark, bands_stage)
     index_hashes = store.read(spark, hashes_stage)
     # the delta's hashes/bands are needed TWICE (probe flags + index
-    # fold-in): compute them once, checkpointed — round 5 re-ran the
-    # Arrow tokenize+hash kernel and the signature kernel per use
-    new_hashes = doc_shingle_hashes_arrow(new_docs, cfg).localCheckpoint()
-    new_bands = lsh_bands.band_buckets(
-        minhash.minhash_signatures(new_hashes, cfg), cfg).localCheckpoint()
+    # fold-in): compute them once, materialized — round 5 re-ran the
+    # Arrow tokenize+hash kernel and the signature kernel per use (the
+    # within-batch candidate_pairs then finds the bands already built)
+    new_hashes = materialize(doc_shingle_hashes_arrow(new_docs, cfg))
+    new_bands = materialize(lsh_bands.band_buckets(
+        minhash.minhash_signatures(new_hashes, cfg), cfg))
     flags = incremental_dedup_flags(new_docs, index_bands, index_hashes, cfg,
                                     new_hashes=new_hashes,
                                     new_bands=new_bands)
     if update_index:
-        flags = flags.localCheckpoint()  # materialize before index mutation
+        flags = materialize(flags)  # materialize before index mutation
         store.append(new_hashes, hashes_stage)
         store.append(new_bands, bands_stage)
     return flags

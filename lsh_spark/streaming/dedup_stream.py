@@ -51,27 +51,17 @@ def streaming_exact_dedup(stream: DataFrame, watermark: str = "1 hour") -> DataF
     )
 
 
-def _shingle_hashes_col(cfg, text_col: "F.Column") -> "F.Column":
-    """Row-local shingle-hash array: tokens → k-shingles → portable/xxhash
-    60-bit hashes, as pure Column expressions (JVM codegen, no Python)."""
-    from lsh_spark.functions.hashing import hash64
-    from lsh_spark.functions.text import distinct_shingles_col, tokens_col
-    return F.transform(
-        distinct_shingles_col(tokens_col(text_col), cfg.shingle_k,
-                              cfg.shingle_stride),
-        lambda s: hash64(s, cfg.hash_mode))
-
-
 def _sig_from_hashes(cfg, hashes: "F.Column") -> "F.Column":
     """Per-row MinHash signature from a shingle-hash array column:
     per-permutation affine min. Row-local (no aggregation), so it is legal
     upstream of the stateful operator in a streaming plan.
 
     ``hashes`` should be a MATERIALIZED column (its own projection), not
-    the raw ``_shingle_hashes_col`` expression: the expression sits inside
-    the per-permutation lambda, so inlining it would re-run tokenization +
-    shingling + hashing ``num_perms`` times per row (measured 8.06× slower
-    at P=8 on 50k sf0.1 turns — r6). A separate select keeps it a cheap
+    the raw ``shingle_hashes_col`` expression (operators/shingle.py): the
+    expression sits inside the per-permutation lambda, so inlining it
+    would re-run tokenization + shingling + hashing ``num_perms`` times
+    per row (measured 8.06× slower at P=8 on 50k sf0.1 turns — r6). A
+    separate select keeps it a cheap
     attribute read; CollapseProject leaves multi-referenced non-cheap
     aliases alone.
 
@@ -134,8 +124,9 @@ def streaming_near_dup_flags(stream: DataFrame, cfg=None,
      * per arriving turn, the MinHash signature is computed row-locally
        with built-in Column expressions (no shuffle, no Python);
      * the stream is keyed by (band_id, band_hash) — the same banding as
-       the batch index — and each bucket's state holds the FIRST doc that
-       claimed it plus a member count;
+       the batch index (``lsh_bands.band_hashes_col``, r =
+       ``cfg.band_rows`` signature rows per band) — and each bucket's
+       state holds the FIRST doc that claimed it plus a member count;
      * a turn landing in a bucket that already has an owner is emitted as
        a near-dup candidate flag (doc_id, band_id, dup_of) — at-most-P
        flags per doc, dedup'd downstream exactly like batch candidates;
@@ -149,6 +140,8 @@ def streaming_near_dup_flags(stream: DataFrame, cfg=None,
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from lsh_spark.config import DedupConfig
+    from lsh_spark.operators.lsh_bands import band_hashes_col
+    from lsh_spark.operators.shingle import shingle_hashes_col
     cfg = cfg or DedupConfig(num_perms=8)
     # State lives exactly one watermark horizon past a bucket's last update,
     # so "state bounded by the horizon" holds for ANY watermark argument.
@@ -160,12 +153,17 @@ def streaming_near_dup_flags(stream: DataFrame, cfg=None,
             F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string"))
              .alias("doc_id"),
             "ts",
-            _shingle_hashes_col(cfg, F.col("text")).alias("_hashes"))
+            shingle_hashes_col(F.col("text"), cfg).alias("_hashes"))
         .select(
             "doc_id", "ts",
             _sig_from_hashes(cfg, F.col("_hashes")).alias("sig"))
         .filter(F.col("sig").isNotNull())
-        .select("doc_id", "ts", F.posexplode("sig").alias("band_id", "band_hash"))
+        # staged like lsh_bands.band_buckets: the generator explodes a
+        # plain attribute, not the band-hash expression
+        .select("doc_id", "ts",
+                band_hashes_col(F.col("sig"), cfg).alias("_bands"))
+        .select("doc_id", "ts",
+                F.posexplode("_bands").alias("band_id", "band_hash"))
         .filter(F.col("band_hash").isNotNull())
     )
 

@@ -187,7 +187,7 @@ def test_incremental_dedup_bucketed_index(spark, tmp_path):
         from lsh_spark.operators.skew import bucket_census
 
         def census_exchanges(bands_df):
-            df = bucket_census(bands_df, ["band_id", "band_hash"], cfg)
+            df = bucket_census(bands_df, ["band_id", "band_hash"])
             import contextlib
             import io
             buf = io.StringIO()

@@ -229,11 +229,11 @@ def test_streaming_sig_hashes_materialized_once(spark):
     the sequence-transform re-runs tokenize+shingle+hash64 num_perms times
     per row (measured 8.06x slower at P=8 on 50k sf0.1 turns)."""
     from lsh_spark.config import DedupConfig
-    from lsh_spark.streaming.dedup_stream import (_shingle_hashes_col,
-                                                  _sig_from_hashes)
+    from lsh_spark.operators.shingle import shingle_hashes_col
+    from lsh_spark.streaming.dedup_stream import _sig_from_hashes
     cfg = DedupConfig(num_perms=8)
     df = (spark.createDataFrame([("a b c d e f g h i j",)], "text string")
-          .select(_shingle_hashes_col(cfg, F.col("text")).alias("_hashes"))
+          .select(shingle_hashes_col(F.col("text"), cfg).alias("_hashes"))
           .select(_sig_from_hashes(cfg, F.col("_hashes")).alias("sig")))
     plan = plan_of(df, "extended")
     opt = plan.split("== Optimized Logical Plan ==")[1]

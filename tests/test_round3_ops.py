@@ -24,12 +24,12 @@ def plan_of(df, mode: str = "formatted") -> str:
 # ---- ADVICE high: short docs must not band into a shared NULL bucket ----
 
 def test_streaming_signature_null_for_short_docs(spark):
-    from lsh_spark.streaming.dedup_stream import (_shingle_hashes_col,
-                                                  _sig_from_hashes)
+    from lsh_spark.operators.shingle import shingle_hashes_col
+    from lsh_spark.streaming.dedup_stream import _sig_from_hashes
     cfg = DedupConfig(num_perms=4)  # shingle_k=5 default
     df = spark.createDataFrame(
         [("hi",), ("ok",), ("a b c d e f g h i j",)], "text string")
-    rows = (df.select(_shingle_hashes_col(cfg, F.col("text")).alias("h"))
+    rows = (df.select(shingle_hashes_col(F.col("text"), cfg).alias("h"))
             .select(_sig_from_hashes(cfg, F.col("h")).alias("sig"))
             .collect())
     assert rows[0]["sig"] is None and rows[1]["sig"] is None

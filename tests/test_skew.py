@@ -57,7 +57,7 @@ def test_census_counts_match_groupby(spark):
     hashes = shingle.doc_shingle_hashes(docs, cfg)
     sigs = minhash.minhash_signatures(hashes, cfg)
     bands = lsh_bands.band_buckets(sigs, cfg)
-    census = bucket_census(bands, ["band_id", "band_hash"], cfg)
+    census = bucket_census(bands, ["band_id", "band_hash"])
     plain = bands.groupBy("band_id", "band_hash").agg(
         F.count("*").cast("long").alias("bucket_size"))
     assert census.exceptAll(plain).count() == 0

@@ -5,6 +5,8 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
+
 from lsh_spark import synth
 from lsh_spark.streaming import dedup_stream
 
@@ -74,11 +76,13 @@ def test_streaming_near_dup_flags(spark, tmp_path):
         q.stop()
 
 
-def test_streaming_flags_match_incremental_dedup(spark, tmp_path):
+@pytest.mark.parametrize("band_rows", [1, 2])
+def test_streaming_flags_match_incremental_dedup(spark, tmp_path, band_rows):
     """Batch-stream consistency (VERDICT r4 #7): replay corpus-then-delta
     through ``streaming_near_dup_flags`` and assert the flagged doc sets
     equal what ``incremental_dedup_flags`` reports for the SAME delta
-    against the SAME index.
+    against the SAME index, at r=1 and at r=2 rows per band (the stream
+    must band like the batch index at every ``band_rows``).
 
     Comparison is at candidate level — the stream emits unverified band
     collisions, so the batch run uses jaccard_threshold=0 (its verifier
@@ -108,7 +112,8 @@ def test_streaming_flags_match_incremental_dedup(spark, tmp_path):
     from lsh_spark.operators.shingle import doc_shingle_hashes_arrow
     from lsh_spark.plans.pipeline import incremental_dedup_flags
 
-    cfg = DedupConfig(num_perms=8, band_rows=1, jaccard_threshold=0.0)
+    cfg = DedupConfig(num_perms=8, band_rows=band_rows,
+                      jaccard_threshold=0.0)
     tr = spark.read.parquet(synth.generate_tier("t1"))
     corpus_tr = tr.filter(~F.col("conv_id").endswith("d")).localCheckpoint()
     delta_tr = tr.filter(F.col("conv_id").endswith("d")).localCheckpoint()
@@ -136,11 +141,13 @@ def test_streaming_flags_match_incremental_dedup(spark, tmp_path):
                                                  max_files_per_trigger=1)
     flags = dedup_stream.streaming_near_dup_flags(stream, cfg,
                                                   watermark="10 seconds")
-    q = (flags.writeStream.format("memory").queryName("eq_out")
+    out_name = f"eq_out_r{band_rows}"
+    q = (flags.writeStream.format("memory").queryName(out_name)
          .outputMode("append").start())
     try:
         q.processAllAvailable()
-        srows = spark.sql("SELECT DISTINCT doc_id, dup_of FROM eq_out").collect()
+        srows = spark.sql(
+            f"SELECT DISTINCT doc_id, dup_of FROM {out_name}").collect()
     finally:
         q.stop()
 
