@@ -40,12 +40,19 @@ def search_probe(bands: DataFrame, doc_hashes: DataFrame, probe_id: str,
     # LITERAL pushed-down predicate, not a join: collect the probe's band
     # keys (<= num_bands tiny rows, the same bytes the old broadcast
     # shipped through the driver anyway) and filter the index scan with
-    # band_hash IN (...) plus the exact (band_id, band_hash) disjunction.
-    # Against the BUCKETED band table (plans/checkpoint.py, bucketed on
-    # band_hash) the IN list additionally prunes bucket files, so a probe
-    # reads ~probe-bands/n_buckets of the index instead of scanning and
-    # shuffling all of it (guide §6 — make pushdown reach the scan;
-    # asserted in tests/test_plans.py).
+    # band_hash IN (...) plus the exact (band_id, band_hash) disjunction
+    # (guide §6 — make pushdown reach the scan; asserted in
+    # tests/test_plans.py), so the index is never shuffled.
+    # What a probe reads from the BUCKETED stages (plans/checkpoint.py):
+    # - its own bands: a doc_id filter on a table bucketed on band_hash
+    #   prunes no bucket; parquet dictionaries skip only the bucket files
+    #   holding none of the probe's bands (b bands land in up to min(b, n)
+    #   of n buckets);
+    # - the colliding rows: the IN list selects the buckets the probe's
+    #   band hashes fall in, all n of them or nearly so when b >= n
+    #   (16 bands into 16 buckets select about 10);
+    # - verification: the broadcast join below reads all of doc_hashes.
+    # So a probe's reads grow with the index, not with the probe.
     probe_rows = (bands.filter(F.col("doc_id") == probe_id)
                   .select("band_id", "band_hash").distinct().collect())
     if probe_rows:

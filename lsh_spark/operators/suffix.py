@@ -307,6 +307,8 @@ def longest_common_run(docs: DataFrame, cfg: DedupConfig,
         from lsh_spark.operators.skew import bucket_census
         df_g = bucket_census(g.select("gh", "doc_id").distinct(), ["gh"])
         hot = df_g.filter(F.col("bucket_size") > hot_gram_cap).select("gh")
+        # bounded broadcast: each hot gram holds > hot_gram_cap distinct
+        # (gram, doc) rows, so there are fewer than rows / hot_gram_cap
         g = g.join(F.broadcast(hot), "gh", "left_anti")
     a = g.select(F.col("doc_id").alias("doc_a"), F.col("pos").alias("pos_a"), "gh")
     b = g.select(F.col("doc_id").alias("doc_b"), F.col("pos").alias("pos_b"), "gh")

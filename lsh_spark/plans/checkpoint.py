@@ -33,7 +33,9 @@ reference's filenames-manifest analog (reference
 stage is additionally an external ``CLUSTERED BY`` session-catalog table
 over its directory, registered from the manifest on first use in a
 session; the catalog entry is only metadata, so a failed rewrite or a
-fresh session loses nothing.
+fresh session loses nothing. Its rows are clustered by bucket before every
+write or append, so each commit adds at most one file per bucket, not one
+per write task and bucket.
 """
 
 from __future__ import annotations
@@ -112,7 +114,14 @@ class CheckpointStore:
         how the repeatedly-joined tables (doc_hashes for verification, band
         buckets for probing) avoid re-shuffling the corpus per consumer.
         Atomic replace like ``write``; Iceberg mode writes a
-        ``bucket(n, col)``-partitioned table instead — same property."""
+        ``bucket(n, col)``-partitioned table instead — same property.
+
+        The rows are repartitioned by the bucket hash before they are
+        written, here and on every ``append`` to the stage, so each commit
+        writes at most one file per bucket. The commit therefore runs with
+        ``n_buckets`` write tasks, the same parallelism the stage's
+        co-located reads already have, and a row's ``_part_id`` is its
+        bucket id."""
         return self._commit(df, stage, {"bucket_cols": list(bucket_cols),
                                         "n_buckets": n_buckets})
 
@@ -128,8 +137,10 @@ class CheckpointStore:
         Crash safety matches ``write``: task files are committed through
         the Hadoop commit protocol (renamed out of ``_temporary`` only at
         job commit), so a crash mid-append leaves the previously committed
-        stage intact plus an ignorable ``_temporary`` dir — the delta
-        simply re-runs. Iceberg mode appends a snapshot."""
+        stage intact plus an ignorable ``_temporary`` dir. The append is
+        not idempotent, though: a retry after it committed appends the
+        same rows again, so a batch that may have committed must not
+        simply re-run. Iceberg mode appends a snapshot."""
         return self._commit(df, stage, append=True)
 
     def append_bucketed(self, df: DataFrame, stage: str,
@@ -146,14 +157,19 @@ class CheckpointStore:
         """The one commit path of both layouts: stamp lineage, write (temp
         dir + rename) or append, then log the layout to the manifest."""
         spark = df.sparkSession
-        stamped = (df.withColumn("_run_id", F.lit(self.run_id))
-                     .withColumn("_stage", F.lit(stage))
-                     .withColumn("_part_id", F.spark_partition_id()))
         append = append and self.exists(stage, spark)
         if append:  # an existing stage keeps its recorded layout
             layout = self._layout(stage)
         layout = layout or {}
-        if self._iceberg(spark):
+        iceberg = self._iceberg(spark)
+        if layout and not iceberg:
+            # the same pmod(murmur3(cols), n) as the bucketBy writer: each
+            # task holds one bucket, so a commit writes one file per bucket
+            df = df.repartition(layout["n_buckets"], *layout["bucket_cols"])
+        stamped = (df.withColumn("_run_id", F.lit(self.run_id))
+                     .withColumn("_stage", F.lit(stage))
+                     .withColumn("_part_id", F.spark_partition_id()))
+        if iceberg:
             if append:
                 stamped.writeTo(self._table(stage)).append()
             else:

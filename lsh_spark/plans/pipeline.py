@@ -230,7 +230,9 @@ def incremental_dedup_flags(new_docs: DataFrame, index_bands: DataFrame,
 
     # hot-key set materialized once (tiny by design): it is broadcast into
     # BOTH the reps semi-join and the cold anti-join — without the
-    # checkpoint each broadcast build re-runs the full index census
+    # checkpoint each broadcast build re-runs the full index census.
+    # Bound: every hot key holds > hot_bucket_cap index rows, so there are
+    # fewer than rows / hot_bucket_cap of them
     hot_keys = materialize(
         bucket_census(index_bands, ["band_id", "band_hash"])
         .filter(F.col("bucket_size") > cfg.hot_bucket_cap)

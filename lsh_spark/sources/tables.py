@@ -45,8 +45,9 @@ def load_dup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 def quarantine_filter(df: DataFrame, bad_ids, id_col: str = "conv_id") -> DataFrame:
     """Drop rows whose id is on a quarantine list (reference analog: the
     hardcoded broken-WAV skip list, ``loader.py:148-159`` — S6). Accepts a
-    Python list (broadcast literal) or a DataFrame (anti-join)."""
+    Python list (an ``isin`` literal) or a DataFrame (anti-join; the list
+    has no size bound, so the planner picks the join from its stats)."""
     from pyspark.sql import functions as F
     if isinstance(bad_ids, DataFrame):
-        return df.join(F.broadcast(bad_ids.select(id_col)), id_col, "left_anti")
+        return df.join(bad_ids.select(id_col), id_col, "left_anti")
     return df.filter(~F.col(id_col).isin(list(bad_ids)))

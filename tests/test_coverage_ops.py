@@ -16,6 +16,17 @@ def test_quarantine_filter_list_and_df(spark):
     assert {r["conv_id"] for r in quarantine_filter(df, ["b"]).collect()} == {"a", "c"}
     bad = spark.createDataFrame([("a",), ("c",)], "conv_id string")
     assert {r["conv_id"] for r in quarantine_filter(df, bad).collect()} == {"b"}
+    # the quarantine list has no size bound: with broadcasts switched off
+    # the planner must be free to pick a shuffled join, rows unchanged
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = quarantine_filter(df, bad)
+        assert {r["conv_id"] for r in out.collect()} == {"b"}
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" not in plan
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_distance_to_similarity(spark):
