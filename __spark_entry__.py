@@ -1181,7 +1181,7 @@ FROM pp
 toks AS (SELECT doc_id, unnest({sql_tokens('text')}) AS tok FROM docs),
 tw AS (SELECT doc_id, {sql_hash60('tok')} AS th, count(*) AS w
        FROM toks GROUP BY 1, 2),
-bits AS (SELECT unnest(range({CFG16.simhash_bits})) AS bit),
+bits AS (SELECT unnest(range({simhash.SIMHASH_BITS})) AS bit),
 perbit AS (
   SELECT doc_id, bit,
          sum(CASE WHEN (th >> CAST(bit AS INT)) & 1 = 1 THEN w ELSE -w END) AS s
@@ -1204,7 +1204,7 @@ WITH {simhash_cte(_sql_conv_docs(tp))}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
 FROM sim a JOIN sim b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {CFG16.hamming_threshold}
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {simhash.HAMMING_THRESHOLD}
 """
 
     sql["containment_pairs"] = f"""
@@ -1550,7 +1550,7 @@ mh_edges AS (
 toks2 AS (SELECT doc_id, unnest({sql_tokens('text')}) AS tok FROM docs),
 tw AS (SELECT doc_id, {sql_hash60('tok')} AS th, count(*) AS w
        FROM toks2 GROUP BY 1, 2),
-bits AS (SELECT unnest(range({pipe.simhash_bits})) AS bit),
+bits AS (SELECT unnest(range({simhash.SIMHASH_BITS})) AS bit),
 perbit AS (
   SELECT doc_id, bit,
          sum(CASE WHEN (th >> CAST(bit AS INT)) & 1 = 1 THEN w ELSE -w END) AS s
@@ -1565,7 +1565,7 @@ sim AS (
 sim_edges AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM sim a JOIN sim b ON a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.simhash, b.simhash)) <= {pipe.hamming_threshold}
+  WHERE bit_count(xor(a.simhash, b.simhash)) <= {simhash.HAMMING_THRESHOLD}
 ),
 g20 AS (SELECT doc_id, {sql_hash60('gram')} AS gh
         FROM (SELECT doc_id, unnest(list_distinct({grams_pipe})) AS gram FROM docs)),

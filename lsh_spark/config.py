@@ -4,7 +4,12 @@ The reference hardcodes its knobs in ``constants.py`` (reference
 ``constants.py:1-10,40``: P=100 permutations, SELECTION_FUNCTIONS=[min,max],
 BATCH_SIZE=1000) and window parameters inline (reference ``lsh.py:46-48``
 PLSH window 60/shift 15/stride 2; ``lsh.py:76-79`` NLSH window 10/shift 1).
-Here every knob is an explicit, immutable config value.
+Here every knob that callers set is an explicit, immutable config value.
+Values no caller varies are constants beside the code that assumes them:
+shingles always shift by one token (the reference's strided windows live
+in ``operators/parity.py``), and the 60-bit SimHash width and its Hamming
+threshold of 3 sit in ``operators/simhash.py`` with the 4-chunk pigeonhole
+they fix.
 """
 
 from __future__ import annotations
@@ -38,8 +43,7 @@ class DedupConfig:
     """
 
     # shingling (reference windowing: lsh.py:40-65 PLSH, lsh.py:68-121 NLSH)
-    shingle_k: int = 5          # tokens per shingle
-    shingle_stride: int = 1     # window shift (reference WINDOW_SHIFT)
+    shingle_k: int = 5          # tokens per shingle (window shift 1)
 
     # MinHash / banding (reference lsh.py:213-269)
     num_perms: int = 32
@@ -47,10 +51,6 @@ class DedupConfig:
 
     # verification (reference matching_algorithms.py:55-108 Jaccard)
     jaccard_threshold: float = 0.5
-
-    # SimHash pass
-    simhash_bits: int = 60      # portable hash is 60-bit (15 hex chars of md5)
-    hamming_threshold: int = 3
 
     # suffix / exact-substring pass
     substring_k: int = 20       # tokens of exact overlap that count as dup-ish
@@ -61,18 +61,6 @@ class DedupConfig:
 
     # skew handling (operators/skew.py)
     hot_bucket_cap: int = 200   # buckets larger than this are star-linked
-
-    # optional TF-IDF boilerplate-shingle prefilter: drop shingles whose
-    # document frequency exceeds this fraction of the corpus BEFORE
-    # signatures (None = off; the hot-bucket cap already guarantees
-    # survival — this is a recall/precision knob, see operators/tfidf.py
-    # filter_common_shingles)
-    max_shingle_df_frac: float | None = None
-
-    # probe search: candidates must collide in at least this many distinct
-    # bands before exact verification/ranking (caps the mega-probe case
-    # where boilerplate text collides with everything)
-    search_min_agreement: int = 1
 
     # document granularity: whole conversation or single turn
     granularity: str = "conv"   # "conv" | "turn"

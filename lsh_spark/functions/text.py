@@ -49,21 +49,21 @@ def tokens_col(text: Column | str) -> Column:
     return F.filter(F.split(c, r"\s+"), lambda t: t != F.lit(""))
 
 
-def shingles_col(tokens: Column, k: int, stride: int = 1) -> Column:
-    """All k-token shingles (window shift = ``stride``), space-joined.
+def shingles_col(tokens: Column, k: int) -> Column:
+    """All k-token shingles (window shift 1), space-joined.
 
     Docs shorter than k tokens yield an empty array (the reference skips
     empty-signature docs, ``lsh.py:252``; empty-pitch rows are dropped at
     load, ``json_manipulator.py:213``).
     """
     n = F.size(tokens)
-    idx = F.sequence(F.lit(0), n - k, F.lit(stride))
+    idx = F.sequence(F.lit(0), n - k)
     shingles = F.transform(idx, lambda i: F.array_join(F.slice(tokens, i + 1, k), " "))
     return F.when(n >= k, shingles).otherwise(F.array().cast("array<string>"))
 
 
-def distinct_shingles_col(tokens: Column, k: int, stride: int = 1) -> Column:
-    return F.array_distinct(shingles_col(tokens, k, stride))
+def distinct_shingles_col(tokens: Column, k: int) -> Column:
+    return F.array_distinct(shingles_col(tokens, k))
 
 
 # ---- DuckDB oracle SQL builders (same semantics, DuckDB dialect) ----
@@ -72,11 +72,11 @@ def sql_tokens(text_expr: str) -> str:
     return f"list_filter(string_split_regex({text_expr}, '\\s+'), x -> x <> '')"
 
 
-def sql_shingles(tokens_expr: str, k: int, stride: int = 1) -> str:
+def sql_shingles(tokens_expr: str, k: int) -> str:
     """DuckDB list of space-joined k-grams (1-based inclusive list slicing)."""
     return (
         f"CASE WHEN len({tokens_expr}) >= {k} THEN "
-        f"list_transform(range(1, len({tokens_expr}) - {k} + 2, {stride}), "
+        f"list_transform(range(1, len({tokens_expr}) - {k} + 2), "
         f"i -> array_to_string(({tokens_expr})[i:i+{k - 1}], ' ')) "
         f"ELSE [] END"
     )

@@ -45,6 +45,7 @@ from lsh_spark.config import DedupConfig
 from lsh_spark.functions.hashing import M, minhash_params
 from lsh_spark.functions.text import py_tokens
 from lsh_spark.operators.shingle import _MASK60, _token_hashes, rolling_raw
+from lsh_spark.operators.simhash import SIMHASH_BITS
 
 FUSED_SCHEMA = ("doc_id string, hashes array<bigint>, sig array<bigint>, "
                 "simhash bigint, grams array<bigint>")
@@ -54,12 +55,11 @@ def fused_doc_features(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(doc_id, text) → fused feature frame (see module docstring)."""
     k, gk = cfg.shingle_k, cfg.substring_k
     sample = cfg.substring_sample_mod
-    bits = cfg.simhash_bits
     a_vec, b_vec = minhash_params(cfg.num_perms)
     n_perms = cfg.num_perms
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        shifts = np.arange(bits, dtype=np.int64)
+        shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
         for batch in batches:
             doc_ids = batch.column("doc_id")
             texts = batch.column("text").to_pylist()

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from lsh_spark.config import DedupConfig
+from lsh_spark.operators import lsh_bands, minhash
 
 
 def search_probe(bands: DataFrame, doc_hashes: DataFrame, probe_id: str,
@@ -44,24 +45,33 @@ def search_probe(bands: DataFrame, doc_hashes: DataFrame, probe_id: str,
     # (guide §6 — make pushdown reach the scan; asserted in
     # tests/test_plans.py), so the index is never shuffled.
     # What a probe reads from the BUCKETED stages (plans/checkpoint.py):
-    # - its own bands: a doc_id filter on a table bucketed on band_hash
-    #   prunes no bucket; parquet dictionaries skip only the bucket files
-    #   holding none of the probe's bands (b bands land in up to min(b, n)
-    #   of n buckets);
+    # - its own doc_hashes row, from 1 of n buckets (a doc_id filter on a
+    #   table bucketed on doc_id), twice: here for its band keys, and in
+    #   the ranking query for verification (a literal of the row would
+    #   cost one Py4J call per hash). The keys are derived as the index
+    #   derived them, in built-in expressions (no Python task per probe),
+    #   so a probe whose band rows never reached the index (a crash
+    #   between the hashes and bands appends) still finds its neighbours;
     # - the colliding rows: the IN list selects the buckets the probe's
     #   band hashes fall in, all n of them or nearly so when b >= n
     #   (16 bands into 16 buckets select about 10);
     # - verification: the broadcast join below reads all of doc_hashes.
-    # So a probe's reads grow with the index, not with the probe.
-    probe_rows = (bands.filter(F.col("doc_id") == probe_id)
-                  .select("band_id", "band_hash").distinct().collect())
+    # So the last two reads still grow with the index, not with the probe.
+    own = doc_hashes.filter(F.col("doc_id") == probe_id)
+    probe_rows = sorted({
+        (band_id, band_hash) for r in
+        own.select(minhash.signature_col(F.col("hashes"), cfg).alias("sig"))
+        .filter(F.col("sig").isNotNull())
+        # its own projection: sig is read once per band row, not rebuilt
+        .select(lsh_bands.band_hashes_col(F.col("sig"), cfg).alias("bands"))
+        .collect()
+        for band_id, band_hash in enumerate(r["bands"])})
     if probe_rows:
-        in_hashes = F.col("band_hash").isin(
-            [r["band_hash"] for r in probe_rows])
+        in_hashes = F.col("band_hash").isin([h for _, h in probe_rows])
         exact = None
-        for r in probe_rows:
-            term = ((F.col("band_id") == r["band_id"])
-                    & (F.col("band_hash") == r["band_hash"]))
+        for band_id, band_hash in probe_rows:
+            term = ((F.col("band_id") == band_id)
+                    & (F.col("band_hash") == band_hash))
             exact = term if exact is None else (exact | term)
         probe_pred = in_hashes & exact
     else:
@@ -72,13 +82,8 @@ def search_probe(bands: DataFrame, doc_hashes: DataFrame, probe_id: str,
         .select("band_id", "doc_id").distinct()
         .groupBy("doc_id")
         .agg(F.count("*").cast("int").alias("band_agreement"))
-        # mega-probe guard: boilerplate probes collide with ~everything;
-        # require agreement in >= cfg.search_min_agreement distinct bands
-        # before shipping shingle arrays to the exact verifier.
-        .filter(F.col("band_agreement") >= cfg.search_min_agreement)
     )
-    probe_set = (doc_hashes.filter(F.col("doc_id") == probe_id)
-                 .select(F.col("hashes").alias("h_p")))
+    probe_set = own.select(F.col("hashes").alias("h_p"))
     scored = (
         # hits is candidate-sized (≪ corpus) — broadcast it so the
         # doc_hashes side is probed in place and never shuffles

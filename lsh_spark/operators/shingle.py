@@ -40,8 +40,7 @@ def shingle_hashes_col(text: Column, cfg: DedupConfig) -> Column:
     k-shingles → ``hash64`` (``cfg.hash_mode``), as built-in Column
     expressions (JVM codegen, no Python) — usable in batch and streaming
     plans alike."""
-    sh = distinct_shingles_col(tokens_col(text), cfg.shingle_k,
-                               cfg.shingle_stride)
+    sh = distinct_shingles_col(tokens_col(text), cfg.shingle_k)
     return F.transform(sh, lambda s: hash64(s, cfg.hash_mode))
 
 
@@ -64,11 +63,11 @@ def doc_shingle_hashes_arrow(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """
     if cfg.hash_mode == "portable":
         return _shingle_hashes_arrow_portable(docs, cfg)
-    return gram_hashes_fast(docs, cfg.shingle_k, cfg.shingle_stride)
+    return gram_hashes_fast(docs, cfg.shingle_k)
 
 
 def _shingle_hashes_arrow_portable(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    k, stride = cfg.shingle_k, cfg.shingle_stride
+    k = cfg.shingle_k
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -81,7 +80,7 @@ def _shingle_hashes_arrow_portable(docs: DataFrame, cfg: DedupConfig) -> DataFra
                     out.append([])
                     continue
                 seen = set()
-                for i in range(0, len(toks) - k + 1, stride):
+                for i in range(len(toks) - k + 1):
                     s = " ".join(toks[i:i + k])
                     seen.add(int(hashlib.md5(s.encode()).hexdigest()[:15], 16))
                 out.append(sorted(seen))
@@ -157,7 +156,7 @@ def _token_hashes(
     return vocab_h[codes], lens, codes, vocab_h
 
 
-def gram_hashes_fast(docs: DataFrame, k: int, stride: int = 1,
+def gram_hashes_fast(docs: DataFrame, k: int,
                      sample_mod: int | None = None) -> DataFrame:
     """(doc_id, text) → (doc_id, hashes array<bigint>) of distinct k-gram
     rolling hashes (uint64 Horner over token hashes, masked to 60 bits).
@@ -182,8 +181,6 @@ def gram_hashes_fast(docs: DataFrame, k: int, stride: int = 1,
                     out.append(np.empty(0, np.int64))
                     continue
                 gh = rolling_raw(seg, k) & _MASK60
-                if stride > 1:
-                    gh = gh[::stride]
                 if sample_mod:
                     gh = gh[gh % np.uint64(sample_mod) == 0]
                 out.append(np.unique(gh).astype(np.int64))

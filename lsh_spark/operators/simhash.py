@@ -33,7 +33,11 @@ from lsh_spark.functions.hashing import hash64, np_hash60
 from lsh_spark.functions.text import py_tokens, tokens_col
 from lsh_spark.plans.checkpoint import materialize
 
-N_CHUNKS = 4  # hamming_threshold 3 → 4 chunks by pigeonhole
+# portable hash is 60-bit (15 hex chars of md5); a pair within Hamming
+# distance 3 dirties at most 3 of 4 chunks, so shares one (pigeonhole)
+SIMHASH_BITS = 60
+HAMMING_THRESHOLD = 3
+N_CHUNKS = HAMMING_THRESHOLD + 1
 
 
 def token_weights(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -52,13 +56,12 @@ def simhash_docs(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     bits table = sequence(0, B-1) cross joined via explode; per (doc, bit):
     s = Σ weight * (bit set ? +1 : -1); simhash = Σ_{bits with s>0} 2^bit.
     """
-    b = cfg.simhash_bits
     tw = token_weights(docs, cfg)
     # static (bit, 2^bit) pairs — bit shifts by a Column aren't supported,
     # and pow() doubles lose precision at 2^60, so carry exact longs.
     bit_structs = F.array(*[
         F.struct(F.lit(i).alias("bit"), F.lit(1 << i).cast("long").alias("p2"))
-        for i in range(b)
+        for i in range(SIMHASH_BITS)
     ])
     per_bit = (
         tw.select("doc_id", "token_hash", "weight",
@@ -96,11 +99,9 @@ def simhash_docs_arrow(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
        (total_tokens × B) temp made 32 concurrent Python workers
        aggregate-memory-bandwidth bound.
     """
-    bits = cfg.simhash_bits
-
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pandas as pd
-        shifts = np.arange(bits, dtype=np.int64)
+        shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
         for batch in batches:
             doc_ids = batch.column("doc_id").to_pylist()
             texts = batch.column("text").to_pylist()
@@ -145,9 +146,9 @@ def simhash_docs_arrow(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     return docs.select("doc_id", "text").mapInArrow(kernel, "doc_id string, simhash bigint")
 
 
-def _chunk_keys(cfg: DedupConfig) -> "F.Column":
-    """4 × 15-bit chunk keys (pigeonhole over hamming_threshold=3)."""
-    chunk_bits = cfg.simhash_bits // N_CHUNKS
+def _chunk_keys() -> "F.Column":
+    """4 × 15-bit chunk keys (pigeonhole over HAMMING_THRESHOLD=3)."""
+    chunk_bits = SIMHASH_BITS // N_CHUNKS
     mask = (1 << chunk_bits) - 1
     return F.array(*[
         F.shiftright(F.col("simhash"), i * chunk_bits).bitwiseAND(F.lit(mask))
@@ -155,7 +156,7 @@ def _chunk_keys(cfg: DedupConfig) -> "F.Column":
     ])
 
 
-def _combo_keys(cfg: DedupConfig) -> "F.Column":
+def _combo_keys() -> "F.Column":
     """Manku-style block-combination keys (Manku, Jain & Sarma, WWW'07 §3):
     split the B bits into m blocks, key on every combination of c = m − t
     blocks. Any pair within Hamming ≤ t dirties ≤ t blocks, leaving ≥ c
@@ -167,11 +168,9 @@ def _combo_keys(cfg: DedupConfig) -> "F.Column":
     at the cost of 20 key rows per doc instead of 4.
     """
     from itertools import combinations
-    t = cfg.hamming_threshold
-    bits = cfg.simhash_bits
-    m = t + 3 if bits % (t + 3) == 0 else N_CHUNKS  # 60,3 → 6 blocks
-    c = m - t
-    block_bits = bits // m
+    m = HAMMING_THRESHOLD + 3  # 6 blocks of 10 bits
+    c = m - HAMMING_THRESHOLD
+    block_bits = SIMHASH_BITS // m
     mask = (1 << block_bits) - 1
     blocks = [
         F.shiftright(F.col("simhash"), i * block_bits).bitwiseAND(F.lit(mask))
@@ -213,7 +212,7 @@ def simhash_candidate_pairs(sh: DataFrame, cfg: DedupConfig,
     # pass re-executes per consumer (measured: 8 MapInArrow nodes in the
     # bench simhash_pass plan). Two narrow columns per doc — tiny.
     sh = materialize(sh)
-    keys = _chunk_keys(cfg) if mode == "chunk" else _combo_keys(cfg)
+    keys = _chunk_keys() if mode == "chunk" else _combo_keys()
     # stage the key array in its own Project before exploding — same
     # shape as operators/lsh_bands.py band_buckets, where exploding the
     # inline higher-order expression measurably dropped Generate out of
@@ -241,6 +240,6 @@ def simhash_candidate_pairs(sh: DataFrame, cfg: DedupConfig,
     return (
         cand.join(va, "doc_a").join(vb, "doc_b")
         .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= cfg.hamming_threshold)
+        .filter(F.col("hamming") <= HAMMING_THRESHOLD)
         .select("doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming"))
     )

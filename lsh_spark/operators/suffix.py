@@ -45,7 +45,7 @@ from lsh_spark.plans.checkpoint import materialize
 
 
 def _gram_hashes(docs: DataFrame, k: int, mode: str) -> DataFrame:
-    grams = F.array_distinct(shingles_col(tokens_col(F.col("text")), k, 1))
+    grams = F.array_distinct(shingles_col(tokens_col(F.col("text")), k))
     return docs.select(
         "doc_id",
         F.explode(F.transform(grams, lambda s: hash64(s, mode))).alias("gram_hash"),
@@ -91,7 +91,7 @@ def gram_keys(docs: DataFrame, cfg: DedupConfig,
     # pair path consumes the keyed frame three times (census + small +
     # hot membership) and would otherwise re-run the Arrow
     # tokenize+hash kernel per consumer; the explode stays narrow.
-    return (materialize(gram_hashes_fast(docs, cfg.substring_k, 1,
+    return (materialize(gram_hashes_fast(docs, cfg.substring_k,
                                          sample_mod=sample_mod))
             .select("doc_id", F.explode("hashes").alias("gram_hash")))
 
@@ -299,7 +299,7 @@ def longest_common_run(docs: DataFrame, cfg: DedupConfig,
     """
     k = cfg.substring_k
     min_tokens = min_tokens if min_tokens is not None else k
-    grams = shingles_col(tokens_col(F.col("text")), k, 1)
+    grams = shingles_col(tokens_col(F.col("text")), k)
     g = docs.select(
         "doc_id", F.posexplode(grams).alias("pos", "gram"),
     ).select("doc_id", "pos", hash64(F.col("gram"), cfg.hash_mode).alias("gh"))

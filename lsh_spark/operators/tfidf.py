@@ -14,8 +14,10 @@ quantity (tf, df, doc length, filter stats) derives from. At 100 TB the
 tokenize-explode dominates; deriving four quantities from four separate
 explodes (the round-1 shape) multiplied the dominant cost by 4.
 
-The dedup use (SURVEY.md §7.2 slice 5): drop ultra-common shingles
-(boilerplate) before signatures — ``filter_common_shingles``.
+The dedup engine applies no document-frequency filter to its shingles:
+boilerplate shingles that make hot LSH buckets are defused by the
+hot-bucket cap (operators/skew.py), and every candidate is still verified
+by exact Jaccard.
 """
 
 from __future__ import annotations
@@ -159,47 +161,3 @@ def tfidf_filter_stats(docs: DataFrame, min_tfidf: float,
         (F.avg(F.when(F.col("n_kept") == 0, 1.0).otherwise(0.0)) * 100)
          .alias("emptied_docs_pct"),
         F.count("*").alias("n_docs"))
-
-
-def filter_common_shingles_arrays(doc_hashes: DataFrame,
-                                  max_df_frac: float) -> DataFrame:
-    """Array-form twin of ``filter_common_shingles`` wired into the dedup
-    pipeline (cfg.max_shingle_df_frac): (doc_id, hashes array) →  same,
-    minus shingles whose document frequency exceeds ``max_df_frac`` of the
-    corpus. Fully relational and 100 TB-shaped: the df census is a map-side-
-    combining aggregation to a vocabulary-sized frame, the common set is at
-    most (avg shingles/doc)/max_df_frac values (tiny, broadcast as ONE
-    collect_set row), and the corpus itself never shuffles — the drop is a
-    JVM-side ``array_except`` behind a broadcast single-row cross join.
-    Docs emptied by the filter keep an empty array; the MinHash kernel
-    already drops those (operators/minhash.py keep = lengths > 0).
-    """
-    nd = doc_hashes.select(F.count("*").alias("nd"))
-    common = (
-        doc_hashes.select(F.explode("hashes").alias("h"))
-        .groupBy("h").agg(F.count("*").alias("df"))
-        .crossJoin(F.broadcast(nd))
-        .filter(F.col("df") > F.col("nd") * max_df_frac)
-        .agg(F.collect_set("h").alias("common"))
-    )
-    return (
-        doc_hashes.crossJoin(F.broadcast(common))
-        .select("doc_id",
-                F.array_except("hashes", "common").alias("hashes"))
-    )
-
-
-def filter_common_shingles(doc_hashes_long: DataFrame, max_df_frac: float,
-                           n_docs: int) -> DataFrame:
-    """Drop shingles occurring in more than ``max_df_frac`` of docs —
-    the dedup-side analog of the reference's min-tfidf pitch filter
-    (``scripts/tfidf_pitch_extraction.py:114-181``): boilerplate shingles
-    carry no dedup signal and create hot LSH buckets."""
-    cap = int(max_df_frac * n_docs)
-    common = (
-        doc_hashes_long.groupBy("shingle_hash")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > cap)
-        .select("shingle_hash")
-    )
-    return doc_hashes_long.join(F.broadcast(common), "shingle_hash", "left_anti")

@@ -28,7 +28,7 @@ def winnow_fingerprints(docs: DataFrame, cfg: DedupConfig,
     k = cfg.shingle_k grams, stride 1 (winnowing requires the dense gram
     sequence), selection = min per sliding window of ``window`` grams.
     """
-    grams = shingles_col(tokens_col(F.col("text")), cfg.shingle_k, 1)
+    grams = shingles_col(tokens_col(F.col("text")), cfg.shingle_k)
     g = docs.select(
         "doc_id", F.posexplode(grams).alias("pos", "gram"))
     g = g.select("doc_id", "pos", hash64(F.col("gram"), cfg.hash_mode).alias("h"))

@@ -276,7 +276,7 @@ class CheckpointStore:
     # defaults joins band_id 0-15 keys against band_id 0-31 rows and silently
     # reports zero vs-index duplicates)
     GEOMETRY_FIELDS = ("num_perms", "band_rows", "shingle_k",
-                       "shingle_stride", "hash_mode", "granularity")
+                       "hash_mode", "granularity")
 
     def record_geometry(self, cfg) -> None:
         """Stamp the index's banding geometry into the run manifest at
@@ -292,14 +292,16 @@ class CheckpointStore:
     def validate_geometry(self, cfg) -> None:
         """Raise if the session cfg's banding geometry differs from what the
         checkpointed index was built with.  No-op when the store predates
-        geometry recording (nothing to validate against)."""
+        geometry recording (nothing to validate against).  Only
+        GEOMETRY_FIELDS are compared: a field an older manifest recorded
+        but the config has since dropped is ignored."""
         rec = self.geometry()
         if rec is None:
             return
-        cur = {f: getattr(cfg, f) for f in rec}
-        if cur != rec:
-            built = {k: rec[k] for k in rec if cur.get(k) != rec[k]}
-            now = {k: cur[k] for k in built}
+        built = {f: rec[f] for f in self.GEOMETRY_FIELDS
+                 if f in rec and getattr(cfg, f) != rec[f]}
+        if built:
+            now = {f: getattr(cfg, f) for f in built}
             raise ValueError(
                 f"index geometry mismatch — the checkpointed band index at "
                 f"{self.root} was built with {built} but the session cfg "

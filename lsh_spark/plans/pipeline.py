@@ -85,10 +85,6 @@ def dedup_pipeline(
             return fused().select("doc_id", "hashes")
 
         def signatures() -> DataFrame:
-            if cfg.max_shingle_df_frac is not None:
-                # fused sigs were computed pre-filter; re-derive from the
-                # filtered hash arrays so signature and verification agree
-                return minhash.minhash_signatures(hashes(), cfg)
             return (fused().filter(F.col("sig").isNotNull())
                     .select("doc_id", "sig"))
 
@@ -105,7 +101,7 @@ def dedup_pipeline(
                       lambda: doc_shingle_hashes_arrow(docs, cfg))
 
         def signatures() -> DataFrame:
-            return minhash.minhash_signatures(hashes(), cfg)
+            return minhash.minhash_signatures(shingle_hashes(), cfg)
 
         def simhashes() -> DataFrame:
             return simhash.simhash_docs_arrow(docs, cfg)
@@ -113,24 +109,11 @@ def dedup_pipeline(
         def gram_keys() -> DataFrame:
             return suffix.gram_keys(docs, cfg, cfg.substring_sample_mod)
 
-    @cache
-    def hashes() -> DataFrame:
-        # opt-in recall/precision knob (cfg.max_shingle_df_frac): drop
-        # boilerplate shingles before signatures AND verification — the
-        # dedup analog of the reference's min-tfidf pitch filter
-        # (scripts/tfidf_pitch_extraction.py:114-181). Hot-bucket caps
-        # already guarantee survival; this improves candidate precision.
-        if cfg.max_shingle_df_frac is None:
-            return shingle_hashes()
-        from lsh_spark.operators.tfidf import filter_common_shingles_arrays
-        return ck("shingle_hashes_filtered",
-                  lambda: filter_common_shingles_arrays(
-                      shingle_hashes(), cfg.max_shingle_df_frac))
-
     def minhash_pass() -> DataFrame:
         bands = lsh_bands.band_buckets(signatures(), cfg)
         cand = lsh_bands.candidate_pairs(bands, cfg)
-        verified = pairs.verify_pairs(cand, hashes(), cfg).select("doc_a", "doc_b")
+        verified = (pairs.verify_pairs(cand, shingle_hashes(), cfg)
+                    .select("doc_a", "doc_b"))
         if cascade_mode != "subtract":
             return verified
         # the REJECTED candidates ride in the same stage, flagged, so the
@@ -273,8 +256,7 @@ def incremental_dedup_flags(new_docs: DataFrame, index_bands: DataFrame,
 def incremental_dedup(spark: SparkSession, new_docs: DataFrame,
                       store: CheckpointStore, cfg: DedupConfig | None = None,
                       bands_stage: str = "bands",
-                      hashes_stage: str = "shingle_hashes",
-                      update_index: bool = True) -> DataFrame:
+                      hashes_stage: str = "shingle_hashes") -> DataFrame:
     """Store-aware wrapper: probe the checkpointed index, then fold the new
     batch's bands + shingle hashes back into the store so the next delta
     sees this one.
@@ -309,8 +291,7 @@ def incremental_dedup(spark: SparkSession, new_docs: DataFrame,
     flags = incremental_dedup_flags(new_docs, index_bands, index_hashes, cfg,
                                     new_hashes=new_hashes,
                                     new_bands=new_bands)
-    if update_index:
-        flags = materialize(flags)  # materialize before index mutation
-        store.append(new_hashes, hashes_stage)
-        store.append(new_bands, bands_stage)
+    flags = materialize(flags)  # materialize before index mutation
+    store.append(new_hashes, hashes_stage)
+    store.append(new_bands, bands_stage)
     return flags

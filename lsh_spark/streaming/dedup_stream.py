@@ -51,39 +51,6 @@ def streaming_exact_dedup(stream: DataFrame, watermark: str = "1 hour") -> DataF
     )
 
 
-def _sig_from_hashes(cfg, hashes: "F.Column") -> "F.Column":
-    """Per-row MinHash signature from a shingle-hash array column:
-    per-permutation affine min. Row-local (no aggregation), so it is legal
-    upstream of the stateful operator in a streaming plan.
-
-    ``hashes`` should be a MATERIALIZED column (its own projection), not
-    the raw ``shingle_hashes_col`` expression (operators/shingle.py): the
-    expression sits inside the per-permutation lambda, so inlining it
-    would re-run tokenization + shingling + hashing ``num_perms`` times
-    per row (measured 8.06× slower at P=8 on 50k sf0.1 turns — r6). A
-    separate select keeps it a cheap
-    attribute read; CollapseProject leaves multi-referenced non-cheap
-    aliases alone.
-
-    Docs with fewer than ``shingle_k`` tokens have NO shingles; for those
-    the signature is NULL (not an array of NULL mins), mirroring the batch
-    kernel's ``keep = lengths > 0`` drop (operators/minhash.py) — otherwise
-    every short turn would land in one permanent NULL bucket downstream.
-    """
-    from lsh_spark.functions.hashing import M, minhash_params
-    a_vec, b_vec = minhash_params(cfg.num_perms)
-    a_arr = F.array(*[F.lit(int(x)) for x in a_vec])
-    b_arr = F.array(*[F.lit(int(x)) for x in b_vec])
-    return F.when(
-        F.size(hashes) > 0,
-        F.transform(
-            F.sequence(F.lit(0), F.lit(cfg.num_perms - 1)),
-            lambda p: F.array_min(F.transform(
-                hashes,
-                lambda h: (F.element_at(a_arr, p + 1) * (h % M)
-                           + F.element_at(b_arr, p + 1)) % M))))
-
-
 _UNIT_MS = {
     "us": 0.001, "microsecond": 0.001,
     "ms": 1, "millisecond": 1,
@@ -141,6 +108,7 @@ def streaming_near_dup_flags(stream: DataFrame, cfg=None,
 
     from lsh_spark.config import DedupConfig
     from lsh_spark.operators.lsh_bands import band_hashes_col
+    from lsh_spark.operators.minhash import signature_col
     from lsh_spark.operators.shingle import shingle_hashes_col
     cfg = cfg or DedupConfig(num_perms=8)
     # State lives exactly one watermark horizon past a bucket's last update,
@@ -156,7 +124,7 @@ def streaming_near_dup_flags(stream: DataFrame, cfg=None,
             shingle_hashes_col(F.col("text"), cfg).alias("_hashes"))
         .select(
             "doc_id", "ts",
-            _sig_from_hashes(cfg, F.col("_hashes")).alias("sig"))
+            signature_col(F.col("_hashes"), cfg).alias("sig"))
         .filter(F.col("sig").isNotNull())
         # staged like lsh_bands.band_buckets: the generator explodes a
         # plain attribute, not the band-hash expression

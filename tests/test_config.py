@@ -1,4 +1,5 @@
-"""DedupConfig hygiene: every field is a knob something reads."""
+"""DedupConfig hygiene: every field is a knob something reads and some
+caller outside the tests sets."""
 
 from __future__ import annotations
 
@@ -8,7 +9,8 @@ import pathlib
 
 from lsh_spark.config import DedupConfig
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "lsh_spark"
+REPO = pathlib.Path(__file__).resolve().parent.parent
+PKG = REPO / "lsh_spark"
 
 
 def test_every_config_field_has_a_reader():
@@ -24,3 +26,26 @@ def test_every_config_field_has_a_reader():
                 read.add(node.attr)
     fields = {f.name for f in dataclasses.fields(DedupConfig)}
     assert fields - read == set()
+
+
+def test_every_config_field_has_a_setter():
+    """A field no caller sets is a dead knob too: every run takes its
+    default, so the code that handles other values is never exercised.
+    Setters are keywords of ``DedupConfig(...)`` or ``.with_(...)`` calls
+    in any module outside tests/ and config.py."""
+    set_ = set()
+    for path in REPO.rglob("*.py"):
+        rel = path.relative_to(REPO)
+        if (rel.parts[0] == "tests" or path == PKG / "config.py"
+                or any(p.startswith(".") for p in rel.parts)):
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = (f.id if isinstance(f, ast.Name)
+                    else f.attr if isinstance(f, ast.Attribute) else None)
+            if name in ("DedupConfig", "with_"):
+                set_.update(kw.arg for kw in node.keywords if kw.arg)
+    fields = {f.name for f in dataclasses.fields(DedupConfig)}
+    assert fields - set_ == set()

@@ -75,25 +75,6 @@ def test_fast_pipeline_recall(spark, t1_transcripts, t1_labels, band_rows):
     assert caught == len(eligible)
 
 
-def test_fast_filter_rederived_signatures_match_fused(spark, t1_transcripts):
-    """With the boilerplate filter on, the fast path re-derives signatures
-    from the filtered hash arrays instead of reading the fused ``sig``. At
-    max_shingle_df_frac=1.0 the filter drops nothing, so the clusters must
-    equal the unfiltered run: fused ``sig`` ≡ minhash_signatures(fused
-    ``hashes``). Only the MinHash pass runs, so no other pass can mask a
-    signature difference."""
-    cfg = DedupConfig(hash_mode="fast", substring_sample_mod=8)
-
-    def clusters(c):
-        return {r["doc_id"]: r["cluster_id"]
-                for r in dedup_pipeline(spark, t1_transcripts, c,
-                                        passes=("minhash",)).collect()}
-
-    plain = clusters(cfg)
-    assert plain
-    assert clusters(cfg.with_(max_shingle_df_frac=1.0)) == plain
-
-
 def test_default_banding_is_scale_safe():
     """VERDICT r3 #1: the library default must be the linear-candidate
     geometry — a user calling dedup_pipeline(spark, df) with defaults

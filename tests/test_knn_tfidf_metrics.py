@@ -9,9 +9,7 @@ import pytest
 import numpy as np
 from pyspark.sql import functions as F
 
-from lsh_spark.config import DedupConfig
 from lsh_spark.operators import knn, metrics, multimodal, tfidf
-from lsh_spark.operators.shingle import explode_shingles, doc_shingle_hashes
 
 
 def test_knn_matches_numpy(spark):
@@ -55,16 +53,6 @@ def test_tfidf_hand_computed(spark):
     assert got[("d1", "a")] == 0.0
     assert math.isclose(got[("d1", "b")], 1 / 3)
     assert math.isclose(got[("d2", "c")], 1 / 2)
-
-
-def test_filter_common_shingles(spark):
-    cfg = DedupConfig(shingle_k=1)
-    docs = spark.createDataFrame(
-        [("d1", "common rare1"), ("d2", "common rare2"), ("d3", "common rare3")],
-        "doc_id string, text string")
-    long = explode_shingles(doc_shingle_hashes(docs, cfg))
-    kept = tfidf.filter_common_shingles(long, max_df_frac=0.5, n_docs=3)
-    assert kept.count() == 3  # only the rare shingles survive
 
 
 def test_mrr_mae_rmse(spark):

@@ -230,11 +230,11 @@ def test_streaming_sig_hashes_materialized_once(spark):
     per row (measured 8.06x slower at P=8 on 50k sf0.1 turns)."""
     from lsh_spark.config import DedupConfig
     from lsh_spark.operators.shingle import shingle_hashes_col
-    from lsh_spark.streaming.dedup_stream import _sig_from_hashes
+    from lsh_spark.operators.minhash import signature_col
     cfg = DedupConfig(num_perms=8)
     df = (spark.createDataFrame([("a b c d e f g h i j",)], "text string")
           .select(shingle_hashes_col(F.col("text"), cfg).alias("_hashes"))
-          .select(_sig_from_hashes(cfg, F.col("_hashes")).alias("sig")))
+          .select(signature_col(F.col("_hashes"), cfg).alias("sig")))
     plan = plan_of(df, "extended")
     opt = plan.split("== Optimized Logical Plan ==")[1]
     # the projects must NOT collapse: the signature project references

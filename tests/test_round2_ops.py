@@ -42,11 +42,9 @@ def test_simhash_combo_equals_chunk(spark):
 
 def test_simhash_combo_key_bits():
     """combo keys carry 30 bits (2× the chunk keyspace squared) in 20 tables."""
-    cfg = DedupConfig()
-    from pyspark.sql import SparkSession
     # structural check only — 60 bits, t=3 → m=6 blocks, C(6,3)=20 combos
     from itertools import combinations
-    assert cfg.simhash_bits % 6 == 0
+    assert simhash.SIMHASH_BITS % (simhash.HAMMING_THRESHOLD + 3) == 0
     assert len(list(combinations(range(6), 3))) == 20
 
 
@@ -294,26 +292,38 @@ def test_fused_vectorized_matches_per_doc_reference(spark):
             assert row["sig"] is None
         if toks:
             exp_bits = 0
-            for b in range(cfg.simhash_bits):
+            for b in range(simhash.SIMHASH_BITS):
                 s = sum(1 if (h >> b) & 1 else -1 for h in th)
                 if s > 0:
                     exp_bits |= 1 << b
             assert row["simhash"] == exp_bits, f"simhash d{i}"
         else:
             assert row["simhash"] == 0
+    # fused sig ≡ minhash_signatures(fused hashes): the fast pipeline keys
+    # its bands on the fused sig, while every index builder and probe
+    # derives signatures from the stored hashes
+    rederived = minhash.minhash_signatures(
+        fused_doc_features(docs, cfg).select("doc_id", "hashes"), cfg)
+    assert ({r["doc_id"]: r["sig"] for r in rederived.collect()}
+            == {d: r["sig"] for d, r in got.items() if r["sig"] is not None})
 
 
 def test_gram_hashes_fast_stride_and_sampling(spark):
+    """Grams start at every token (stride 1): k=4 over 17 distinct tokens
+    gives 14 sorted distinct hashes; docs shorter than k give []. A
+    content-defined sample keeps a subset of the dense grams."""
     from lsh_spark.operators.shingle import gram_hashes_fast
     docs = spark.createDataFrame(
         [("a", " ".join(f"t{i}" for i in range(17))), ("b", "x y"), ("c", "")],
         "doc_id string, text string")
     rows = {r["doc_id"]: r["hashes"]
-            for r in gram_hashes_fast(docs, k=4, stride=3).collect()}
-    # doc a: window starts 0,3,6,9,12 (stride 3) → ≤5 distinct hashes
-    assert 1 <= len(rows["a"]) <= 5
+            for r in gram_hashes_fast(docs, k=4).collect()}
+    assert len(rows["a"]) == 14
     assert rows["a"] == sorted(rows["a"])
     assert rows["b"] == [] and rows["c"] == []
+    sampled = {r["doc_id"]: r["hashes"]
+               for r in gram_hashes_fast(docs, k=4, sample_mod=2).collect()}
+    assert set(sampled["a"]) == {h for h in rows["a"] if h % 2 == 0}
 
 
 # ------------------------------------------------------------- tokenizer

@@ -3,6 +3,8 @@ the atomic run manifest it is stored in."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -90,6 +92,17 @@ def test_geometry_manifest_roundtrip_and_mismatch(tmp_path):
     with pytest.raises(ValueError, match="geometry mismatch"):
         store.validate_geometry(DedupConfig(band_rows=1, num_perms=16,
                                             shingle_k=9))
+    # a manifest recorded while the config still had shingle_stride (1, the
+    # only stride ever run): the dropped field is ignored, the rest checked
+    legacy = CheckpointStore(str(tmp_path / "legacy"))
+    (tmp_path / "legacy" / "_manifest.json").write_text(json.dumps([
+        {"run_id": "r0", "stage": "_geometry", "geometry": {
+            "num_perms": 16, "band_rows": 1, "shingle_k": 5,
+            "shingle_stride": 1, "hash_mode": "portable",
+            "granularity": "conv"}}]))
+    legacy.validate_geometry(cfg)
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        legacy.validate_geometry(DedupConfig(band_rows=2, num_perms=16))
 
 
 def test_incremental_dedup_rejects_geometry_drift(spark, tmp_path):
@@ -117,20 +130,17 @@ def test_incremental_dedup_rejects_geometry_drift(spark, tmp_path):
         incremental_dedup(spark, delta, store,
                           DedupConfig(band_rows=2, num_perms=16),
                           bands_stage="band_buckets",
-                          hashes_stage="shingle_hashes",
-                          update_index=False)
+                          hashes_stage="shingle_hashes")
     # matching cfg still works end-to-end
     flags = incremental_dedup(spark, delta, store, old_cfg,
                               bands_stage="band_buckets",
-                              hashes_stage="shingle_hashes",
-                              update_index=False)
+                              hashes_stage="shingle_hashes")
     assert flags.filter(F.col("match_kind") == "index").count() >= 1
 
 
 def test_manifest_survives_crash_mid_write(tmp_path, monkeypatch):
     """A _log call that dies partway through writing the manifest must
     leave the previous manifest intact and readable."""
-    import json
     store = CheckpointStore(str(tmp_path / "ckpt"))
     cfg = DedupConfig(band_rows=1, num_perms=16)
     store.record_geometry(cfg)

@@ -38,7 +38,7 @@ def test_near_duplicate_low_hamming(spark):
     sh = {r["doc_id"]: r["simhash"]
           for r in simhash.simhash_docs(docs, CFG).collect()}
     hamming = bin(sh["a"] ^ sh["b"]).count("1")
-    assert hamming <= CFG.hamming_threshold
+    assert hamming <= simhash.HAMMING_THRESHOLD
 
 
 def test_substring_candidates_catch_shared_span(spark):
