@@ -10,11 +10,9 @@ once, ``lsh.py:307-308`` — SURVEY.md Q5).
 
 Scale design (north_rule: "band hashes grouped via salted groupBy to defuse
 hot-bucket skew"):
- * bucket sizes are computed with one partially-aggregated groupBy —
-   map-side combine bounds a pathological band hash's (boilerplate text)
-   reduce fan-in by the map-task count, which is the same bound the
-   round-5 explicit salt phase provided at the cost of a second full
-   aggregation (operators/skew.py, bucket_census docstring);
+ * bucket sizes come from one partially-aggregated groupBy, whose
+   map-side combine bounds a boilerplate band hash's reduce fan-in without
+   a salt phase (operators/skew.py, bucket_census docstring);
  * buckets larger than ``hot_bucket_cap`` are NOT expanded into O(k²) pairs;
    each member is linked to the bucket's minimum doc_id instead (a star).
    For clustering this is lossless — the star connects exactly the same
@@ -27,7 +25,7 @@ hot-bucket skew"):
 
 The census + star-link machinery is factored into operators/skew.py and
 shared with the SimHash chunk join, the substring gram join and the winnow
-overlap join — every keyed self-join in the engine gets the same defusal.
+overlap join; the index probes' hot-key rule lives beside it.
 """
 
 from __future__ import annotations
@@ -51,13 +49,9 @@ def band_hashes_col(sig: Column, cfg: DedupConfig) -> Column:
         return sig
     # r>1 (scale mode only — every oracle config pins r=1, where the band
     # hash IS the signature value): hash the r-slice DIRECTLY with the
-    # multi-column xxhash64 instead of round 5's
-    # xxhash64(array_join(slice(sig,...), ",")) — same collision
-    # structure (two docs share a band key iff their r values are equal,
-    # modulo ~2^-64 hash collisions either way), but no per-band string
-    # materialization: the band table is re-derived per census/membership
-    # consumer, so the string build+hash was paid 3× per pass
-    # (guide §1.2 step 2 — per-task work).
+    # multi-column xxhash64 — two docs share a band key iff their r values
+    # are equal (modulo ~2^-64 collisions), with no per-band string built
+    # and hashed per census/membership consumer.
     return F.array(*[
         F.xxhash64(*[F.element_at(sig, i * r + j + 1) for j in range(r)])
         for i in range(b)

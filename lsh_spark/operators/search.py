@@ -6,11 +6,12 @@ The reference probes one query against the in-memory inverted index and
 ranks by collision count then similarity; here the "index" is the
 ``band_buckets`` table (checkpointable via plans/checkpoint.py — on a
 cluster this is the resumable, incrementally-probe-able artifact) and a
-probe is one broadcast-side row:
+probe is a literal predicate pushed down to the index scan:
 
- * the probe's bands are a handful of rows → broadcast to the bucket
-   table's partitions; the big side NEVER shuffles (one scan, filter
-   pushdown on band collision);
+ * the probe's band keys (<= num_bands) filter the bucket table's scan
+   as ``band_hash IN (...)``; the big side NEVER shuffles;
+ * a key colliding with more than ``hot_bucket_cap`` index rows keeps
+   only its min doc (``skew.collapse_hot_keys``);
  * agreement = number of distinct colliding bands (Q5 semantics: duplicate
    hits within one bucket count once, reference ``lsh.py:307-308``);
  * verification = exact shingle Jaccard of probe vs candidates only
@@ -26,6 +27,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from lsh_spark.config import DedupConfig
 from lsh_spark.operators import lsh_bands, minhash
+from lsh_spark.operators.skew import collapse_hot_keys
 
 
 def search_probe(bands: DataFrame, doc_hashes: DataFrame, probe_id: str,
@@ -35,26 +37,25 @@ def search_probe(bands: DataFrame, doc_hashes: DataFrame, probe_id: str,
     ``bands``: (band_id, band_hash, doc_id) — the prebuilt index;
     ``doc_hashes``: (doc_id, hashes) — for exact Jaccard verification.
     Output: (neighbor_id, band_agreement int, jaccard double, rank int).
+
+    Hot keys (``skew.collapse_hot_keys``, as in delta ingest): once the
+    probe's own rows are dropped — a probe that is a hot key's min doc
+    would otherwise find nothing through it — a band key colliding with
+    more than ``cfg.hot_bucket_cap`` index rows keeps only its min doc, so
+    ``band_agreement`` is a lower bound there, as in ``candidate_pairs``.
     """
-    # One probe owns <= num_bands index rows — the reference's dict lookup
-    # (``lsh.py:272-317``) is O(1) per band, and the relational analog is a
-    # LITERAL pushed-down predicate, not a join: collect the probe's band
-    # keys (<= num_bands tiny rows, the same bytes the old broadcast
-    # shipped through the driver anyway) and filter the index scan with
+    # The reference's lookup is O(1) per band (``lsh.py:272-317``); the
+    # relational analog is a LITERAL pushed-down predicate, not a join: the
+    # probe's <= num_bands band keys filter the index scan with
     # band_hash IN (...) plus the exact (band_id, band_hash) disjunction
-    # (guide §6 — make pushdown reach the scan; asserted in
-    # tests/test_plans.py), so the index is never shuffled.
+    # (asserted in tests/test_plans.py), so the index is never shuffled.
     # What a probe reads from the BUCKETED stages (plans/checkpoint.py):
-    # - its own doc_hashes row, from 1 of n buckets (a doc_id filter on a
-    #   table bucketed on doc_id), twice: here for its band keys, and in
-    #   the ranking query for verification (a literal of the row would
-    #   cost one Py4J call per hash). The keys are derived as the index
-    #   derived them, in built-in expressions (no Python task per probe),
-    #   so a probe whose band rows never reached the index (a crash
-    #   between the hashes and bands appends) still finds its neighbours;
+    # - its own doc_hashes row, from 1 of n buckets, twice: here for its
+    #   band keys, derived as the index derived them in built-in
+    #   expressions (a probe whose band rows never reached the index still
+    #   finds its neighbours), and again to verify;
     # - the colliding rows: the IN list selects the buckets the probe's
-    #   band hashes fall in, all n of them or nearly so when b >= n
-    #   (16 bands into 16 buckets select about 10);
+    #   band hashes fall in, nearly all n when b >= n;
     # - verification: the broadcast join below reads all of doc_hashes.
     # So the last two reads still grow with the index, not with the probe.
     own = doc_hashes.filter(F.col("doc_id") == probe_id)
@@ -77,16 +78,18 @@ def search_probe(bands: DataFrame, doc_hashes: DataFrame, probe_id: str,
     else:
         probe_pred = F.lit(False)
     hits = (
-        bands.filter(probe_pred)
-        .filter(F.col("doc_id") != probe_id)
+        collapse_hot_keys(
+            bands.filter(probe_pred).filter(F.col("doc_id") != probe_id),
+            ["band_id", "band_hash"], cfg.hot_bucket_cap)
         .select("band_id", "doc_id").distinct()
         .groupBy("doc_id")
         .agg(F.count("*").cast("int").alias("band_agreement"))
     )
     probe_set = own.select(F.col("hashes").alias("h_p"))
     scored = (
-        # hits is candidate-sized (≪ corpus) — broadcast it so the
-        # doc_hashes side is probed in place and never shuffles
+        # hits is bounded: at most cap rows per probe band key, so at most
+        # num_bands × hot_bucket_cap rows — broadcast it so the doc_hashes
+        # side is probed in place and never shuffles
         F.broadcast(hits).join(doc_hashes, "doc_id")
         .crossJoin(F.broadcast(probe_set))
         .withColumn("inter", F.size(F.array_intersect("hashes", "h_p")))

@@ -1,43 +1,43 @@
-"""Generic hot-bucket skew defusal for self-join pair generation.
+"""Hot-key skew defusal, for self-join pair generation and index probes.
 
 Every candidate-generation pass in the engine is the same shape: a keyed
 self-join (band hash, SimHash chunk, substring gram, winnow fingerprint)
 where one pathological key — boilerplate text shared by k docs — produces
-k·(k-1)/2 join rows before any downstream filter. At 10^12 turns a single
-viral snippet makes k millions; the join output for that one key alone
-exceeds the rest of the job combined.
+k·(k-1)/2 join rows before any downstream filter; a probe of the band
+index meets the same key as k rows per probe band. At 10^12 turns a
+single viral snippet makes k millions.
 
 The defusal (north_rule: "band hashes grouped via salted groupBy to defuse
-hot-bucket skew"), factored here so MinHash bands, SimHash chunks, the
-substring gram join and the winnow overlap join all share it:
+hot-bucket skew"), shared by MinHash bands, SimHash chunks, the substring
+gram join, the winnow overlap join and both index probes:
 
  1. ``bucket_census`` — bucket sizes via one partially-aggregated
     groupBy (map-side combine bounds a mega-key's reduce fan-in by the
-    map-task count; the round-5 explicit salt phase was measured
-    redundant for a pure count and removed — see the function docstring).
- 2. ``capped_pair_rows`` — buckets ≤ cap expand into all pairs; buckets
-    > cap are star-linked (every member → the bucket's min doc_id):
-    k-1 edges instead of k²/2, connecting exactly the same component.
-    Star edges are real edges of the pass (all bucket members genuinely
-    share the key), so passes whose accept criterion IS key-sharing
-    (substring grams) stay sound; passes with a downstream verifier
-    (MinHash → Jaccard, SimHash → popcount) verify star edges like any
-    other candidate.
+    map-task count, so no salt phase is needed for a count).
+ 2. ``capped_pair_rows`` — the self-join rule: buckets ≤ cap expand into
+    all pairs; buckets > cap are star-linked (every member → the bucket's
+    min doc_id): k-1 edges instead of k²/2, connecting exactly the same
+    component. Star edges are real edges of the pass (all bucket members
+    genuinely share the key), so passes whose accept criterion IS
+    key-sharing (substring grams) stay sound; passes with a downstream
+    verifier (MinHash → Jaccard, SimHash → popcount) verify star edges
+    like any other candidate.
+ 3. ``collapse_hot_keys`` — the probe rule (``search_probe``,
+    ``incremental_dedup_flags``): of the index rows a probe collides with,
+    a key holding more than cap of them keeps only its min doc_id.
 
-Count semantics: per-key pair rows are exact for non-hot buckets; a pair
-that ALSO co-occurs in a hot bucket loses that bucket's contribution
-(only the star edges are emitted there), so aggregate counts
-(band_agreement, shared_grams, shared_fps) are exact in all-pairs mode and
-a LOWER BOUND when the cap triggers.
+Count semantics: per-key rows are exact for non-hot buckets; a pair that
+ALSO co-occurs in a hot bucket loses that bucket's contribution, so
+aggregate counts (band_agreement, shared_grams, shared_fps) are exact in
+all-pairs mode and a LOWER BOUND when the cap triggers.
 
 Reference analog: none — the reference never hits this because its corpus
-caps at 50k songs in one process (``scripts/plot_all_exec.py:21-31``); this
-is the piece that makes the same algorithm viable at 10^12 turns.
+caps at 50k songs in one process (``scripts/plot_all_exec.py:21-31``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from lsh_spark.config import DedupConfig
 from lsh_spark.plans.checkpoint import materialize
@@ -46,17 +46,11 @@ from lsh_spark.plans.checkpoint import materialize
 def bucket_census(keyed: DataFrame, key_cols: list[str]) -> DataFrame:
     """(key..., bucket_size) via one partially-aggregated groupBy.
 
-    Skew note (round 6): this was a two-phase SALTED aggregation through
-    round 5; for a pure count that salt is redundant — Spark's hash
-    aggregate always partial-aggregates map-side, so each map task emits
-    at most ONE row per key and a mega-hot key's reduce fan-in is already
-    bounded by the map-task count, which is exactly the bound the salt
-    provided. The explicit (key, salt) phase only added a second full
-    aggregation pass + exchange over a table with ~one row per (doc, key)
-    (measured: the census job was 3.2 s vs the SimHash kernel's 2.2 s at
-    sf0.1 — guide §2.3 "aggregate before you shuffle" is automatic here).
-    Salting remains necessary only for aggregations whose per-key state
-    grows with the group (collect_list et al.), which the census is not.
+    No salt: Spark's hash aggregate partial-aggregates map-side, so each
+    map task emits at most one row per key and a hot key's reduce fan-in
+    is bounded by the map-task count — the bound a salt phase would give,
+    without its second aggregation and exchange. Salting is needed only
+    where per-key state grows with the group (collect_list et al.).
     """
     return (
         keyed.select(*key_cols)
@@ -94,12 +88,9 @@ def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cfg: DedupConfig,
     # unknown before execution
     sized = materialize(bucket_census(keyed, key_cols)
                         .filter(F.col("bucket_size") >= 2))
-    # ONE membership scan instead of three (round-6 mid-round shape:
-    # small semi-join + hot semi-join for the star-min build + hot
-    # semi-join again for the star edges, each re-probing a broadcast
-    # against every keyed row); the checkpoint bounds re-execution — the
-    # three consumers below (small groupBy, star-min build, star join)
-    # rescan the small tagged subset instead of the keyed table
+    # ONE membership scan: the three consumers below (small groupBy,
+    # star-min build, star join) rescan the small tagged subset instead
+    # of the keyed table
     tagged = materialize(keyed.join(sized, key_cols)
                          .select(*key_cols, id_col, "bucket_size"))
     small = tagged.filter(F.col("bucket_size") <= cap) \
@@ -135,6 +126,21 @@ def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cfg: DedupConfig,
         .select(*key_cols, "doc_a", F.col(id_col).alias("doc_b"))
     )
     return pairs.unionByName(star)
+
+
+def collapse_hot_keys(rows: DataFrame, key_cols: list[str],
+                      cap: int) -> DataFrame:
+    """``rows`` with each key that holds more than ``cap`` of them cut to
+    its min-``doc_id`` rows. ``rows`` are the index rows one probe
+    collides with, so this census is sized by the probe, not the index.
+    The window holds one key's rows in one task; on a bucketed index they
+    already share a bucket, so it plans a Sort and no Exchange."""
+    w = Window.partitionBy(*key_cols)
+    return (rows
+            .withColumn("_n", F.count("*").over(w))
+            .withColumn("_min", F.min("doc_id").over(w))
+            .filter((F.col("_n") <= cap) | (F.col("doc_id") == F.col("_min")))
+            .drop("_n", "_min"))
 
 
 def all_pair_rows(keyed: DataFrame, key_cols: list[str],

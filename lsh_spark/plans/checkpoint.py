@@ -61,11 +61,17 @@ def materialize(df: DataFrame) -> DataFrame:
     scan of a checkpointed RDD: a checkpoint, or a re-select of all its
     columns) is returned unchanged, so no frame is materialized twice —
     that would cost one more Spark job for the same rows."""
+    return df if _held_parts(df) is not None else df.localCheckpoint()
+
+
+def _held_parts(df: DataFrame) -> int | None:
+    """Partition count of a materialized frame, else None; read from the
+    optimized plan, so no Spark job runs."""
     plan = df._jdf.queryExecution().optimizedPlan()
     if (plan.getClass().getSimpleName() == "LogicalRDD"
             and plan.rdd().isCheckpointed()):
-        return df
-    return df.localCheckpoint()
+        return plan.rdd().getNumPartitions()
+    return None
 
 
 class CheckpointStore:
@@ -120,8 +126,8 @@ class CheckpointStore:
         written, here and on every ``append`` to the stage, so each commit
         writes at most one file per bucket. The commit therefore runs with
         ``n_buckets`` write tasks, the same parallelism the stage's
-        co-located reads already have, and a row's ``_part_id`` is its
-        bucket id."""
+        co-located reads already have (a one-partition materialized input
+        is written as it is), and a row's ``_part_id`` is its bucket id."""
         return self._commit(df, stage, {"bucket_cols": list(bucket_cols),
                                         "n_buckets": n_buckets})
 
@@ -162,13 +168,18 @@ class CheckpointStore:
             layout = self._layout(stage)
         layout = layout or {}
         iceberg = self._iceberg(spark)
+        part_id = F.spark_partition_id()
         if layout and not iceberg:
             # the same pmod(murmur3(cols), n) as the bucketBy writer: each
-            # task holds one bucket, so a commit writes one file per bucket
-            df = df.repartition(layout["n_buckets"], *layout["bucket_cols"])
+            # task holds one bucket, so a commit writes one file per bucket;
+            # one held partition (a delta) already does, without the shuffle
+            cols, n = layout["bucket_cols"], layout["n_buckets"]
+            if _held_parts(df) not in (0, 1):
+                df = df.repartition(n, *cols)
+            part_id = F.pmod(F.hash(*cols), F.lit(n))
         stamped = (df.withColumn("_run_id", F.lit(self.run_id))
                      .withColumn("_stage", F.lit(stage))
-                     .withColumn("_part_id", F.spark_partition_id()))
+                     .withColumn("_part_id", part_id))
         if iceberg:
             if append:
                 stamped.writeTo(self._table(stage)).append()

@@ -26,6 +26,7 @@ from lsh_spark.config import DedupConfig
 from lsh_spark.operators import lsh_bands, minhash, pairs, simhash, suffix
 from lsh_spark.operators.connected_components import connected_components
 from lsh_spark.operators.shingle import doc_shingle_hashes_arrow
+from lsh_spark.operators.skew import collapse_hot_keys
 from lsh_spark.plans.checkpoint import CheckpointStore, materialize
 
 
@@ -190,17 +191,16 @@ def incremental_dedup_flags(new_docs: DataFrame, index_bands: DataFrame,
     big side never reshuffles), plus a within-batch pass so dups arriving
     in the same delta are caught too.
 
-    Skew: an index bucket holding k ≫ cap members (boilerplate) would emit
-    k rows per colliding new doc; buckets above ``cfg.hot_bucket_cap`` are
-    collapsed to their min-doc representative (census via the shared
-    skew module) — the flag still fires against a genuine key-sharer and
-    the verifier still checks it exactly.
+    Skew: only the index rows the delta's band keys touch are censused (a
+    semi-join), never the whole index. Of those, a key above the cap keeps
+    only its min doc (``skew.collapse_hot_keys``, as in ``search_probe``),
+    so a delta band key joins at most ``cfg.hot_bucket_cap`` index rows.
+    The rule's window holds one key's rows in one task; on a bucketed
+    index they already share one bucket, so the index is not shuffled.
 
     Output: (doc_a = new doc, doc_b = matched doc, band_agreement,
     jaccard, match_kind 'index'|'batch'), Jaccard-verified ≥ threshold.
     """
-    from lsh_spark.operators.skew import bucket_census
-
     if new_hashes is None:
         # two consumers below (signatures + the verify hash union): without
         # the checkpoint the Arrow tokenize+hash kernel runs once per
@@ -211,27 +211,16 @@ def incremental_dedup_flags(new_docs: DataFrame, index_bands: DataFrame,
         new_bands = lsh_bands.band_buckets(
             minhash.minhash_signatures(new_hashes, cfg), cfg)
 
-    # hot-key set materialized once (tiny by design): it is broadcast into
-    # BOTH the reps semi-join and the cold anti-join — without the
-    # checkpoint each broadcast build re-runs the full index census.
-    # Bound: every hot key holds > hot_bucket_cap index rows, so there are
-    # fewer than rows / hot_bucket_cap of them
-    hot_keys = materialize(
-        bucket_census(index_bands, ["band_id", "band_hash"])
-        .filter(F.col("bucket_size") > cfg.hot_bucket_cap)
-        .select("band_id", "band_hash"))
-    reps = (index_bands
-            .join(F.broadcast(hot_keys), ["band_id", "band_hash"],
-                  "left_semi")
-            .groupBy("band_id", "band_hash")
-            .agg(F.min("doc_id").alias("doc_id")))
-    cold = (index_bands
-            .join(F.broadcast(hot_keys), ["band_id", "band_hash"],
-                  "left_anti"))
-    probe_side = cold.unionByName(reps).withColumnRenamed("doc_id", "doc_b")
+    keys = ["band_id", "band_hash"]
+    # semi-join on the bucket column alone, so a bucketed index is not
+    # shuffled; the probe join drops rows of another band with that hash
+    touched = index_bands.join(new_bands.select("band_hash"), "band_hash",
+                               "left_semi")
+    probe_side = (collapse_hot_keys(touched, keys, cfg.hot_bucket_cap)
+                  .withColumnRenamed("doc_id", "doc_b"))
 
     vs_index = (
-        new_bands.join(probe_side, ["band_id", "band_hash"])
+        new_bands.join(probe_side, keys)
         .filter(F.col("doc_id") != F.col("doc_b"))
         .select(F.col("doc_id").alias("doc_a"), "doc_b", "band_id").distinct()
         .groupBy("doc_a", "doc_b")
@@ -242,9 +231,8 @@ def incremental_dedup_flags(new_docs: DataFrame, index_bands: DataFrame,
     cand = vs_index.unionByName(vs_batch)
 
     all_hashes = index_hashes.unionByName(new_hashes)
-    # match_kind rides through the verifier (extra_cols) — round 5
-    # re-joined the candidate frame afterwards just to recover it, which
-    # re-ran candidate generation a second time
+    # match_kind rides through the verifier (extra_cols): re-joining the
+    # candidates afterwards to recover it would re-run their generation
     verified = pairs.verify_pairs(
         cand.select("doc_a", "doc_b", "band_agreement", "match_kind"),
         all_hashes, cfg, extra_cols=("match_kind",))
@@ -282,9 +270,7 @@ def incremental_dedup(spark: SparkSession, new_docs: DataFrame,
     index_bands = store.read(spark, bands_stage)
     index_hashes = store.read(spark, hashes_stage)
     # the delta's hashes/bands are needed TWICE (probe flags + index
-    # fold-in): compute them once, materialized — round 5 re-ran the
-    # Arrow tokenize+hash kernel and the signature kernel per use (the
-    # within-batch candidate_pairs then finds the bands already built)
+    # fold-in): compute them once, materialized
     new_hashes = materialize(doc_shingle_hashes_arrow(new_docs, cfg))
     new_bands = materialize(lsh_bands.band_buckets(
         minhash.minhash_signatures(new_hashes, cfg), cfg))

@@ -10,6 +10,11 @@ from lsh_spark import synth  # noqa: E402
 from lsh_spark.session import get_spark  # noqa: E402
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: multi-JVM or CLI end-to-end test (minutes)")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("lsh_spark_tests", cores=8, shuffle_partitions=8)

@@ -10,7 +10,7 @@ import pathlib
 
 import pytest
 
-from lsh_spark.plans.checkpoint import CheckpointStore
+from lsh_spark.plans.checkpoint import CheckpointStore, materialize
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "lsh_spark"
 STORE = PKG / "plans" / "checkpoint.py"
@@ -135,9 +135,24 @@ def test_bucketed_commit_writes_one_file_per_bucket(spark, tmp_path):
         files = _parquet_files(store, "stage_c")
         assert before <= files and len(files - before) <= 4
         before = files
+    # a one-partition materialized input (a delta) is written as it is:
+    # no clustering shuffle, so the commit runs one stage
+    delta = materialize(frame(480, 520, 1))
+    sc = spark.sparkContext
+    sc.setJobGroup("one_partition_append", "one-partition append")
+    try:
+        store.append(delta, "stage_c")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = {s for j in tracker.getJobIdsForGroup("one_partition_append")
+              for s in tracker.getJobInfo(j).stageIds}
+    assert len(stages) == 1, stages
+    files = _parquet_files(store, "stage_c")
+    assert before <= files and len(files - before) <= 4
     got = sorted((r["doc_id"], r["x"])
                  for r in store.read(spark, "stage_c").collect())
-    assert got == sorted((f"d{i}", i) for i in range(480))
+    assert got == sorted((f"d{i}", i) for i in range(520))
     # a bucketed stage's _part_id is the row's bucket id
     lineage = store._scan(spark, "stage_c")
     assert lineage.filter("_part_id != pmod(hash(doc_id), 4)").count() == 0

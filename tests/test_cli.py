@@ -175,13 +175,14 @@ def test_incremental_dedup_bucketed_index(spark, tmp_path):
                          bstore.read_bucketed(spark, "shingle_hashes"))
         np_ = n_exchanges(plain.read(spark, "band_buckets"),
                           plain.read(spark, "shingle_hashes"))
-        # round 6: the index census is checkpointed EAGERLY inside
-        # incremental_dedup_flags, so the census — where the bucketed
-        # layout saves its exchange — no longer appears in the final
-        # probe plan; the remaining plans are equal-or-fewer…
+        # the probe censuses only the index rows the delta's band keys
+        # touch: a semi-join on band_hash and a window, both satisfied by
+        # the bucketed layout's band_hash clustering; the plain path
+        # shuffles the index there, so the bucketed plan has
+        # equal-or-fewer…
         assert nb <= np_, (nb, np_)
 
-        # …and the census itself must aggregate the bucketed band table
+        # …and the self-join census must aggregate the bucketed band table
         # WITHOUT a shuffle (HashPartitioning(band_hash) satisfies the
         # (band_id, band_hash) clustering), while the plain path pays one
         from lsh_spark.operators.skew import bucket_census

@@ -317,6 +317,12 @@ def test_incremental_dedup_hot_index_bucket_star(spark):
     # every bucket is hot (10 > 3): exactly ONE flag, vs the min doc
     assert [(r["doc_a"], r["doc_b"]) for r in got] == [("new1", "old0")]
     assert got[0]["jaccard"] == 1.0
+    # search applies the same rule once the probe's own row is dropped:
+    # each hot key keeps its min doc, or the next one for the min doc
+    from lsh_spark.operators.search import search_probe
+    for probe, want in (("old5", ["old0"]), ("old0", ["old1"])):
+        hits = search_probe(bands, hashes, probe, cfg).collect()
+        assert [r["neighbor_id"] for r in hits] == want
 
 
 def test_incremental_dedup_store_roundtrip(spark, tmp_path):
