@@ -7,20 +7,22 @@ is the dedup-engine generalization mandated by BASELINE.json north_star
 propagation) join loop").
 
 Scale notes (SURVEY.md §7.4 item 2):
- * each iteration is join(edges, labels) + groupBy min — two shuffles;
+ * each iteration is one join (neighbour labels) + one groupBy min over
+   them and each doc's own label row — two shuffles;
  * lineage is truncated every iteration with ``materialize``
    (plans/checkpoint.py), otherwise the logical plan doubles per
    iteration and Catalyst re-optimization time explodes (the one place
    lazy plans actively hurt);
- * convergence is detected by counting changed labels (an aggregate, no
-   collect of the label table);
+ * the edge and changed-label counts are ``Observation``s on frames the
+   loop materializes anyway (an observed plan is never already held, so
+   ``materialize`` always runs the job ``.get`` waits for): no count job;
  * iteration count is bounded by graph diameter; duplicate clusters are
    near-cliques so it converges in 2-4 rounds in practice.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from lsh_spark.plans.checkpoint import materialize
 
@@ -58,17 +60,16 @@ def connected_components(pairs: DataFrame, max_iter: int = 100,
     turns an iteration is a multi-TB shuffle; re-running converged
     iterations is the single most expensive kind of lost work.
     """
+    edge_count = Observation()
     edges = materialize(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(pairs.select(F.col("doc_b").alias("src"),
                                   F.col("doc_a").alias("dst")))
         .distinct()
+        .observe(edge_count, F.count("*").alias("n"))
     )
-    if edges.count() <= SMALL_GRAPH_EDGES:
-        # no second checkpoint: coalesce over the already-materialized
-        # edge set is a narrow re-read, so each iteration pays a cheap
-        # partition merge instead of the loop paying one extra full
-        # materialization job up front
+    if edge_count.get["n"] <= SMALL_GRAPH_EDGES:
+        # a narrow re-read of the held edges, not a second checkpoint job
         edges = edges.coalesce(SMALL_GRAPH_PARTITIONS)
     labels = materialize(
         edges.select(F.col("src").alias("doc_id"))
@@ -83,30 +84,32 @@ def connected_components(pairs: DataFrame, max_iter: int = 100,
                 labels = store.read(spark, f"{STAGE_PREFIX}_iter{i}")
                 start_iter = i
                 break
+    no_label = F.lit(None).cast(labels.schema["cluster_id"].dataType)
     # a resume re-checks the committed labels with one more iteration, even
     # when the committed run already used up max_iter
     for _it in range(start_iter, max(max_iter, start_iter + 1)):
-        neighbor_min = (
+        # every doc is a src (edges are symmetric), so its own row makes
+        # min(cluster_id) = least(own label, neighbour labels), and _own
+        # (null on neighbour rows) keeps the old label for the change count
+        rows = (
             edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nbr_min"))
+            .select("src", "cluster_id", no_label.alias("_own"))
+            .unionByName(labels.select(F.col("doc_id").alias("src"),
+                                       "cluster_id",
+                                       F.col("cluster_id").alias("_own")))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
-            .select(
-                "doc_id",
-                F.least(F.col("cluster_id"),
-                        F.coalesce(F.col("nbr_min"), F.col("cluster_id")))
-                 .alias("cluster_id"),
-                (F.col("nbr_min") < F.col("cluster_id")).alias("changed"),
-            )
+        changed = Observation()
+        labels = materialize(
+            rows.groupBy(F.col("src").alias("doc_id"))
+            .agg(F.min("cluster_id").alias("cluster_id"),
+                 F.max("_own").alias("_own"))
+            .observe(changed, F.count_if(F.col("cluster_id") < F.col("_own"))
+                     .alias("n"))
+            .select("doc_id", "cluster_id")
         )
-        new_labels = materialize(new_labels)
-        changed = new_labels.filter(F.col("changed")).limit(1).count()
-        labels = new_labels.drop("changed")
         if store is not None:
             labels = store.write(labels, f"{STAGE_PREFIX}_iter{_it + 1}")
-        if changed == 0:
+        if changed.get["n"] == 0:
             return labels
     raise RuntimeError(
         f"connected_components did not reach a fixed point within "

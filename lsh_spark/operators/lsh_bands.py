@@ -91,8 +91,8 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig,
     if all_pairs:
         pair_rows = all_pair_rows(bands, key)
     else:
-        # materialize the band table once: the capped path consumes it for
-        # the census AND the membership splits, and each re-derivation
+        # materialize the band table once: the capped path reads it twice
+        # (census + membership join), and each re-derivation
         # decodes the full signature arrays + re-hashes every band slice
         # (measured at turn granularity: ~4 s per derivation at 7.3M band
         # rows — the narrow (band_id, band_hash, doc_id) rows are far

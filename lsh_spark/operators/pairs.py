@@ -45,15 +45,11 @@ def verify_pairs(pairs: DataFrame, doc_hashes: DataFrame,
     # their (large) shingle arrays shuffled — after LSH pruning that is a
     # small fraction of the corpus, so this cuts the verify shuffle volume
     # by roughly the inverse of the candidate rate
-    # materialized so the semi join below sees REAL stats: the distinct's
-    # output size is unknown pre-execution, and Catalyst planned the
-    # prefilter as a sort-merge join — shuffling every doc's full shingle
-    # array, exactly the bytes the prefilter exists to keep out of the
-    # exchange (measured at turn shape: a 458k-array SMJ against 140k
-    # candidate ids). With accurate sizes the planner broadcasts the id
-    # list when it actually fits and falls back on its own when it does
-    # not — no forced hint, so the 100 TB case keeps the robust plan.
-    cand_docs = materialize(
+    # cand_docs has one reader, the semi join, so it stays lazy; AQE
+    # re-plans that join from the distinct's shuffle-stage size and
+    # broadcasts the id list when it fits — no forced hint, so the 100 TB
+    # case keeps the robust plan
+    cand_docs = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct())

@@ -83,8 +83,9 @@ def simhash_docs(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def simhash_docs_arrow(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Same contract via a NumPy kernel with the two per-doc hot costs
-    hoisted to batch level:
+    """Same contract via a NumPy kernel (``cfg`` is unread: the kernel has
+    no tunable, and the parameter stays because ``bench.py`` passes it),
+    with the two per-doc hot costs hoisted to batch level:
 
      * tokens are interned ONCE per batch (dict intern), so the md5
        token hash runs once per batch-global UNIQUE token instead of
@@ -206,11 +207,11 @@ def simhash_candidate_pairs(sh: DataFrame, cfg: DedupConfig,
     bounded by the star topology; the MinHash pass covers those pairs).
     """
     from lsh_spark.operators.skew import all_pair_rows, capped_pair_rows
-    # materialize the (doc_id, simhash) frame once: the plan below consumes
-    # it up to 8 times (census, small/hot membership, star min, both verify
-    # legs) and when ``sh`` is the Arrow kernel the whole tokenize+hash
-    # pass re-executes per consumer (measured: 8 MapInArrow nodes in the
-    # bench simhash_pass plan). Two narrow columns per doc — tiny.
+    # materialize the (doc_id, simhash) frame once: the plan below reads it
+    # three times (the key table and both verify legs; four with the lazy
+    # key table of ``all_pairs``), and when ``sh`` is the Arrow kernel the
+    # whole tokenize+hash pass re-executes per read. Two narrow columns per
+    # doc — tiny.
     sh = materialize(sh)
     keys = _chunk_keys() if mode == "chunk" else _combo_keys()
     # stage the key array in its own Project before exploding — same
@@ -224,8 +225,8 @@ def simhash_candidate_pairs(sh: DataFrame, cfg: DedupConfig,
     key_cols = ["chunk_id", "chunk_val"]
     if not all_pairs:
         # materialize the exploded key table once, mirroring the MinHash
-        # band path (lsh_bands.candidate_pairs): the capped path scans it
-        # for the census AND both membership splits, and each re-derivation
+        # band path (lsh_bands.candidate_pairs): the capped path reads it
+        # twice (census + membership join), and each re-derivation
         # re-runs the 20-key combo build + the 20× posexplode fan-out
         # (measured at turn granularity: three 9.2M-row Generate nodes in
         # one pair query, ~1-1.5 s each — the narrow (chunk_id, chunk_val,

@@ -75,19 +75,16 @@ def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cfg: DedupConfig,
     duplication), and the materialized multi-member subset (~5-12% of
     keyed rows) feeds the small/hot splits as plain filters — the full
     keyed table is scanned ONCE for membership, and singletons never reach
-    the collect_list exchange. The census is checkpointed first, so the
-    planner sizes that join from its real row count: it broadcasts the
-    census when it fits ``spark.sql.autoBroadcastJoinThreshold`` and plans
-    a shuffle join when it does not (no hint forces a broadcast of an
-    unbounded build side). AQE skew-join splitting stays on as the
-    backstop (session.py).
+    the collect_list exchange. The census has one reader, that join, so it
+    is not materialized: it is built inside the membership checkpoint. No
+    hint forces a broadcast of the unbounded census; AQE re-plans the join
+    from the census's shuffle-stage size, broadcasting it when it fits
+    ``spark.sql.autoBroadcastJoinThreshold``, and its skew-join splitting
+    stays on as the backstop (session.py).
     """
     cap = cap if cap is not None else cfg.hot_bucket_cap
-    # census materialized so the membership join sees REAL stats (the
-    # cand_docs pattern, operators/pairs.py): an aggregate's output size is
-    # unknown before execution
-    sized = materialize(bucket_census(keyed, key_cols)
-                        .filter(F.col("bucket_size") >= 2))
+    sized = (bucket_census(keyed, key_cols)
+             .filter(F.col("bucket_size") >= 2))
     # ONE membership scan: the three consumers below (small groupBy,
     # star-min build, star join) rescan the small tagged subset instead
     # of the keyed table

@@ -88,9 +88,9 @@ def gram_keys(docs: DataFrame, cfg: DedupConfig,
         return _gram_hashes(docs, cfg.substring_k, cfg.hash_mode)
     from lsh_spark.operators.shingle import gram_hashes_fast
     # checkpoint the ARRAY form (compact) before exploding: the capped
-    # pair path consumes the keyed frame three times (census + small +
-    # hot membership) and would otherwise re-run the Arrow
-    # tokenize+hash kernel per consumer; the explode stays narrow.
+    # pair path reads the keyed frame twice (census + membership join) and
+    # would otherwise re-run the Arrow tokenize+hash kernel per read; the
+    # explode stays narrow.
     return (materialize(gram_hashes_fast(docs, cfg.substring_k,
                                          sample_mod=sample_mod))
             .select("doc_id", F.explode("hashes").alias("gram_hash")))

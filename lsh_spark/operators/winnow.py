@@ -52,10 +52,11 @@ def winnow_overlap_pairs(docs: DataFrame, cfg: DedupConfig,
     filter can additionally drop such pairs — the capped form trades that
     recall for join survival at web scale; None → exact (oracle mode)."""
     from lsh_spark.operators.suffix import shared_key_pairs
-    # materialize the fingerprint table once: the pair generator consumes
-    # it 2× (uncapped self-join) to 3× (capped census + membership), and
-    # winnowing itself is a window-function pipeline over every gram —
-    # re-running it per consumer dominated this operator's plan
+    # materialize the fingerprint table once: the pair generator reads it
+    # twice (both sides of the uncapped self-join, or the capped census +
+    # membership join), and winnowing itself is a window-function pipeline
+    # over every gram — re-running it per read dominated this operator's
+    # plan
     fp = materialize(winnow_fingerprints(docs, cfg, window))
     return (shared_key_pairs(fp.withColumnRenamed("fp_hash", "__key"),
                              "__key", cfg, hot_fp_cap, count_col="shared_fps")

@@ -2,12 +2,14 @@
 checkpoint tables (resumable pipeline state with lineage + metrics).
 
 This module owns every point where the engine cuts lineage. In-session
-barriers (a frame several consumers read, a plan that must stop growing,
-a join side whose real size the planner should see) go through
-``materialize``, the one ``localCheckpoint`` call in the package; it
-skips a frame that is already materialized, so a producer and a consumer
-can both ask for the same frame and it is built once. Durable stages go
-through ``CheckpointStore``.
+barriers (a frame several consumers read, a plan that must stop growing)
+go through ``materialize``, the one ``localCheckpoint`` call in the
+package; it skips a frame that is already materialized, so a producer and
+a consumer can both ask for the same frame and it is built once. It gives
+the planner no statistics — a materialized frame keeps its old size
+estimate, and AQE re-plans only from shuffle-stage sizes — so a frame
+with one reader is not materialized. Durable stages go through
+``CheckpointStore``.
 
 north_rule: "checkpoint band-bucket and component state to Iceberg for
 resumable runs with per-partition lineage and metrics". When the session

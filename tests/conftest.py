@@ -23,6 +23,22 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def with_jobs(spark):
+    """``with_jobs(group, fn)`` → (fn(), ids of the Spark jobs fn started),
+    counted through a job group named ``group``."""
+    sc = spark.sparkContext
+
+    def run(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    return run
+
+
+@pytest.fixture(scope="session")
 def t1_transcripts(spark):
     return spark.read.parquet(synth.generate_tier("t1"))
 

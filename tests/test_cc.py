@@ -30,6 +30,12 @@ def test_chain_graph_converges(spark):
     assert len(got) == n + 1
 
 
+def test_no_edges(spark):
+    """An empty edge set labels nothing: the edge-count observation is
+    filled by the empty materialization, so the loop never blocks on it."""
+    assert _cc(spark, []) == {}
+
+
 def test_cycle_and_duplicate_edges(spark):
     got = _cc(spark, [("a", "b"), ("b", "c"), ("a", "c"), ("c", "a")])
     assert got == {"a": "a", "b": "a", "c": "a"}

@@ -110,7 +110,8 @@ def _parquet_files(store, stage) -> set[str]:
     return {str(p.relative_to(root)) for p in root.rglob("*.parquet")}
 
 
-def test_bucketed_commit_writes_one_file_per_bucket(spark, tmp_path):
+def test_bucketed_commit_writes_one_file_per_bucket(spark, tmp_path,
+                                                   with_jobs):
     """Each bucketed write or append clusters its rows by bucket first, so
     it adds at most n_buckets files however many partitions its input
     has, and the co-located join property holds across the appends."""
@@ -138,15 +139,10 @@ def test_bucketed_commit_writes_one_file_per_bucket(spark, tmp_path):
     # a one-partition materialized input (a delta) is written as it is:
     # no clustering shuffle, so the commit runs one stage
     delta = materialize(frame(480, 520, 1))
-    sc = spark.sparkContext
-    sc.setJobGroup("one_partition_append", "one-partition append")
-    try:
-        store.append(delta, "stage_c")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    stages = {s for j in tracker.getJobIdsForGroup("one_partition_append")
-              for s in tracker.getJobInfo(j).stageIds}
+    _, jobs = with_jobs("one_partition_append",
+                        lambda: store.append(delta, "stage_c"))
+    tracker = spark.sparkContext.statusTracker()
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
     assert len(stages) == 1, stages
     files = _parquet_files(store, "stage_c")
     assert before <= files and len(files - before) <= 4

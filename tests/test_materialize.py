@@ -19,39 +19,83 @@ def test_local_checkpoint_only_in_the_seam():
     assert calls == []
 
 
-def _with_jobs(spark, group: str, fn):
-    """(fn(), number of Spark jobs fn started)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_materialize_builds_a_frame_once(spark):
+def test_materialize_builds_a_frame_once(spark, with_jobs):
     from lsh_spark.plans.checkpoint import materialize
     lazy = spark.range(50).selectExpr("id", "id % 7 AS k")
-    held, jobs = _with_jobs(spark, "materialize-lazy", lambda: materialize(lazy))
-    assert jobs >= 1
+    held, jobs = with_jobs("materialize-lazy", lambda: materialize(lazy))
+    assert len(jobs) >= 1
     assert sorted(held.collect()) == sorted(lazy.collect())
 
     # a materialized frame, or a re-select of all its columns, is returned
     # as is: no second checkpoint job
-    again, jobs = _with_jobs(spark, "materialize-again",
-                             lambda: materialize(held))
-    assert again is held and jobs == 0
+    again, jobs = with_jobs("materialize-again", lambda: materialize(held))
+    assert again is held and jobs == []
     reselect = held.select("id", "k")
-    same, jobs = _with_jobs(spark, "materialize-reselect",
-                            lambda: materialize(reselect))
-    assert same is reselect and jobs == 0
+    same, jobs = with_jobs("materialize-reselect",
+                           lambda: materialize(reselect))
+    assert same is reselect and jobs == []
 
     # a frame over a plain (never checkpointed) RDD is still materialized
     rdd_frame = spark.createDataFrame(
         spark.sparkContext.parallelize([(1, "a"), (2, "b")]),
         "n int, s string")
-    held_rdd, jobs = _with_jobs(spark, "materialize-rdd",
-                                lambda: materialize(rdd_frame))
-    assert held_rdd is not rdd_frame and jobs >= 1
+    held_rdd, jobs = with_jobs("materialize-rdd",
+                               lambda: materialize(rdd_frame))
+    assert held_rdd is not rdd_frame and len(jobs) >= 1
     assert sorted(held_rdd.collect()) == [(1, "a"), (2, "b")]
+
+
+# Job budgets: an operator materializes only frames with more than one
+# reader (or a loop's label state), so each budget sits just above the
+# jobs those barriers cost on the test session (local[8], 8 partitions).
+# A stats-only checkpoint or a count job added back breaks the budget.
+
+def test_connected_components_job_budget(spark, with_jobs):
+    """Each CC iteration is one join + one aggregate under one
+    materialize, with the edge and changed-label counts observed on it."""
+    from lsh_spark.operators.connected_components import connected_components
+    edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("x", "y")],
+                                  "doc_a string, doc_b string")
+    rows, jobs = with_jobs("budget-cc",
+                           lambda: connected_components(edges).collect())
+    assert sorted(rows) == [("a", "a"), ("b", "a"), ("c", "a"),
+                            ("x", "x"), ("y", "x")]
+    assert len(jobs) <= 24, len(jobs)
+
+
+def test_capped_pair_rows_job_budget(spark, with_jobs):
+    """The census is built inside the membership checkpoint (``tagged``),
+    not checkpointed on its own."""
+    from lsh_spark.config import DedupConfig
+    from lsh_spark.operators.skew import capped_pair_rows
+    from lsh_spark.plans.checkpoint import materialize
+    keyed = spark.createDataFrame(
+        [("hot", f"d{i}") for i in range(6)] + [("small", "d0"),
+                                                ("small", "d9")],
+        "key string, doc_id string")
+    out, jobs = with_jobs("budget-capped", lambda: materialize(
+        capped_pair_rows(keyed, ["key"], DedupConfig(hot_bucket_cap=3))))
+    assert sorted((r["doc_a"], r["doc_b"]) for r in out.collect()) == \
+        [("d0", f"d{i}") for i in range(1, 6)] + [("d0", "d9")]
+    assert len(jobs) <= 10, len(jobs)
+
+
+def test_verify_pairs_job_budget(spark, with_jobs):
+    """Only the candidate list is checkpointed; the candidate-doc ids feed
+    the semi join lazily."""
+    from lsh_spark.config import DedupConfig
+    from lsh_spark.operators.pairs import verify_pairs
+    from lsh_spark.plans.checkpoint import materialize
+    cand = spark.createDataFrame(
+        [("a", "b", 2), ("a", "c", 1), ("b", "c", 1)],
+        "doc_a string, doc_b string, band_agreement long")
+    hashes = spark.createDataFrame(
+        [("a", [1, 2, 3]), ("b", [1, 2, 3]), ("c", [1, 2, 9]), ("z", [7])],
+        "doc_id string, hashes array<bigint>")
+    out, jobs = with_jobs("budget-verify", lambda: materialize(
+        verify_pairs(cand, hashes, DedupConfig())))
+    assert sorted((r["doc_a"], r["doc_b"], r["jaccard"])
+                  for r in out.collect()) == [("a", "b", 1.0),
+                                              ("a", "c", 0.5),
+                                              ("b", "c", 0.5)]
+    assert len(jobs) <= 9, len(jobs)
