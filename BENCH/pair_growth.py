@@ -65,7 +65,7 @@ def count_passes(tier: str, band_rows: int) -> dict:
             fused.select("doc_id", "simhash"), cfg).count()
         g = fused.select("doc_id", F.explode("grams").alias("gram_hash"))
         out["substr_pairs"] = suffix.shared_key_pairs(
-            g, "gram_hash", cfg, cfg.hot_bucket_cap,
+            g, "gram_hash", cfg.hot_bucket_cap,
             count_col="shared_grams").count()
         return out
     finally:

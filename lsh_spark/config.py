@@ -33,9 +33,12 @@ class DedupConfig:
     is a single minhash value, so any two documents sharing one popular
     shingle collide somewhere and the candidate set grows ~N^1.75
     (measured: 4x docs -> 11.4x candidates, BENCH/pair_growth.py) —
-    fatal at 10^12 turns regardless of cluster size.  r=2 keeps candidate
-    growth linear with identical fixture recall (0.9924 both geometries,
-    tests/test_fast_mode.py).  The reference's own geometry — r=1, one
+    fatal at 10^12 turns regardless of cluster size.  r=2 keeps that
+    fixture recall (0.9924 both geometries, tests/test_fast_mode.py) but
+    makes growth linear only once ``hot_bucket_cap`` fires: below the cap
+    a boilerplate bucket still expands into k(k-1)/2 candidates (measured
+    on the perfbench conv input, 4x docs: exponent 1.72, the largest
+    bucket growing 14 -> 86 docs).  The reference's own geometry — r=1, one
     bucket row per (permutation, selection-fn), reference
     ``lsh.py:252-266`` — is pinned EXPLICITLY where reference parity is
     the point: operators/parity.py and the DuckDB-oracle configs in

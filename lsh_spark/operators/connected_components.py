@@ -8,7 +8,9 @@ propagation) join loop").
 
 Scale notes (SURVEY.md §7.4 item 2):
  * each iteration is one join (neighbour labels) + one groupBy min over
-   them and each doc's own label row — two shuffles;
+   them and each doc's own label row — two shuffles; the first reads both
+   straight from the edges (every label starts as the doc's own id), so
+   it is one groupBy and no label table is built before the loop;
  * lineage is truncated every iteration with ``materialize``
    (plans/checkpoint.py), otherwise the logical plan doubles per
    iteration and Catalyst re-optimization time explodes (the one place
@@ -71,11 +73,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 100,
     if edge_count.get["n"] <= SMALL_GRAPH_EDGES:
         # a narrow re-read of the held edges, not a second checkpoint job
         edges = edges.coalesce(SMALL_GRAPH_PARTITIONS)
-    labels = materialize(
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-    )
+    labels = None
     start_iter = 0
     if store is not None:
         spark = pairs.sparkSession
@@ -84,20 +82,24 @@ def connected_components(pairs: DataFrame, max_iter: int = 100,
                 labels = store.read(spark, f"{STAGE_PREFIX}_iter{i}")
                 start_iter = i
                 break
-    no_label = F.lit(None).cast(labels.schema["cluster_id"].dataType)
+    no_label = F.lit(None).cast(edges.schema["src"].dataType)
     # a resume re-checks the committed labels with one more iteration, even
     # when the committed run already used up max_iter
     for _it in range(start_iter, max(max_iter, start_iter + 1)):
         # every doc is a src (edges are symmetric), so its own row makes
         # min(cluster_id) = least(own label, neighbour labels), and _own
         # (null on neighbour rows) keeps the old label for the change count
-        rows = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .select("src", "cluster_id", no_label.alias("_own"))
-            .unionByName(labels.select(F.col("doc_id").alias("src"),
-                                       "cluster_id",
-                                       F.col("cluster_id").alias("_own")))
-        )
+        if labels is None:
+            # first iteration: every label is the doc's own id, so the
+            # neighbour and own rows are read straight from the edges
+            nbr = edges.select("src", F.col("dst").alias("cluster_id"))
+            own = edges.select("src", F.col("src").alias("cluster_id"))
+        else:
+            nbr = (edges.join(labels, edges.dst == labels.doc_id)
+                   .select("src", "cluster_id"))
+            own = labels.select(F.col("doc_id").alias("src"), "cluster_id")
+        rows = (nbr.withColumn("_own", no_label)
+                .unionByName(own.withColumn("_own", F.col("cluster_id"))))
         changed = Observation()
         labels = materialize(
             rows.groupBy(F.col("src").alias("doc_id"))

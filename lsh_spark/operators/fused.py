@@ -44,7 +44,8 @@ from pyspark.sql import DataFrame
 from lsh_spark.config import DedupConfig
 from lsh_spark.functions.hashing import M, minhash_params
 from lsh_spark.functions.text import py_tokens
-from lsh_spark.operators.shingle import _MASK60, _token_hashes, rolling_raw
+from lsh_spark.operators.shingle import (_MASK60, _token_hashes, list_array,
+                                        rolling_raw)
 from lsh_spark.operators.simhash import SIMHASH_BITS
 
 FUSED_SCHEMA = ("doc_id string, hashes array<bigint>, sig array<bigint>, "
@@ -117,13 +118,6 @@ def fused_doc_features(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
                     simhashes[i] = int(((s > 0).astype(np.int64)
                                         << shifts).sum())
 
-            def list_col(arrs):
-                offsets = np.zeros(len(arrs) + 1, np.int64)
-                np.cumsum([len(x) for x in arrs], out=offsets[1:])
-                flat = np.concatenate(arrs) if arrs else np.empty(0, np.int64)
-                return pa.ListArray.from_arrays(
-                    pa.array(offsets, pa.int32()), pa.array(flat, pa.int64()))
-
             # sig column: null for docs without shingles
             sig_arrays, si = [], 0
             for ok in sig_valid:
@@ -135,8 +129,8 @@ def fused_doc_features(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
                 pa.list_(pa.int64()))
 
             yield pa.RecordBatch.from_arrays(
-                [doc_ids, list_col(shingle_out), sig_col,
-                 pa.array(simhashes, pa.int64()), list_col(gram_out)],
+                [doc_ids, list_array(shingle_out), sig_col,
+                 pa.array(simhashes, pa.int64()), list_array(gram_out)],
                 names=["doc_id", "hashes", "sig", "simhash", "grams"])
 
     return docs.select("doc_id", "text").mapInArrow(kernel, FUSED_SCHEMA)

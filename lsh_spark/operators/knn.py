@@ -23,7 +23,9 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
+from lsh_spark.config import DedupConfig
 from lsh_spark.functions.vectors import cosine, cosine_with_norms, norm
+from lsh_spark.operators.skew import key_pairs
 
 ANN_SEED = 20240101
 
@@ -334,27 +336,24 @@ def ann_ivf(corpus: DataFrame, probes: DataFrame, k: int = 5,
 def _verify_bucket_pairs(vectors: DataFrame, buckets: DataFrame,
                          threshold: float, id_col: str,
                          vec_col: str,
-                         hot_bucket_cap: int | None = None) -> DataFrame:
+                         hot_bucket_cap: int = DedupConfig.hot_bucket_cap
+                         ) -> DataFrame:
     """Bucket-collision candidates → exact cosine verify ≥ threshold.
 
     The 100 TB join shape: pairs come from an equi-join on (table_id,
     bucket) — never a cross join — and the self-join is routed through
-    the shared skew module (skew.capped_pair_rows): a degenerate bucket
+    the shared skew module (``skew.key_pairs``): a degenerate bucket
     (mass-duplicated embeddings, zero vectors — all sign bits equal)
     holding k > cap members emits k-1 star edges instead of k²/2 pair
     rows, exactly like the MinHash-band / SimHash-chunk / gram joins.
-    Star edges still get the exact cosine verification below, so every
-    emitted pair is a true ≥-threshold near-dup; only candidate rows
-    ship their embedding arrays for the rerank."""
-    from lsh_spark.config import DedupConfig
-    from lsh_spark.operators import skew
-    cfg = DedupConfig() if hot_bucket_cap is None \
-        else DedupConfig(hot_bucket_cap=hot_bucket_cap)
-    cand = (skew.capped_pair_rows(buckets, ["table_id", "bucket"], cfg,
-                                  id_col="vec_id")
+    ``key_pairs`` holds the bucket rows once, so the hyperplane kernel
+    runs once. Star edges still get the exact cosine verification below,
+    so every emitted pair is a true ≥-threshold near-dup; only candidate
+    rows ship their embedding arrays for the rerank."""
+    cand = (key_pairs(buckets, ["table_id", "bucket"], hot_bucket_cap,
+                      id_col="vec_id")
             .select(F.col("doc_a").alias("id_a"),
-                    F.col("doc_b").alias("id_b"))
-            .distinct())
+                    F.col("doc_b").alias("id_b")))
     va = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
                         norm(F.col(vec_col)).alias("na"))
     vb = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
@@ -371,7 +370,8 @@ def _verify_bucket_pairs(vectors: DataFrame, buckets: DataFrame,
 def embedding_near_dups(vectors: DataFrame, threshold: float = 0.95,
                         n_planes: int = 8, n_tables: int = 8,
                         id_col: str = "vec_id", vec_col: str = "embedding",
-                        hot_bucket_cap: int | None = None) -> DataFrame:
+                        hot_bucket_cap: int = DedupConfig.hot_bucket_cap
+                        ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (bucketed, then exact-verified).
 
     Output: (id_a, id_b, cos_sim). Gaussian multi-table buckets (Arrow
@@ -387,7 +387,8 @@ def embedding_near_dups_portable(vectors: DataFrame, threshold: float = 0.95,
                                  n_planes: int = 4, n_tables: int = 4,
                                  id_col: str = "vec_id",
                                  vec_col: str = "embedding",
-                                 hot_bucket_cap: int | None = None) -> DataFrame:
+                                 hot_bucket_cap: int = DedupConfig.hot_bucket_cap
+                                 ) -> DataFrame:
     """Same bucketed near-dup join shape, but candidates come from the
     DETERMINISTIC integer hyperplane family (``hyperplane_signs_portable``)
     so the whole operator — buckets, collision join, exact verify — is

@@ -23,9 +23,9 @@ hot-bucket skew"):
    triggers (see candidate_pairs docstring).
  * AQE skew-join handling stays on as a backstop (session.py).
 
-The census + star-link machinery is factored into operators/skew.py and
-shared with the SimHash chunk join, the substring gram join and the winnow
-overlap join; the index probes' hot-key rule lives beside it.
+The self-join runs through ``skew.key_pairs``, shared with the SimHash
+chunk join, the substring gram join, the winnow overlap join and the
+embedding-bucket join; the index probes' hot-key rule lives beside it.
 """
 
 from __future__ import annotations
@@ -33,8 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from lsh_spark.config import DedupConfig
-from lsh_spark.operators.skew import all_pair_rows, capped_pair_rows
-from lsh_spark.plans.checkpoint import materialize
+from lsh_spark.operators.skew import key_pairs
 
 
 def band_hashes_col(sig: Column, cfg: DedupConfig) -> Column:
@@ -87,26 +86,11 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig,
     non-star pair loses that band's agreement unit. Downstream Jaccard
     verification is unaffected (it recomputes exact similarity per pair).
     """
-    key = ["band_id", "band_hash"]
-    if all_pairs:
-        pair_rows = all_pair_rows(bands, key)
-    else:
-        # materialize the band table once: the capped path reads it twice
-        # (census + membership join), and each re-derivation
-        # decodes the full signature arrays + re-hashes every band slice
-        # (measured at turn granularity: ~4 s per derivation at 7.3M band
-        # rows — the narrow (band_id, band_hash, doc_id) rows are far
-        # cheaper to rescan than to rebuild)
-        bands = materialize(bands)
-        pair_rows = capped_pair_rows(bands, key, cfg)
-    # one agreement unit per band: (band_id, doc_a, doc_b) rows are unique
-    # by construction — a doc sits in exactly ONE bucket per band (one sig
-    # row per doc), and a bucket is either expanded or star-linked, never
-    # both — so count(*) ≡ countDistinct(band_id). countDistinct planned as
-    # TWO exchanges (partial dedup on (a,b,band) + final count on (a,b));
-    # the plain count partial-aggregates map-side into ONE exchange.
-    return (
-        pair_rows.select("doc_a", "doc_b")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").cast("int").alias("band_agreement"))
-    )
+    # one agreement unit per band: a doc sits in exactly ONE bucket per
+    # band (one sig row per doc), and a bucket is either expanded or
+    # star-linked, never both, so a pair's shared-key count is its number
+    # of agreeing bands
+    cap = None if all_pairs else cfg.hot_bucket_cap
+    return (key_pairs(bands, ["band_id", "band_hash"], cap)
+            .select("doc_a", "doc_b",
+                    F.col("n_keys").cast("int").alias("band_agreement")))

@@ -29,7 +29,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 
 from lsh_spark.config import DedupConfig
-from lsh_spark.functions.hashing import hash64
+from lsh_spark.functions.hashing import hash64, np_hash60
 from lsh_spark.functions.text import distinct_shingles_col, py_tokens, tokens_col
 
 SHINGLE_SCHEMA = "doc_id string, hashes array<bigint>"
@@ -66,26 +66,30 @@ def doc_shingle_hashes_arrow(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     return gram_hashes_fast(docs, cfg.shingle_k)
 
 
+def list_array(arrs: list[np.ndarray]) -> pa.ListArray:
+    """One Arrow ``list<int64>`` value per per-doc NumPy array, built from
+    their offsets and one concatenated value buffer (no per-element
+    Python objects)."""
+    offsets = np.zeros(len(arrs) + 1, np.int64)
+    np.cumsum([len(a) for a in arrs], out=offsets[1:])
+    flat = np.concatenate(arrs) if arrs else np.empty(0, np.int64)
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
+                                    pa.array(flat, pa.int64()))
+
+
 def _shingle_hashes_arrow_portable(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     k = cfg.shingle_k
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            doc_ids = batch.column("doc_id")
-            texts = batch.column("text").to_pylist()
-            out: list[list[int]] = []
-            for text in texts:
+            out = []
+            for text in batch.column("text").to_pylist():
                 toks = py_tokens(text)
-                if len(toks) < k:
-                    out.append([])
-                    continue
-                seen = set()
-                for i in range(len(toks) - k + 1):
-                    s = " ".join(toks[i:i + k])
-                    seen.add(int(hashlib.md5(s.encode()).hexdigest()[:15], 16))
-                out.append(sorted(seen))
+                out.append(np.unique(np_hash60(
+                    [" ".join(toks[i:i + k])
+                     for i in range(len(toks) - k + 1)])))
             yield pa.RecordBatch.from_arrays(
-                [doc_ids, pa.array(out, pa.list_(pa.int64()))],
+                [batch.column("doc_id"), list_array(out)],
                 names=["doc_id", "hashes"],
             )
 
@@ -184,12 +188,7 @@ def gram_hashes_fast(docs: DataFrame, k: int,
                 if sample_mod:
                     gh = gh[gh % np.uint64(sample_mod) == 0]
                 out.append(np.unique(gh).astype(np.int64))
-            offsets = np.zeros(len(out) + 1, np.int64)
-            np.cumsum([len(o) for o in out], out=offsets[1:])
-            flat = (np.concatenate(out) if out else np.empty(0, np.int64))
-            hashes = pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()), pa.array(flat, pa.int64()))
-            yield pa.RecordBatch.from_arrays([doc_ids, hashes],
+            yield pa.RecordBatch.from_arrays([doc_ids, list_array(out)],
                                              names=["doc_id", "hashes"])
 
     return docs.select("doc_id", "text").mapInArrow(kernel, SHINGLE_SCHEMA)

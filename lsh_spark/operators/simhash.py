@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 from lsh_spark.config import DedupConfig
 from lsh_spark.functions.hashing import hash64, np_hash60
 from lsh_spark.functions.text import py_tokens, tokens_col
+from lsh_spark.operators.skew import key_pairs
 from lsh_spark.plans.checkpoint import materialize
 
 # portable hash is 60-bit (15 hex chars of md5); a pair within Hamming
@@ -206,12 +207,10 @@ def simhash_candidate_pairs(sh: DataFrame, cfg: DedupConfig,
     exceeds the threshold is dropped (recall in hot buckets is then
     bounded by the star topology; the MinHash pass covers those pairs).
     """
-    from lsh_spark.operators.skew import all_pair_rows, capped_pair_rows
     # materialize the (doc_id, simhash) frame once: the plan below reads it
-    # three times (the key table and both verify legs; four with the lazy
-    # key table of ``all_pairs``), and when ``sh`` is the Arrow kernel the
-    # whole tokenize+hash pass re-executes per read. Two narrow columns per
-    # doc — tiny.
+    # three times (the key table and both verify legs), and when ``sh`` is
+    # the Arrow kernel the whole tokenize+hash pass re-executes per read.
+    # Two narrow columns per doc — tiny.
     sh = materialize(sh)
     keys = _chunk_keys() if mode == "chunk" else _combo_keys()
     # stage the key array in its own Project before exploding — same
@@ -222,20 +221,8 @@ def simhash_candidate_pairs(sh: DataFrame, cfg: DedupConfig,
     keyed = (sh.select("doc_id", keys.alias("_keys"))
              .select("doc_id",
                      F.posexplode("_keys").alias("chunk_id", "chunk_val")))
-    key_cols = ["chunk_id", "chunk_val"]
-    if not all_pairs:
-        # materialize the exploded key table once, mirroring the MinHash
-        # band path (lsh_bands.candidate_pairs): the capped path reads it
-        # twice (census + membership join), and each re-derivation
-        # re-runs the 20-key combo build + the 20× posexplode fan-out
-        # (measured at turn granularity: three 9.2M-row Generate nodes in
-        # one pair query, ~1-1.5 s each — the narrow (chunk_id, chunk_val,
-        # doc_id) rows are far cheaper to rescan than to rebuild). The
-        # oracle-exact all_pairs branch keeps its original two-scan plan.
-        keyed = materialize(keyed)
-    rows = (all_pair_rows(keyed, key_cols) if all_pairs
-            else capped_pair_rows(keyed, key_cols, cfg))
-    cand = rows.select("doc_a", "doc_b").distinct()
+    cand = key_pairs(keyed, ["chunk_id", "chunk_val"],
+                     None if all_pairs else cfg.hot_bucket_cap)
     va = sh.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"))
     vb = sh.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b"))
     return (

@@ -9,12 +9,18 @@ single viral snippet makes k millions.
 
 The defusal (north_rule: "band hashes grouped via salted groupBy to defuse
 hot-bucket skew"), shared by MinHash bands, SimHash chunks, the substring
-gram join, the winnow overlap join and both index probes:
+gram join, the winnow overlap join, the embedding-bucket join and both
+index probes:
 
- 1. ``bucket_census`` — bucket sizes via one partially-aggregated
+ 1. ``key_pairs`` — the one self-join entry: every pair pass calls it
+    with its keyed rows and a cap. It materializes the keyed rows once
+    (either generator reads them twice), picks the generator (``cap=None``
+    → ``all_pair_rows``, the exact oracle form; else
+    ``capped_pair_rows``) and counts the keys each pair shares.
+ 2. ``bucket_census`` — bucket sizes via one partially-aggregated
     groupBy (map-side combine bounds a mega-key's reduce fan-in by the
     map-task count, so no salt phase is needed for a count).
- 2. ``capped_pair_rows`` — the self-join rule: buckets ≤ cap expand into
+ 3. ``capped_pair_rows`` — the self-join rule: buckets ≤ cap expand into
     all pairs; buckets > cap are star-linked (every member → the bucket's
     min doc_id): k-1 edges instead of k²/2, connecting exactly the same
     component. Star edges are real edges of the pass (all bucket members
@@ -22,14 +28,15 @@ gram join, the winnow overlap join and both index probes:
     key-sharing (substring grams) stay sound; passes with a downstream
     verifier (MinHash → Jaccard, SimHash → popcount) verify star edges
     like any other candidate.
- 3. ``collapse_hot_keys`` — the probe rule (``search_probe``,
+ 4. ``collapse_hot_keys`` — the probe rule (``search_probe``,
     ``incremental_dedup_flags``): of the index rows a probe collides with,
     a key holding more than cap of them keeps only its min doc_id.
 
 Count semantics: per-key rows are exact for non-hot buckets; a pair that
 ALSO co-occurs in a hot bucket loses that bucket's contribution, so
-aggregate counts (band_agreement, shared_grams, shared_fps) are exact in
-all-pairs mode and a LOWER BOUND when the cap triggers.
+aggregate counts (``key_pairs``' n_keys: band_agreement, shared_grams,
+shared_fps) are exact in all-pairs mode and a LOWER BOUND when the cap
+triggers.
 
 Reference analog: none — the reference never hits this because its corpus
 caps at 50k songs in one process (``scripts/plot_all_exec.py:21-31``).
@@ -39,8 +46,31 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from lsh_spark.config import DedupConfig
 from lsh_spark.plans.checkpoint import materialize
+
+
+def key_pairs(keyed: DataFrame, key_cols: list[str], cap: int | None,
+              id_col: str = "doc_id") -> DataFrame:
+    """(doc_a, doc_b, n_keys): the doc pairs (doc_a < doc_b) that share a
+    key of ``keyed`` (key..., <id_col>), with the number of shared keys.
+
+    ``cap=None`` expands every bucket (``all_pair_rows``): exact counts,
+    the oracle form. Otherwise buckets above ``cap`` are star-linked
+    (``capped_pair_rows``) and n_keys is a lower bound for pairs that
+    also share a hot key.
+
+    ``keyed`` is materialized once: either generator reads it twice (both
+    sides of the self-join, or census + membership join), and re-running
+    its producer per read (band hashing, SimHash key fan-out, gram and
+    hyperplane kernels, winnow windows) costs far more than rescanning
+    the narrow keyed rows. Each pair row stands for one shared key, so a
+    partially-aggregated count(*) gives n_keys in one exchange.
+    """
+    keyed = materialize(keyed)
+    rows = (all_pair_rows(keyed, key_cols, id_col) if cap is None
+            else capped_pair_rows(keyed, key_cols, cap, id_col))
+    return (rows.groupBy("doc_a", "doc_b")
+            .agg(F.count("*").cast("long").alias("n_keys")))
 
 
 def bucket_census(keyed: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -59,13 +89,12 @@ def bucket_census(keyed: DataFrame, key_cols: list[str]) -> DataFrame:
     )
 
 
-def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cfg: DedupConfig,
-                     id_col: str = "doc_id",
-                     cap: int | None = None) -> DataFrame:
+def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cap: int,
+                     id_col: str = "doc_id") -> DataFrame:
     """Per-bucket pair rows (key..., doc_a, doc_b) with doc_a < doc_b.
 
-    Buckets larger than ``cap`` (default ``cfg.hot_bucket_cap``) emit
-    star edges (bucket-min → member) instead of the full k²/2 expansion.
+    Buckets larger than ``cap`` emit star edges (bucket-min → member)
+    instead of the full k²/2 expansion.
 
     Plan shape: the census (one partially-aggregated groupBy, guide §2.3)
     yields ~one row per multi-member key — a small relation, since the
@@ -82,7 +111,6 @@ def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cfg: DedupConfig,
     ``spark.sql.autoBroadcastJoinThreshold``, and its skew-join splitting
     stays on as the backstop (session.py).
     """
-    cap = cap if cap is not None else cfg.hot_bucket_cap
     sized = (bucket_census(keyed, key_cols)
              .filter(F.col("bucket_size") >= 2))
     # ONE membership scan: the three consumers below (small groupBy,

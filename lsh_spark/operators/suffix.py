@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from lsh_spark.config import DedupConfig
 from lsh_spark.functions.hashing import hash64
 from lsh_spark.functions.text import shingles_col, tokens_col
-from lsh_spark.plans.checkpoint import materialize
+from lsh_spark.operators.skew import key_pairs
 
 
 def _gram_hashes(docs: DataFrame, k: int, mode: str) -> DataFrame:
@@ -69,7 +69,7 @@ def substring_candidate_pairs(docs: DataFrame, cfg: DedupConfig,
     (oracle mode).
     """
     return shared_key_pairs(gram_keys(docs, cfg, sample_mod), "gram_hash",
-                            cfg, hot_gram_cap, count_col="shared_grams")
+                            hot_gram_cap, count_col="shared_grams")
 
 
 def gram_keys(docs: DataFrame, cfg: DedupConfig,
@@ -82,29 +82,22 @@ def gram_keys(docs: DataFrame, cfg: DedupConfig,
     the Arrow kernel with content-defined sampling (both docs of a shared
     span select the SAME grams; a span of m grams is missed with prob
     (1-1/w)^m — at w=8 and a 100-gram span that is 2e-6). Join input and
-    gram hashing drop by ~w×. This form is checkpointed EAGERLY.
+    gram hashing drop by ~w×. Either form is lazy: ``shared_key_pairs``
+    materializes the exploded rows once, so the kernel runs once.
     """
     if not sample_mod:
         return _gram_hashes(docs, cfg.substring_k, cfg.hash_mode)
     from lsh_spark.operators.shingle import gram_hashes_fast
-    # checkpoint the ARRAY form (compact) before exploding: the capped
-    # pair path reads the keyed frame twice (census + membership join) and
-    # would otherwise re-run the Arrow tokenize+hash kernel per read; the
-    # explode stays narrow.
-    return (materialize(gram_hashes_fast(docs, cfg.substring_k,
-                                         sample_mod=sample_mod))
+    return (gram_hashes_fast(docs, cfg.substring_k, sample_mod=sample_mod)
             .select("doc_id", F.explode("hashes").alias("gram_hash")))
 
 
-def shared_key_pairs(keyed: DataFrame, key_col: str, cfg: DedupConfig,
-                     cap: int | None, count_col: str) -> DataFrame:
+def shared_key_pairs(keyed: DataFrame, key_col: str, cap: int | None,
+                     count_col: str) -> DataFrame:
     """(doc_id, key) → (doc_a, doc_b, <count_col>) pairs sharing ≥1 key,
-    hot keys star-linked when ``cap`` is set (see operators/skew.py)."""
-    from lsh_spark.operators.skew import all_pair_rows, capped_pair_rows
-    rows = (capped_pair_rows(keyed, [key_col], cfg, cap=cap) if cap
-            else all_pair_rows(keyed, [key_col]))
-    return (rows.groupBy("doc_a", "doc_b")
-            .agg(F.count("*").cast("long").alias(count_col)))
+    hot keys star-linked when ``cap`` is set (``skew.key_pairs``)."""
+    return (key_pairs(keyed, [key_col], cap)
+            .withColumnRenamed("n_keys", count_col))
 
 
 def containment_pairs(docs: DataFrame, cfg: DedupConfig) -> DataFrame:

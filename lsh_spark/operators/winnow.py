@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from lsh_spark.config import DedupConfig
 from lsh_spark.functions.hashing import hash64
 from lsh_spark.functions.text import shingles_col, tokens_col
-from lsh_spark.plans.checkpoint import materialize
+from lsh_spark.operators.skew import key_pairs
 
 
 def winnow_fingerprints(docs: DataFrame, cfg: DedupConfig,
@@ -50,14 +50,10 @@ def winnow_overlap_pairs(docs: DataFrame, cfg: DedupConfig,
     k-1 edges instead of k²/2. With the cap, ``shared_fps`` is a lower
     bound for pairs touched by hot fingerprints, so the ``min_shared``
     filter can additionally drop such pairs — the capped form trades that
-    recall for join survival at web scale; None → exact (oracle mode)."""
-    from lsh_spark.operators.suffix import shared_key_pairs
-    # materialize the fingerprint table once: the pair generator reads it
-    # twice (both sides of the uncapped self-join, or the capped census +
-    # membership join), and winnowing itself is a window-function pipeline
-    # over every gram — re-running it per read dominated this operator's
-    # plan
-    fp = materialize(winnow_fingerprints(docs, cfg, window))
-    return (shared_key_pairs(fp.withColumnRenamed("fp_hash", "__key"),
-                             "__key", cfg, hot_fp_cap, count_col="shared_fps")
+    recall for join survival at web scale; None → exact (oracle mode).
+    ``skew.key_pairs`` materializes the fingerprints once, so the window
+    pipeline over every gram runs once."""
+    return (key_pairs(winnow_fingerprints(docs, cfg, window), ["fp_hash"],
+                      hot_fp_cap)
+            .withColumnRenamed("n_keys", "shared_fps")
             .filter(F.col("shared_fps") >= min_shared))

@@ -71,7 +71,7 @@ def dedup_pipeline(
 
     # per-doc sources, chosen once. Each is a thunk called only inside a
     # pass's stage thunk, so a store resume that finds the pass committed
-    # never builds it (suffix.gram_keys' sampled form checkpoints eagerly)
+    # never builds it
     if cfg.hash_mode == "fast":
         # single-scan source: ONE Arrow pass over the text column produces
         # shingle hashes + MinHash signature + SimHash + sampled grams —
@@ -130,7 +130,7 @@ def dedup_pipeline(
 
     def substring_pass() -> DataFrame:
         return (suffix.shared_key_pairs(
-                    gram_keys(), "gram_hash", cfg, cfg.hot_bucket_cap,
+                    gram_keys(), "gram_hash", cfg.hot_bucket_cap,
                     count_col="shared_grams")
                 .select("doc_a", "doc_b"))
 

@@ -60,13 +60,12 @@ def test_connected_components_job_budget(spark, with_jobs):
                            lambda: connected_components(edges).collect())
     assert sorted(rows) == [("a", "a"), ("b", "a"), ("c", "a"),
                             ("x", "x"), ("y", "x")]
-    assert len(jobs) <= 24, len(jobs)
+    assert len(jobs) <= 16, len(jobs)
 
 
 def test_capped_pair_rows_job_budget(spark, with_jobs):
     """The census is built inside the membership checkpoint (``tagged``),
     not checkpointed on its own."""
-    from lsh_spark.config import DedupConfig
     from lsh_spark.operators.skew import capped_pair_rows
     from lsh_spark.plans.checkpoint import materialize
     keyed = spark.createDataFrame(
@@ -74,7 +73,7 @@ def test_capped_pair_rows_job_budget(spark, with_jobs):
                                                 ("small", "d9")],
         "key string, doc_id string")
     out, jobs = with_jobs("budget-capped", lambda: materialize(
-        capped_pair_rows(keyed, ["key"], DedupConfig(hot_bucket_cap=3))))
+        capped_pair_rows(keyed, ["key"], 3)))
     assert sorted((r["doc_a"], r["doc_b"]) for r in out.collect()) == \
         [("d0", f"d{i}") for i in range(1, 6)] + [("d0", "d9")]
     assert len(jobs) <= 10, len(jobs)

@@ -24,6 +24,21 @@ def test_portable_hash_matches_hashlib(spark):
     assert got == expected
 
 
+def test_portable_arrow_shingles_match_builtin(spark):
+    """The Arrow kernel's portable hashes (``np_hash60``) are the built-in
+    ``hash64`` values of the same distinct shingles, sorted, with an empty
+    array for a doc shorter than k tokens."""
+    cfg = DedupConfig(shingle_k=3)
+    docs = _mk_docs(spark, [("a", "w1 w2 w3 w1 w2 w3 w4"),
+                            ("short", "w1 w2"), ("empty", "")])
+    built = {r["doc_id"]: sorted(r["hashes"])
+             for r in shingle.doc_shingle_hashes(docs, cfg).collect()}
+    arrow = {r["doc_id"]: r["hashes"]
+             for r in shingle.doc_shingle_hashes_arrow(docs, cfg).collect()}
+    assert arrow == built
+    assert len(arrow["a"]) == 4 and arrow["short"] == []
+
+
 def test_signature_matches_numpy_kernel(spark):
     cfg = DedupConfig(num_perms=8, shingle_k=3)
     docs = _mk_docs(spark, [

@@ -107,6 +107,21 @@ def test_tfidf_explode_executes_once(spark):
     assert "Scan ExistingRDD" in plan_of(df)
 
 
+def _record_materialized(monkeypatch, frame_cls) -> list[str]:
+    """Patch ``localCheckpoint``; the returned list gets the executed plan
+    (after AQE) of every frame materialized from then on."""
+    executed = []
+    local_checkpoint = frame_cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        out = local_checkpoint(self, *args, **kwargs)
+        executed.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    return executed
+
+
 def test_capped_pairs_shuffle_join_without_broadcast(spark, monkeypatch):
     """With broadcasts disabled, the membership join against the
     bucket-size census must run as a shuffle join (no hint may force a
@@ -121,24 +136,15 @@ def test_capped_pairs_shuffle_join_without_broadcast(spark, monkeypatch):
     bands = lsh_bands.band_buckets(
         minhash.minhash_signatures(hashes, cfg), cfg).localCheckpoint()
     key = ["band_id", "band_hash"]
-    expected = sorted(capped_pair_rows(bands, key, cfg).collect())
+    expected = sorted(capped_pair_rows(bands, key, cfg.hot_bucket_cap).collect())
 
     # every frame capped_pair_rows materializes, with its plan after AQE
-    executed = []
-    frame_cls = type(bands)
-    local_checkpoint = frame_cls.localCheckpoint
-
-    def recording(self, *args, **kwargs):
-        out = local_checkpoint(self, *args, **kwargs)
-        executed.append(self._jdf.queryExecution().executedPlan().toString())
-        return out
-
     threshold = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(threshold)
-    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    executed = _record_materialized(monkeypatch, type(bands))
     spark.conf.set(threshold, "-1")
     try:
-        out = capped_pair_rows(bands, key, cfg)
+        out = capped_pair_rows(bands, key, cfg.hot_bucket_cap)
         got = sorted(out.collect())
         executed.append(out._jdf.queryExecution().executedPlan().toString())
     finally:
@@ -149,6 +155,24 @@ def test_capped_pairs_shuffle_join_without_broadcast(spark, monkeypatch):
                for p in membership)
     assert not any("BroadcastHashJoin" in p for p in executed)
     assert got == expected
+
+
+def test_embedding_near_dups_runs_hyperplane_kernel_once(spark, monkeypatch):
+    """The bucket self-join reads its keyed rows twice (census and
+    membership join); ``skew.key_pairs`` holds them first, so across the
+    frames the operator materializes the hyperplane ``MapInArrow`` runs
+    once, not once per read."""
+    rows = [(i, [float((i * 7 + j) % 11) for j in range(8)])
+            for i in range(30)]
+    rows += [(100 + i, rows[0][1]) for i in range(4)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    executed = _record_materialized(monkeypatch, type(emb))
+    got = knn.embedding_near_dups(emb, threshold=0.99, n_planes=2).collect()
+    # the copies of vec 0 are exact duplicates of it and of each other
+    dups = {(r["id_a"], r["id_b"]) for r in got}
+    assert {(0, 100), (100, 101), (102, 103)} <= dups
+    final_plans = [p.split("== Initial Plan ==")[0] for p in executed]
+    assert sum(p.count("MapInArrow") for p in final_plans) == 1
 
 
 def test_search_probe_broadcasts_probe_side(spark):

@@ -75,11 +75,10 @@ def test_capped_pairs_component_equivalence_random(spark, keyed_rows):
     star-linked pair rows connect exactly the same components as the dense
     expansion, and never exceed it."""
     from lsh_spark.operators.skew import all_pair_rows, capped_pair_rows
-    cfg = DedupConfig(hot_bucket_cap=3)
     rows = [(f"k{k}", f"d{d:02d}") for k, d in keyed_rows]
     keyed = spark.createDataFrame(rows, "key string, doc_id string").distinct()
     dense = all_pair_rows(keyed, ["key"]).select("doc_a", "doc_b")
-    capped = capped_pair_rows(keyed, ["key"], cfg).select("doc_a", "doc_b")
+    capped = capped_pair_rows(keyed, ["key"], 3).select("doc_a", "doc_b")
     n_dense, n_capped = dense.count(), capped.count()
     assert n_capped <= n_dense
     if n_dense == 0:
