@@ -46,7 +46,7 @@ from lsh_spark.functions.hashing import M, minhash_params
 from lsh_spark.functions.text import py_tokens
 from lsh_spark.operators.shingle import (_MASK60, _token_hashes, list_array,
                                         rolling_raw)
-from lsh_spark.operators.simhash import SIMHASH_BITS
+from lsh_spark.operators.simhash import np_simhash
 
 FUSED_SCHEMA = ("doc_id string, hashes array<bigint>, sig array<bigint>, "
                 "simhash bigint, grams array<bigint>")
@@ -60,31 +60,20 @@ def fused_doc_features(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     n_perms = cfg.num_perms
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
         for batch in batches:
             doc_ids = batch.column("doc_id")
             texts = batch.column("text").to_pylist()
             tok_lists = [py_tokens(t) for t in texts]
             th, lens, codes, vocab_h = _token_hashes(tok_lists)
-            # vocab-sized int8 sign table, built once per batch: the
-            # per-doc SimHash becomes a gather+sum over token INSTANCES
-            # (Σ_instances sign ≡ Σ_uniq count·sign — same integer math,
-            # bitwise-identical outputs) instead of a per-doc np.unique
-            # sort + (n_uniq × B) int64 product; int8 moves 8× fewer
-            # bytes through the cache, the binding resource under 32
-            # concurrent workers (same kernel shape as operators/simhash).
-            signs_uniq = ((((vocab_h[:, None].astype(np.int64)
-                             >> shifts[None, :]) & 1) << 1) - 1
-                          ).astype(np.int8) if len(vocab_h) else None
+            simhashes = np_simhash(vocab_h, codes, lens)
 
             shingle_out: list[np.ndarray] = []
             gram_out: list[np.ndarray] = []
             sig_flat: list[np.ndarray] = []
             sig_valid: list[bool] = []
-            simhashes = np.zeros(len(texts), np.int64)
 
             pos = 0
-            for i, n in enumerate(lens):
+            for n in lens:
                 seg = th[pos:pos + n]
                 pos += n
                 # k=5 shingles and k=20 grams share one rolling-hash memo:
@@ -111,12 +100,6 @@ def fused_doc_features(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
                     sig_valid.append(True)
                 else:
                     sig_valid.append(False)
-                # simhash over token instances (see sign-table note above)
-                if n:
-                    s = signs_uniq[codes[pos - n:pos]].sum(
-                        axis=0, dtype=np.int64)
-                    simhashes[i] = int(((s > 0).astype(np.int64)
-                                        << shifts).sum())
 
             # sig column: null for docs without shingles
             sig_arrays, si = [], 0

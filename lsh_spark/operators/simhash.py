@@ -83,63 +83,52 @@ def simhash_docs(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
+def np_simhash(vocab_h: np.ndarray, codes: np.ndarray,
+               lengths: np.ndarray) -> np.ndarray:
+    """Per-doc SimHash (int64) of a batch whose tokens are interned:
+    ``vocab_h`` holds each distinct token's hash, ``codes`` each token
+    instance's vocab index (docs concatenated), ``lengths`` each doc's
+    token count. The kernel both Arrow forms share.
+
+    The sign table is vocab-sized and int8: the per-doc gather temp is
+    (doc_tokens × B), and int8 moves 8× fewer bytes through cache/DRAM
+    than int64, the binding resource under 32 concurrent workers; the sum
+    accumulates in int64. The sum runs over token INSTANCES (Σ_instances
+    sign ≡ Σ_uniq count·sign, the same integer math) per doc, so the temp
+    stays cache-sized: a batch-wide ``np.add.reduceat`` over (total_tokens
+    × B) was measurably SLOWER under 32 concurrent Python workers
+    (aggregate memory-bandwidth bound)."""
+    out = np.zeros(len(lengths), np.int64)
+    if not len(vocab_h):
+        return out
+    shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
+    signs = ((((vocab_h.astype(np.int64)[:, None] >> shifts[None, :]) & 1)
+              << 1) - 1).astype(np.int8)  # (n_vocab, B)
+    offs = np.concatenate(([0], np.cumsum(lengths)))
+    for i, n in enumerate(lengths):
+        if n:
+            s = signs[codes[offs[i]:offs[i + 1]]].sum(axis=0, dtype=np.int64)
+            out[i] = int(((s > 0).astype(np.int64) << shifts).sum())
+    return out
+
+
 def simhash_docs_arrow(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Same contract via a NumPy kernel (``cfg`` is unread: the kernel has
-    no tunable, and the parameter stays because ``bench.py`` passes it),
-    with the two per-doc hot costs hoisted to batch level:
-
-     * tokens are interned ONCE per batch (dict intern), so the md5
-       token hash runs once per batch-global UNIQUE token instead of
-       once per (doc, unique-token) — tokens repeat massively across
-       docs (measured 234× fewer hash calls on sf0.1-shaped batches),
-       and the per-doc ``np.unique`` sort disappears with it;
-     * the per-doc sign sum runs over token INSTANCES via the shared
-       sign table (Σ_instances sign ≡ Σ_uniq count·sign — identical
-       integer math, bitwise-unchanged outputs) with a cache-sized
-       (doc_tokens × B) temp per doc. A batch-wide ``np.add.reduceat``
-       over all instances was tried and reverted: its
-       (total_tokens × B) temp made 32 concurrent Python workers
-       aggregate-memory-bandwidth bound.
-    """
+    no tunable, and the parameter stays because ``bench.py`` passes it).
+    Tokens are interned ONCE per batch (pandas factorize, C-speed), so the
+    md5 token hash runs once per batch-global UNIQUE token instead of once
+    per (doc, unique-token) — tokens repeat massively across docs
+    (measured 234× fewer hash calls on sf0.1-shaped batches) — and
+    ``np_simhash`` sums the signs per doc."""
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pandas as pd
-        shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
         for batch in batches:
             doc_ids = batch.column("doc_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            n = len(texts)
-            toks = [py_tokens(t) for t in texts]
-            lengths = np.fromiter((len(t) for t in toks), np.int64, n)
-            out = np.zeros(n, dtype=np.int64)
-            if int(lengths.sum()):
-                # batch-global interning via pandas factorize (C-speed;
-                # replaces the round-5 per-token dict.setdefault generator
-                # — same first-appearance code order, so hash inputs and
-                # outputs are bitwise-unchanged; measured ~25% faster on
-                # sf0.1-shaped batches)
-                flat = [tok for ts in toks for tok in ts]
-                codes, uniques = pd.factorize(
-                    np.asarray(flat, dtype=object))
-                h_uniq = np_hash60(list(uniques))
-                # int8 signs: the per-doc gather temp is (doc_tokens × B)
-                # — int8 instead of int64 moves 8× fewer bytes through
-                # cache/DRAM, the binding resource under 32 concurrent
-                # workers; the sum accumulates in int64 so values are
-                # unchanged.
-                signs_uniq = ((((h_uniq[:, None] >> shifts[None, :]) & 1)
-                               << 1) - 1).astype(np.int8)  # (n_uniq, B)
-                offs = np.concatenate(([0], np.cumsum(lengths)))
-                # per-doc summation stays — the (doc_tokens × B) temp fits
-                # in cache; a batch-wide reduceat over (total_tokens × B)
-                # was measurably SLOWER under 32 concurrent Python workers
-                # (aggregate memory-bandwidth bound). Σ_instances sign ≡
-                # Σ_uniq count·sign, so values are unchanged.
-                for i in range(n):
-                    if lengths[i]:
-                        s = signs_uniq[codes[offs[i]:offs[i + 1]]].sum(
-                            axis=0, dtype=np.int64)
-                        out[i] = int(((s > 0).astype(np.int64)
-                                      << shifts).sum())
+            toks = [py_tokens(t) for t in batch.column("text").to_pylist()]
+            lengths = np.fromiter((len(t) for t in toks), np.int64, len(toks))
+            flat = [tok for ts in toks for tok in ts]
+            codes, uniques = pd.factorize(np.asarray(flat, dtype=object))
+            out = np_simhash(np_hash60(list(uniques)), codes, lengths)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(doc_ids, pa.string()), pa.array(out, pa.int64())],
                 names=["doc_id", "simhash"],
@@ -207,10 +196,11 @@ def simhash_candidate_pairs(sh: DataFrame, cfg: DedupConfig,
     exceeds the threshold is dropped (recall in hot buckets is then
     bounded by the star topology; the MinHash pass covers those pairs).
     """
-    # materialize the (doc_id, simhash) frame once: the plan below reads it
-    # three times (the key table and both verify legs), and when ``sh`` is
-    # the Arrow kernel the whole tokenize+hash pass re-executes per read.
-    # Two narrow columns per doc — tiny.
+    # hold the (doc_id, simhash) frame: the plan below reads it three times
+    # (the key table and both verify legs), and when ``sh`` is the Arrow
+    # kernel the whole tokenize+hash pass re-executes per read. The
+    # cascade's ``sh`` is two columns of the held fused frame, which
+    # ``materialize`` reads in place (no job).
     sh = materialize(sh)
     keys = _chunk_keys() if mode == "chunk" else _combo_keys()
     # stage the key array in its own Project before exploding — same

@@ -17,17 +17,17 @@ index probes:
     (either generator reads them twice), picks the generator (``cap=None``
     → ``all_pair_rows``, the exact oracle form; else
     ``capped_pair_rows``) and counts the keys each pair shares.
- 2. ``bucket_census`` — bucket sizes via one partially-aggregated
-    groupBy (map-side combine bounds a mega-key's reduce fan-in by the
-    map-task count, so no salt phase is needed for a count).
+ 2. ``bucket_census`` — each bucket's size and min doc_id via one
+    partially-aggregated groupBy (map-side combine bounds a mega-key's
+    reduce fan-in by the map-task count, so no salt phase is needed).
  3. ``capped_pair_rows`` — the self-join rule: buckets ≤ cap expand into
-    all pairs; buckets > cap are star-linked (every member → the bucket's
-    min doc_id): k-1 edges instead of k²/2, connecting exactly the same
-    component. Star edges are real edges of the pass (all bucket members
-    genuinely share the key), so passes whose accept criterion IS
-    key-sharing (substring grams) stay sound; passes with a downstream
-    verifier (MinHash → Jaccard, SimHash → popcount) verify star edges
-    like any other candidate.
+    all pairs; buckets > cap are star-linked (every member → the census's
+    bucket min, read off the member's own row): k-1 edges instead of
+    k²/2, connecting exactly the same component. Star edges are real
+    edges of the pass (all bucket members genuinely share the key), so
+    passes whose accept criterion IS key-sharing (substring grams) stay
+    sound; passes with a downstream verifier (MinHash → Jaccard, SimHash
+    → popcount) verify star edges like any other candidate.
  4. ``collapse_hot_keys`` — the probe rule (``search_probe``,
     ``incremental_dedup_flags``): of the index rows a probe collides with,
     a key holding more than cap of them keeps only its min doc_id.
@@ -73,19 +73,23 @@ def key_pairs(keyed: DataFrame, key_cols: list[str], cap: int | None,
             .agg(F.count("*").cast("long").alias("n_keys")))
 
 
-def bucket_census(keyed: DataFrame, key_cols: list[str]) -> DataFrame:
-    """(key..., bucket_size) via one partially-aggregated groupBy.
+def bucket_census(keyed: DataFrame, key_cols: list[str],
+                  id_col: str = "doc_id") -> DataFrame:
+    """(key..., bucket_size, bucket_min): each key's row count and min
+    ``id_col``, via one partially-aggregated groupBy.
 
-    No salt: Spark's hash aggregate partial-aggregates map-side, so each
-    map task emits at most one row per key and a hot key's reduce fan-in
-    is bounded by the map-task count — the bound a salt phase would give,
+    No salt: the aggregate runs partially map-side (a sort aggregate for a
+    string ``id_col``, whose min has no fixed-width buffer), so each map
+    task emits at most one row per key and a hot key's reduce fan-in is
+    bounded by the map-task count — the bound a salt phase would give,
     without its second aggregation and exchange. Salting is needed only
     where per-key state grows with the group (collect_list et al.).
     """
     return (
-        keyed.select(*key_cols)
+        keyed.select(*key_cols, id_col)
         .groupBy(*key_cols)
-        .agg(F.count("*").cast("long").alias("bucket_size"))
+        .agg(F.count("*").cast("long").alias("bucket_size"),
+             F.min(id_col).alias("bucket_min"))
     )
 
 
@@ -97,31 +101,27 @@ def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cap: int,
     instead of the full k²/2 expansion.
 
     Plan shape: the census (one partially-aggregated groupBy, guide §2.3)
-    yields ~one row per multi-member key — a small relation, since the
-    overwhelming majority of keys are singletons (measured 88-96% at
-    sf0.1) that can never produce a pair. ONE inner join attaches
-    bucket_size to the keyed rows (the census has one row per key, so no
-    duplication), and the materialized multi-member subset (~5-12% of
-    keyed rows) feeds the small/hot splits as plain filters — the full
-    keyed table is scanned ONCE for membership, and singletons never reach
-    the collect_list exchange. The census has one reader, that join, so it
-    is not materialized: it is built inside the membership checkpoint. No
-    hint forces a broadcast of the unbounded census; AQE re-plans the join
-    from the census's shuffle-stage size, broadcasting it when it fits
+    has ~one row per multi-member key — few, since most keys are
+    singletons (88-96% at sf0.1) that can never produce a pair. ONE inner
+    join attaches bucket_size and bucket_min to the keyed rows, and the
+    materialized multi-member subset (~5-12% of keyed rows) feeds two
+    plain filters: small buckets to the collect_list expansion, hot rows
+    straight to star edges (bucket_min → member), with no aggregate or
+    join of their own. The census has one reader, that join, so it is
+    built inside the membership checkpoint. No hint forces a broadcast of
+    the unbounded census; AQE re-plans a shuffle join from the census's
+    shuffle-stage size, broadcasting it when it fits
     ``spark.sql.autoBroadcastJoinThreshold``, and its skew-join splitting
     stays on as the backstop (session.py).
     """
-    sized = (bucket_census(keyed, key_cols)
+    sized = (bucket_census(keyed, key_cols, id_col)
              .filter(F.col("bucket_size") >= 2))
-    # ONE membership scan: the three consumers below (small groupBy,
-    # star-min build, star join) rescan the small tagged subset instead
-    # of the keyed table
-    tagged = materialize(keyed.join(sized, key_cols)
-                         .select(*key_cols, id_col, "bucket_size"))
+    # ONE membership scan: the two filters below (small groupBy, star
+    # edges) rescan the small tagged subset instead of the keyed table
+    tagged = materialize(keyed.join(sized, key_cols).select(
+        *key_cols, id_col, "bucket_size", "bucket_min"))
     small = tagged.filter(F.col("bucket_size") <= cap) \
                   .select(*key_cols, id_col)
-    hot = tagged.filter(F.col("bucket_size") > cap) \
-                .select(*key_cols, id_col)
 
     # Small-bucket expansion: ONE groupBy shuffle + in-stage positional
     # pair generation, instead of a keyed self-join that shuffles the
@@ -144,12 +144,11 @@ def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cap: int,
         .filter(F.col("doc_a") != F.col("doc_b"))
         .select(*key_cols, "doc_a", "doc_b")
     )
-    hot_min = hot.groupBy(*key_cols).agg(F.min(id_col).alias("doc_a"))
-    star = (
-        hot.join(hot_min, key_cols)
-        .filter(F.col(id_col) != F.col("doc_a"))
-        .select(*key_cols, "doc_a", F.col(id_col).alias("doc_b"))
-    )
+    # one star edge per hot row but the min's, duplicate rows included
+    star = (tagged.filter((F.col("bucket_size") > cap)
+                          & (F.col(id_col) != F.col("bucket_min")))
+            .select(*key_cols, F.col("bucket_min").alias("doc_a"),
+                    F.col(id_col).alias("doc_b")))
     return pairs.unionByName(star)
 
 

@@ -59,17 +59,25 @@ def materialize(df: DataFrame) -> DataFrame:
     ``localCheckpoint``); its lineage is cut, so later plans read the
     held rows instead of re-running the subtree.
 
-    A frame that already is a materialized one (its optimized plan is a
-    scan of a checkpointed RDD: a checkpoint, or a re-select of all its
-    columns) is returned unchanged, so no frame is materialized twice —
-    that would cost one more Spark job for the same rows."""
+    A frame that already reads held rows in place (its optimized plan is
+    a scan of a checkpointed RDD, or a projection of some of its columns
+    over one, computing nothing) is returned unchanged, so no rows are
+    materialized twice — that would cost one more Spark job for rows
+    already held. A projection that computes a column is materialized."""
     return df if _held_parts(df) is not None else df.localCheckpoint()
 
 
 def _held_parts(df: DataFrame) -> int | None:
-    """Partition count of a materialized frame, else None; read from the
-    optimized plan, so no Spark job runs."""
+    """Partition count of a frame that reads held rows in place (a
+    checkpointed RDD scan, or bare columns projected from one), else
+    None; read from the optimized plan, so no Spark job runs."""
     plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "Project":
+        cols = plan.projectList()
+        if any(cols.apply(i).getClass().getSimpleName()
+               != "AttributeReference" for i in range(cols.size())):
+            return None
+        plan = plan.child()
     if (plan.getClass().getSimpleName() == "LogicalRDD"
             and plan.rdd().isCheckpointed()):
         return plan.rdd().getNumPartitions()
@@ -174,7 +182,8 @@ class CheckpointStore:
         if layout and not iceberg:
             # the same pmod(murmur3(cols), n) as the bucketBy writer: each
             # task holds one bucket, so a commit writes one file per bucket;
-            # one held partition (a delta) already does, without the shuffle
+            # one held partition (a delta, or bare columns projected from
+            # one) already does, without the shuffle
             cols, n = layout["bucket_cols"], layout["n_buckets"]
             if _held_parts(df) not in (0, 1):
                 df = df.repartition(n, *cols)

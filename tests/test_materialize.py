@@ -35,6 +35,17 @@ def test_materialize_builds_a_frame_once(spark, with_jobs):
                            lambda: materialize(reselect))
     assert same is reselect and jobs == []
 
+    # bare columns projected from a held frame are read in place; a
+    # projection that computes a column is materialized
+    narrow = held.select("k")
+    same, jobs = with_jobs("materialize-project",
+                           lambda: materialize(narrow))
+    assert same is narrow and jobs == []
+    computed = held.select("id", (held.k + 1).alias("k1"))
+    held_c, jobs = with_jobs("materialize-computed",
+                             lambda: materialize(computed))
+    assert held_c is not computed and len(jobs) >= 1
+
     # a frame over a plain (never checkpointed) RDD is still materialized
     rdd_frame = spark.createDataFrame(
         spark.sparkContext.parallelize([(1, "a"), (2, "b")]),
@@ -65,18 +76,22 @@ def test_connected_components_job_budget(spark, with_jobs):
 
 def test_capped_pair_rows_job_budget(spark, with_jobs):
     """The census is built inside the membership checkpoint (``tagged``),
-    not checkpointed on its own."""
+    not checkpointed on its own, and it carries each bucket's min doc, so
+    the star edges are a filter of ``tagged``: no aggregate or join."""
     from lsh_spark.operators.skew import capped_pair_rows
     from lsh_spark.plans.checkpoint import materialize
     keyed = spark.createDataFrame(
-        [("hot", f"d{i}") for i in range(6)] + [("small", "d0"),
+        [("hot", f"d{i}") for i in range(6)] + [("hot", "d3"),
+                                                ("small", "d0"),
                                                 ("small", "d9")],
         "key string, doc_id string")
     out, jobs = with_jobs("budget-capped", lambda: materialize(
         capped_pair_rows(keyed, ["key"], 3)))
+    # the duplicated (hot, d3) row gives its star edge twice
     assert sorted((r["doc_a"], r["doc_b"]) for r in out.collect()) == \
-        [("d0", f"d{i}") for i in range(1, 6)] + [("d0", "d9")]
-    assert len(jobs) <= 10, len(jobs)
+        sorted([("d0", f"d{i}") for i in range(1, 6)] + [("d0", "d3"),
+                                                         ("d0", "d9")])
+    assert len(jobs) <= 7, len(jobs)
 
 
 def test_verify_pairs_job_budget(spark, with_jobs):
@@ -98,3 +113,18 @@ def test_verify_pairs_job_budget(spark, with_jobs):
                                               ("a", "c", 0.5),
                                               ("b", "c", 0.5)]
     assert len(jobs) <= 9, len(jobs)
+
+
+def test_conv_cascade_job_budget(spark, with_jobs, t1_transcripts):
+    """The whole cascade at conversation granularity, in the benchmark's
+    configuration (fast hashing, sampled substring grams, r=2 banding).
+    The hot-bucket cap never fires here, so an idle star branch that
+    costs jobs, or a barrier added back anywhere in the cascade, breaks
+    the budget."""
+    from lsh_spark.config import DedupConfig
+    from lsh_spark.plans.pipeline import dedup_pipeline
+    cfg = DedupConfig(hash_mode="fast", substring_sample_mod=8, band_rows=2)
+    rows, jobs = with_jobs("budget-cascade", lambda: dedup_pipeline(
+        spark, t1_transcripts, cfg).collect())
+    assert len(rows) == 74
+    assert len(jobs) <= 40, len(jobs)

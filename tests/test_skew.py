@@ -49,8 +49,8 @@ def test_star_pair_count_linear_in_bucket(spark):
 
 
 def test_census_counts_match_groupby(spark):
-    """The census must equal a plain groupBy count, mega-buckets
-    included."""
+    """The census must equal a plain groupBy count and min doc_id,
+    mega-buckets included."""
     from lsh_spark.operators.skew import bucket_census
     cfg = DedupConfig(num_perms=8)
     docs = _hot_corpus(spark)
@@ -59,7 +59,8 @@ def test_census_counts_match_groupby(spark):
     bands = lsh_bands.band_buckets(sigs, cfg)
     census = bucket_census(bands, ["band_id", "band_hash"])
     plain = bands.groupBy("band_id", "band_hash").agg(
-        F.count("*").cast("long").alias("bucket_size"))
+        F.count("*").cast("long").alias("bucket_size"),
+        F.min("doc_id").alias("bucket_min"))
     assert census.exceptAll(plain).count() == 0
     assert plain.exceptAll(census).count() == 0
 
