@@ -200,9 +200,9 @@ def run_search_probe(spark) -> dict:
     """Steady-state probe latency against the CHECKPOINTED band index —
     the reference's primary user surface (`search -f query.wav`,
     operators/search.py). The index is built once (amortized, bucketed
-    saveAsTable like a deployed read path); each probe broadcasts a
-    handful of band rows against the index scan, so the corpus never
-    shuffles. Median-of-probes is the latency line; raw walls recorded
+    saveAsTable like a deployed read path); each probe reads its own
+    hashes row, the band rows its keys collide with and its candidates'
+    hashes, so the corpus never shuffles. Median-of-probes is the latency line; raw walls recorded
     (first probe carries the scan-warmup)."""
     import shutil
     import statistics

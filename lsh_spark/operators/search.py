@@ -6,12 +6,19 @@ The reference probes one query against the in-memory inverted index and
 ranks by collision count then similarity; here the "index" is the
 ``band_buckets`` table (checkpointable via plans/checkpoint.py — on a
 cluster this is the resumable, incrementally-probe-able artifact) and a
-probe is a literal predicate pushed down to the index scan:
+probe is at most three point reads, none of which shuffles:
 
- * the probe's band keys (<= num_bands) filter the bucket table's scan
-   as ``band_hash IN (...)``; the big side NEVER shuffles;
- * a key colliding with more than ``hot_bucket_cap`` index rows keeps
-   only its min doc (``skew.collapse_hot_keys``);
+ 1. the probe's own ``doc_hashes`` row (1 of n buckets): its shingle
+    hashes and its band keys (<= num_bands);
+ 2. the index rows those keys collide with, as a literal predicate pushed
+    down to the bucket table's scan; a key colliding with more than
+    ``hot_bucket_cap`` of them keeps only its min doc
+    (``skew.collapse_hot_keys``), so at most num_bands × hot_bucket_cap
+    rows reach the driver;
+ 3. the candidates' ``doc_hashes`` rows, by ``doc_id`` (bucket-pruned).
+
+The driver then does what the reference does in place:
+
  * agreement = number of distinct colliding bands (Q5 semantics: duplicate
    hits within one bucket count once, reference ``lsh.py:307-308``);
  * verification = exact shingle Jaccard of probe vs candidates only
@@ -23,11 +30,19 @@ probe is a literal predicate pushed down to the index scan:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from collections import Counter
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lsh_spark.config import DedupConfig
 from lsh_spark.operators import lsh_bands, minhash
 from lsh_spark.operators.skew import collapse_hot_keys
+
+# the ranked output, built on the driver
+RANKED = pa.schema([("neighbor_id", pa.string()),
+                    ("band_agreement", pa.int32()),
+                    ("jaccard", pa.float64()), ("rank", pa.int32())])
 
 
 def search_probe(bands: DataFrame, doc_hashes: DataFrame, probe_id: str,
@@ -36,7 +51,8 @@ def search_probe(bands: DataFrame, doc_hashes: DataFrame, probe_id: str,
 
     ``bands``: (band_id, band_hash, doc_id) — the prebuilt index;
     ``doc_hashes``: (doc_id, hashes) — for exact Jaccard verification.
-    Output: (neighbor_id, band_agreement int, jaccard double, rank int).
+    Output: (neighbor_id, band_agreement int, jaccard double, rank int),
+    computed eagerly: the returned frame holds the ranked rows.
 
     Hot keys (``skew.collapse_hot_keys``, as in delta ingest): once the
     probe's own rows are dropped — a probe that is a hot key's min doc
@@ -44,71 +60,74 @@ def search_probe(bands: DataFrame, doc_hashes: DataFrame, probe_id: str,
     more than ``cfg.hot_bucket_cap`` index rows keeps only its min doc, so
     ``band_agreement`` is a lower bound there, as in ``candidate_pairs``.
     """
-    # The reference's lookup is O(1) per band (``lsh.py:272-317``); the
-    # relational analog is a LITERAL pushed-down predicate, not a join: the
-    # probe's <= num_bands band keys filter the index scan with
-    # band_hash IN (...) plus the exact (band_id, band_hash) disjunction
-    # (asserted in tests/test_plans.py), so the index is never shuffled.
-    # What a probe reads from the BUCKETED stages (plans/checkpoint.py):
-    # - its own doc_hashes row, from 1 of n buckets, twice: here for its
-    #   band keys, derived as the index derived them in built-in
-    #   expressions (a probe whose band rows never reached the index still
-    #   finds its neighbours), and again to verify;
-    # - the colliding rows: the IN list selects the buckets the probe's
-    #   band hashes fall in, nearly all n when b >= n;
-    # - verification: the broadcast join below reads all of doc_hashes.
-    # So the last two reads still grow with the index, not with the probe.
-    own = doc_hashes.filter(F.col("doc_id") == probe_id)
-    probe_rows = sorted({
-        (band_id, band_hash) for r in
-        own.select(minhash.signature_col(F.col("hashes"), cfg).alias("sig"))
-        .filter(F.col("sig").isNotNull())
-        # its own projection: sig is read once per band row, not rebuilt
-        .select(lsh_bands.band_hashes_col(F.col("sig"), cfg).alias("bands"))
-        .collect()
-        for band_id, band_hash in enumerate(r["bands"])})
-    if probe_rows:
-        in_hashes = F.col("band_hash").isin([h for _, h in probe_rows])
-        exact = None
-        for band_id, band_hash in probe_rows:
-            term = ((F.col("band_id") == band_id)
-                    & (F.col("band_hash") == band_hash))
-            exact = term if exact is None else (exact | term)
-        probe_pred = in_hashes & exact
-    else:
-        probe_pred = F.lit(False)
-    hits = (
-        collapse_hot_keys(
-            bands.filter(probe_pred).filter(F.col("doc_id") != probe_id),
-            ["band_id", "band_hash"], cfg.hot_bucket_cap)
-        .select("band_id", "doc_id").distinct()
-        .groupBy("doc_id")
-        .agg(F.count("*").cast("int").alias("band_agreement"))
-    )
-    probe_set = own.select(F.col("hashes").alias("h_p"))
-    scored = (
-        # hits is bounded: at most cap rows per probe band key, so at most
-        # num_bands × hot_bucket_cap rows — broadcast it so the doc_hashes
-        # side is probed in place and never shuffles
-        F.broadcast(hits).join(doc_hashes, "doc_id")
-        .crossJoin(F.broadcast(probe_set))
-        .withColumn("inter", F.size(F.array_intersect("hashes", "h_p")))
-        .withColumn("union",
-                    F.size("hashes") + F.size("h_p") - F.col("inter"))
-        .withColumn("jaccard",
-                    F.when(F.col("union") > 0, F.col("inter") / F.col("union"))
-                     .otherwise(F.lit(1.0)))
-    )
-    # Distributed top-k FIRST: orderBy().limit() plans TakeOrderedAndProject
-    # (per-partition partial top-k, merge of <= top_x rows per partition on
-    # the driver) — the candidate set never funnels through one partition.
-    # The unpartitioned row_number window then runs over <= top_x rows only
-    # (asserted in tests/test_plans.py).
-    cut = scored.orderBy(F.desc("jaccard"), F.asc("doc_id")).limit(top_x)
-    w = Window.orderBy(F.desc("jaccard"), F.asc("doc_id"))
-    return (
-        cut.withColumn("rank", F.row_number().over(w))
-        .select(F.col("doc_id").alias("neighbor_id"), "band_agreement",
-                F.round("jaccard", 6).alias("jaccard"),
-                F.col("rank").cast("int").alias("rank"))
-    )
+    spark = bands.sparkSession
+    # Read 1: the probe's own row(s). Its band keys are derived as the
+    # index derived them, in built-in expressions, so a probe whose band
+    # rows never reached the index still finds its neighbours.
+    own = (doc_hashes.filter(F.col("doc_id") == probe_id)
+           .select("hashes", minhash.signature_col(F.col("hashes"), cfg)
+                   .alias("sig"))
+           # its own projection: sig is read once per band row, not rebuilt
+           .select("hashes", F.when(F.col("sig").isNotNull(),
+                                    lsh_bands.band_hashes_col(F.col("sig"),
+                                                              cfg))
+                   .alias("bands"))
+           .collect())
+    probe_keys = sorted({(band_id, band_hash) for r in own if r["bands"]
+                         for band_id, band_hash in enumerate(r["bands"])})
+    if not probe_keys:
+        return _ranked(spark, [])
+
+    # Read 2: the colliding index rows. The reference's lookup is O(1) per
+    # band (``lsh.py:272-317``); the relational analog is a literal
+    # predicate, built as ONE expression string (one py4j call, not one per
+    # term): band_hash IN (...) reaches the bucketed scan as a pushed
+    # filter, and the exact (band_id, band_hash) disjunction drops rows of
+    # another band with that hash. On a bucketed index the hot-key window
+    # plans no Exchange (asserted in tests/test_plans.py).
+    in_list = ", ".join(sorted({f"{h}L" for _, h in probe_keys}))
+    exact = " OR ".join(f"(band_id = {b} AND band_hash = {h}L)"
+                        for b, h in probe_keys)
+    rows = (collapse_hot_keys(
+                bands.filter(F.expr(f"band_hash IN ({in_list}) AND ({exact})"))
+                .filter(F.col("doc_id") != probe_id),
+                ["band_id", "band_hash"], cfg.hot_bucket_cap)
+            .select("band_id", "doc_id").collect())
+    agreement = Counter(doc_id for _, doc_id in set(rows))
+    if not agreement:
+        return _ranked(spark, [])
+
+    # Read 3: the candidates' hashes, by doc_id (bucket-pruned on the
+    # doc_id-bucketed stage), the id list again one expression string.
+    # Jaccard as the Spark form computes it:
+    # |distinct(a) ∩ distinct(b)| / (|a| + |b| - inter).
+    ids = ", ".join(map(_sql_string, agreement))
+    cands = (doc_hashes.filter(F.expr(f"doc_id IN ({ids})"))
+             .select("doc_id", "hashes").collect())
+    scored = []
+    for p in own:
+        h_p = set(p["hashes"])
+        for c in cands:
+            inter = len(h_p.intersection(c["hashes"]))
+            union = len(c["hashes"]) + len(p["hashes"]) - inter
+            scored.append((inter / union if union > 0 else 1.0, c["doc_id"]))
+    scored.sort(key=lambda s: (-s[0], s[1]))
+    return _ranked(spark, [(doc_id, agreement[doc_id], jaccard, rank)
+                           for rank, (jaccard, doc_id)
+                           in enumerate(scored[:top_x], 1)])
+
+
+def _ranked(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """The ranked rows as a local relation (no Spark job to collect).
+    ``F.round`` rounds HALF_UP, as the rest of the engine's outputs do;
+    Python's ``round`` rounds half to even."""
+    table = pa.Table.from_pylist([dict(zip(RANKED.names, r)) for r in rows],
+                                 schema=RANKED)
+    return (spark.createDataFrame(table)
+            .select("neighbor_id", "band_agreement",
+                    F.round("jaccard", 6).alias("jaccard"), "rank"))
+
+
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"

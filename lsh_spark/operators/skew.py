@@ -29,8 +29,10 @@ index probes:
     sound; passes with a downstream verifier (MinHash → Jaccard, SimHash
     → popcount) verify star edges like any other candidate.
  4. ``collapse_hot_keys`` — the probe rule (``search_probe``,
-    ``incremental_dedup_flags``): of the index rows a probe collides with,
-    a key holding more than cap of them keeps only its min doc_id.
+    ``incremental_dedup_flags``): of the rows a probe collides with, a
+    key holding more than cap of them keeps only its min doc_id. A delta
+    probes its own band rows under the same rule, so a hot batch key
+    gives the star edges (min, member) that rule 3 gives.
 
 Count semantics: per-key rows are exact for non-hot buckets; a pair that
 ALSO co-occurs in a hot bucket loses that bucket's contribution, so
@@ -155,8 +157,9 @@ def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cap: int,
 def collapse_hot_keys(rows: DataFrame, key_cols: list[str],
                       cap: int) -> DataFrame:
     """``rows`` with each key that holds more than ``cap`` of them cut to
-    its min-``doc_id`` rows. ``rows`` are the index rows one probe
-    collides with, so this census is sized by the probe, not the index.
+    its min-``doc_id`` rows. ``rows`` are the rows one probe collides with
+    (index rows, or a delta's own band rows), so this census is sized by
+    the probe, not the index.
     The window holds one key's rows in one task; on a bucketed index they
     already share a bucket, so it plans a Sort and no Exchange."""
     w = Window.partitionBy(*key_cols)

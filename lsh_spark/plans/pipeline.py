@@ -188,18 +188,23 @@ def incremental_dedup_flags(new_docs: DataFrame, index_bands: DataFrame,
     ingest operation at 10^12 turns: the corpus is NEVER re-clustered per
     delta; new docs probe the checkpointed ``(band_id, band_hash, doc_id)``
     table (plans/checkpoint.py — store it bucketed on the band key and the
-    big side never reshuffles), plus a within-batch pass so dups arriving
-    in the same delta are caught too.
+    big side never reshuffles), and the batch's own band rows in the same
+    keyed join, so dups arriving in the same delta are caught too.
 
     Skew: only the index rows the delta's band keys touch are censused (a
-    semi-join), never the whole index. Of those, a key above the cap keeps
-    only its min doc (``skew.collapse_hot_keys``, as in ``search_probe``),
-    so a delta band key joins at most ``cfg.hot_bucket_cap`` index rows.
-    The rule's window holds one key's rows in one task; on a bucketed
-    index they already share one bucket, so the index is not shuffled.
+    semi-join), never the whole index. Of those, and of the batch's own
+    rows, a key above the cap keeps only its min doc
+    (``skew.collapse_hot_keys``, as in ``search_probe``), so a delta band
+    key joins at most ``cfg.hot_bucket_cap`` rows of either side. On the
+    batch side that gives the star (min, member) ``capped_pair_rows``
+    gives a hot bucket; below the cap it gives every pair. The rule's
+    window holds one key's rows in one task; on a bucketed index they
+    already share one bucket, so the index is not shuffled.
 
     Output: (doc_a = new doc, doc_b = matched doc, band_agreement,
-    jaccard, match_kind 'index'|'batch'), Jaccard-verified ≥ threshold.
+    jaccard, match_kind 'index'|'batch'), Jaccard-verified ≥ threshold;
+    a 'batch' pair has doc_a < doc_b, and band_agreement counts distinct
+    agreeing bands.
     """
     if new_hashes is None:
         # two consumers below (signatures + the verify hash union): without
@@ -216,19 +221,29 @@ def incremental_dedup_flags(new_docs: DataFrame, index_bands: DataFrame,
     # shuffled; the probe join drops rows of another band with that hash
     touched = index_bands.join(new_bands.select("band_hash"), "band_hash",
                                "left_semi")
-    probe_side = (collapse_hot_keys(touched, keys, cfg.hot_bucket_cap)
-                  .withColumnRenamed("doc_id", "doc_b"))
-
-    vs_index = (
+    # ONE keyed join probes the index and the batch itself. Each side keeps
+    # a hot key's min doc only (collapse_hot_keys): for the batch that is
+    # the star (min, member) capped_pair_rows gives, and a cold key yields
+    # both orders of each pair, folded by (least, greatest) below
+    probe_side = (
+        collapse_hot_keys(touched, keys, cfg.hot_bucket_cap)
+        .withColumn("match_kind", F.lit("index"))
+        .unionByName(collapse_hot_keys(new_bands, keys, cfg.hot_bucket_cap)
+                     .withColumn("match_kind", F.lit("batch")))
+        .withColumnRenamed("doc_id", "doc_b"))
+    batch = F.col("match_kind") == "batch"
+    cand = (
         new_bands.join(probe_side, keys)
         .filter(F.col("doc_id") != F.col("doc_b"))
-        .select(F.col("doc_id").alias("doc_a"), "doc_b", "band_id").distinct()
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").cast("int").alias("band_agreement"))
-        .withColumn("match_kind", F.lit("index")))
-    vs_batch = (lsh_bands.candidate_pairs(new_bands, cfg)
-                .withColumn("match_kind", F.lit("batch")))
-    cand = vs_index.unionByName(vs_batch)
+        .select(F.when(batch, F.least("doc_id", "doc_b"))
+                 .otherwise(F.col("doc_id")).alias("doc_a"),
+                F.when(batch, F.greatest("doc_id", "doc_b"))
+                 .otherwise(F.col("doc_b")).alias("doc_b"),
+                "band_id", "match_kind")
+        # distinct bands in ONE exchange: the set holds <= num_bands ids
+        .groupBy("doc_a", "doc_b", "match_kind")
+        .agg(F.size(F.collect_set("band_id")).cast("int")
+             .alias("band_agreement")))
 
     all_hashes = index_hashes.unionByName(new_hashes)
     # match_kind rides through the verifier (extra_cols): re-joining the
@@ -251,10 +266,13 @@ def incremental_dedup(spark: SparkSession, new_docs: DataFrame,
 
     The store owns the index stages' layout. For the 100 TB shape they are
     BUCKETED (bands on band_hash, hashes on doc_id — ``cli index
-    --bucketed-index`` or ``store.write_bucketed``): the probe join and
-    the verify semi-join then never reshuffle the corpus side. Either way
-    the fold-in is an O(delta) ``store.append`` in the stage's own layout,
-    never an O(corpus) union-rewrite.
+    --bucketed-index`` or ``store.write_bucketed``): the probe join then
+    never reshuffles the index side. The verify join still does: when
+    ``spark.sql.shuffle.partitions`` exceeds the hashes stage's bucket
+    count, the planner drops its bucketing and shuffles the whole stage
+    by doc_id on every delta. Either way the fold-in is an O(delta)
+    ``store.append`` in the stage's own layout, never an O(corpus)
+    union-rewrite.
 
     Crash-ordering invariant (ADVICE r3): the HASHES stage is written
     BEFORE the bands stage.  A crash between the two writes then leaves

@@ -38,6 +38,46 @@ def with_jobs(spark):
     return run
 
 
+@pytest.fixture
+def record_collects(spark, monkeypatch):
+    """From then on, the list gets (executed plan after AQE, a JVM
+    ``SparkPlan``; rows) of every ``DataFrame.collect()``: the reads of an
+    operator that collects."""
+    frame_cls = type(spark.range(0))
+    seen = []
+    collect = frame_cls.collect
+
+    def recording(self):
+        rows = collect(self)
+        seen.append((self._jdf.queryExecution().executedPlan(), rows))
+        return rows
+
+    monkeypatch.setattr(frame_cls, "collect", recording)
+    return seen
+
+
+@pytest.fixture
+def probe_index(spark, tmp_path):
+    """(bands, hashes, cfg): a 4-bucket index as the store keeps it. d0 and
+    d5 share their text; the other docs share no shingle with any doc."""
+    from lsh_spark.config import DedupConfig
+    from lsh_spark.operators import lsh_bands, minhash, shingle
+    from lsh_spark.plans.checkpoint import CheckpointStore
+    cfg = DedupConfig(num_perms=8)
+    docs = spark.createDataFrame(
+        [(f"d{i}", "a b c d e f g h" if i in (0, 5)
+          else " ".join(f"w{i}x{j}" for j in range(8))) for i in range(12)],
+        "doc_id string, text string")
+    store = CheckpointStore(str(tmp_path / "probe_index"))
+    store.write_bucketed(shingle.doc_shingle_hashes(docs, cfg),
+                         "shingle_hashes", ("doc_id",), 4)
+    hashes = store.read(spark, "shingle_hashes")
+    store.write_bucketed(lsh_bands.band_buckets(
+        minhash.minhash_signatures(hashes, cfg), cfg),
+        "band_buckets", ("band_hash",), 4)
+    return store.read(spark, "band_buckets"), hashes, cfg
+
+
 @pytest.fixture(scope="session")
 def t1_transcripts(spark):
     return spark.read.parquet(synth.generate_tier("t1"))

@@ -128,3 +128,46 @@ def test_conv_cascade_job_budget(spark, with_jobs, t1_transcripts):
         spark, t1_transcripts, cfg).collect())
     assert len(rows) == 74
     assert len(jobs) <= 40, len(jobs)
+
+
+def test_search_probe_job_budget(probe_index, with_jobs):
+    """A probe is three point reads (its own row, its band hits, its
+    candidates' hashes) and the ranked rows come back as a local relation;
+    a probe without hits stops after two."""
+    from lsh_spark.operators.search import search_probe
+    bands, hashes, cfg = probe_index
+    rows, jobs = with_jobs("budget-probe-hits", lambda: search_probe(
+        bands, hashes, "d0", cfg).collect())
+    assert [r["neighbor_id"] for r in rows] == ["d5"]
+    assert len(jobs) <= 3, len(jobs)
+    rows, jobs = with_jobs("budget-probe-none", lambda: search_probe(
+        bands, hashes, "d1", cfg).collect())
+    assert rows == []
+    assert len(jobs) <= 2, len(jobs)
+
+
+def test_incremental_dedup_flags_job_budget(spark, with_jobs):
+    """The delta's band rows probe the index and the batch itself in ONE
+    keyed join, under one hot-key rule: no separate within-batch pair
+    pass with its own census and membership join."""
+    from lsh_spark.config import DedupConfig
+    from lsh_spark.operators import lsh_bands, minhash, shingle
+    from lsh_spark.plans.pipeline import incremental_dedup_flags
+    cfg = DedupConfig(num_perms=8, shingle_k=2)
+    corpus = spark.createDataFrame(
+        [("old1", "alpha beta gamma delta epsilon zeta"),
+         ("old2", "one two three four five six seven")],
+        "doc_id string, text string")
+    batch = spark.createDataFrame(
+        [("new1", "alpha beta gamma delta epsilon zeta"),
+         ("new2", "unrelated fresh content nothing shared xyz"),
+         ("new3", "unrelated fresh content nothing shared xyz")],
+        "doc_id string, text string")
+    hashes = shingle.doc_shingle_hashes(corpus, cfg)
+    bands = lsh_bands.band_buckets(minhash.minhash_signatures(hashes, cfg),
+                                   cfg)
+    rows, jobs = with_jobs("budget-delta", lambda: incremental_dedup_flags(
+        batch, bands, hashes, cfg).collect())
+    assert sorted((r["doc_a"], r["doc_b"], r["match_kind"]) for r in rows) \
+        == [("new1", "old1", "index"), ("new2", "new3", "batch")]
+    assert len(jobs) <= 20, len(jobs)

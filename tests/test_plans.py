@@ -175,42 +175,57 @@ def test_embedding_near_dups_runs_hyperplane_kernel_once(spark, monkeypatch):
     assert sum(p.count("MapInArrow") for p in final_plans) == 1
 
 
-def test_search_probe_broadcasts_probe_side(spark):
+def test_search_probe_reads_are_shuffle_free(probe_index, record_collects):
+    """A probe is three point reads of the bucketed index, none of which
+    shuffles or runs Python: its own hashes row, the colliding band rows,
+    and the candidates' hashes. The probe's band keys are LITERAL
+    predicates on the band read (the reference's O(1) dict lookup
+    analog), not a join against a recomputed probe subtree."""
     from lsh_spark.operators.search import search_probe
-    cfg = DedupConfig(num_perms=8)
-    docs = spark.createDataFrame(
-        [(f"d{i}", "a b c d e f g h") for i in range(6)],
-        "doc_id string, text string")
-    hashes = shingle.doc_shingle_hashes(docs, cfg)
-    bands = lsh_bands.band_buckets(minhash.minhash_signatures(hashes, cfg), cfg)
-    plan = plan_of(search_probe(bands, hashes, "d0", cfg))
-    assert "BroadcastHashJoin" in plan
-    # the corpus-side bucket table is never shuffled for the probe join
-    assert "python" not in plan.lower() or "pythonudf" not in plan.lower()
-    # round 6: the probe's band keys are LITERAL predicates on the index
-    # side (the reference's O(1) dict lookup analog), not a join against
-    # a recomputed probe subtree
-    assert "band_hash#" in plan and " IN (" in plan
+    bands, hashes, cfg = probe_index
+    record_collects.clear()
+    got = search_probe(bands, hashes, "d0", cfg).collect()
+    assert [r["neighbor_id"] for r in got] == ["d5"]
+    plans = [plan.toString() for plan, _ in record_collects]
+    reads = [plan for plan in plans if "FileScan" in plan]
+    assert len(reads) == 3
+    for plan in reads:
+        assert "Exchange" not in plan, plan
+        assert "EvalPython" not in plan and "MapInArrow" not in plan
+    assert "band_hash#" in reads[1] and " IN (" in reads[1]
 
 
-def test_search_probe_pushes_band_keys_to_bucketed_scan(spark, tmp_path):
+def _selected_buckets(plan) -> tuple[int, int]:
+    """(selected, total) buckets of a plan's one file scan: the bucket set
+    Spark prunes the stage's files with. ``SelectedBucketsCount`` shows it
+    only for a bucketed scan, and the planner turns bucketed scans off
+    where no operator needs the layout, as for a plain point read."""
+    leaves = plan.collectLeaves()
+    (scan,) = [leaves.apply(i) for i in range(leaves.size())
+               if leaves.apply(i).getClass().getSimpleName()
+               == "FileSourceScanExec"]
+    n = scan.relation().bucketSpec().get().numBuckets()
+    chosen = scan.optionalBucketSet()
+    return (chosen.get().cardinality() if chosen.isDefined() else n), n
+
+
+def test_search_probe_pushes_band_keys_to_bucketed_scan(probe_index,
+                                                        record_collects):
     """Against the bucketed checkpoint index, a probe's band-key IN list
     must reach the parquet scan as pushed filters (file/bucket pruning) —
-    VERDICT r5 item 5."""
+    VERDICT r5 item 5 — and the probe's own row and its candidates'
+    hashes are read by doc_id from fewer than all buckets."""
     from lsh_spark.operators.search import search_probe
-    from lsh_spark.plans.checkpoint import CheckpointStore
-    cfg = DedupConfig(num_perms=8)
-    docs = spark.createDataFrame(
-        [(f"d{i}", f"a b c d e f g h {i % 3}") for i in range(12)],
-        "doc_id string, text string")
-    hashes = shingle.doc_shingle_hashes(docs, cfg)
-    bands = lsh_bands.band_buckets(minhash.minhash_signatures(hashes, cfg), cfg)
-    store = CheckpointStore(str(tmp_path))
-    bbands = store.write_bucketed(bands, "band_buckets", ("band_hash",), 4)
-    plan = plan_of(search_probe(bbands, hashes, "d0", cfg))
-    assert "PushedFilters" in plan
+    bands, hashes, cfg = probe_index
+    record_collects.clear()
+    search_probe(bands, hashes, "d0", cfg)
+    (own, _), (band_read, _), (fetch, _) = record_collects
     # the index scan carries the probe's band_hash IN (...) predicate
-    assert "In(band_hash" in plan.replace(" ", "")
+    pushed = band_read.toString().split("PushedFilters: ")[1]
+    assert "In(band_hash" in pushed.split("]")[0].replace(" ", "")
+    for plan in (own, fetch):
+        selected, n = _selected_buckets(plan)
+        assert selected < n, plan.toString()
 
 
 def test_bucketed_checkpoint_join_has_no_shuffle(spark, tmp_path):

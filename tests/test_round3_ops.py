@@ -103,9 +103,9 @@ def test_ivf_lloyd_refinement_custom_id_col(spark):
     assert len(got) == 2  # emptied lists are kept, none silently dropped
 
 
-# ---- VERDICT "wrong #4": probe ranking is a distributed top-k ----
+# ---- VERDICT "wrong #4": probe ranking input is bounded ----
 
-def test_search_probe_ranking_bounded(spark):
+def test_search_probe_ranking_bounded(spark, record_collects):
     from lsh_spark.operators import lsh_bands, minhash, shingle
     from lsh_spark.operators.search import search_probe
     cfg = DedupConfig(num_perms=8, shingle_k=2)
@@ -115,9 +115,12 @@ def test_search_probe_ranking_bounded(spark):
     hashes = shingle.doc_shingle_hashes(docs, cfg)
     bands = lsh_bands.band_buckets(minhash.minhash_signatures(hashes, cfg), cfg)
     res = search_probe(bands, hashes, "d0", cfg, top_x=3)
-    # the global sort is TakeOrderedAndProject (per-partition top-k), and
-    # the row_number window runs AFTER the limit (over <= top_x rows)
-    assert "TakeOrderedAndProject" in plan_of(res)
+    # the driver ranks the hot-key-collapsed hit rows: at most
+    # num_bands × hot_bucket_cap of them reach it
+    hits = [rows for _, rows in record_collects
+            if rows and "band_id" in rows[0].asDict()]
+    assert len(hits) == 1
+    assert 0 < len(hits[0]) <= cfg.num_bands * cfg.hot_bucket_cap
     got = res.collect()
     assert [r["rank"] for r in got] == [1, 2, 3]
     assert all(r["jaccard"] == 1.0 for r in got)
@@ -152,6 +155,15 @@ def test_search_probe_keys_come_from_its_own_hashes(spark, tmp_path):
     got = search_probe(bands, store.read(spark, "shingle_hashes"), "p",
                        cfg).collect()
     assert got and got[0]["neighbor_id"] == "dup" and got[0]["rank"] == 1
+
+
+def test_search_probe_id_literals_round_trip(spark):
+    """Candidate ids reach the fetch predicate as SQL string literals; a
+    quote or backslash in an id must survive."""
+    from lsh_spark.operators.search import _sql_string
+    ids = ["c0000001", "it's", "back\\slash", "q'\\'x", ""]
+    got = spark.sql("SELECT " + ", ".join(map(_sql_string, ids))).first()
+    assert list(got) == ids
 
 
 # ---- VERDICT #4: portable bucketed embedding near-dup ----
@@ -323,6 +335,16 @@ def test_incremental_dedup_hot_index_bucket_star(spark):
     for probe, want in (("old5", ["old0"]), ("old0", ["old1"])):
         hits = search_probe(bands, hashes, probe, cfg).collect()
         assert [r["neighbor_id"] for r in hits] == want
+    # more than cap delta docs share every band key: the within-batch
+    # flags are the star (min, member), as capped_pair_rows links a hot
+    # bucket, and the hot index keys still give each new doc its old0
+    batch = spark.createDataFrame(
+        [(f"new{i}", "spam spam spam wonderful spam baked beans")
+         for i in range(5)], "doc_id string, text string")
+    got = incremental_dedup_flags(batch, bands, hashes, cfg).collect()
+    assert sorted((r["doc_a"], r["doc_b"], r["match_kind"]) for r in got) \
+        == sorted([(f"new{i}", "old0", "index") for i in range(5)]
+                  + [("new0", f"new{i}", "batch") for i in range(1, 5)])
 
 
 def test_incremental_dedup_store_roundtrip(spark, tmp_path):
