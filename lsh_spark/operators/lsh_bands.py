@@ -33,28 +33,31 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from lsh_spark.config import DedupConfig
+from lsh_spark.operators.minhash import sql_name
 from lsh_spark.operators.skew import key_pairs
 
 
-def band_hashes_col(sig: Column, cfg: DedupConfig) -> Column:
-    """Per-band hash array of a MinHash signature column; element i is
-    band i's key. r = cfg.band_rows signature rows per band; for r=1 the
-    band hash IS the signature value (oracle-reproducible); for r>1 rows
-    are combined with xxhash64 over the slice. The one banding both the
-    batch index (``band_buckets``) and the stream
+def band_hashes_col(sig: str, cfg: DedupConfig) -> Column:
+    """Per-band hash array of the MinHash signature column named ``sig``;
+    element i is band i's key. r = cfg.band_rows signature rows per band;
+    for r=1 the band hash IS the signature value (oracle-reproducible); for
+    r>1 rows are combined with xxhash64 over the slice, as ONE SQL
+    expression string (one py4j call, not one per element). The one
+    banding both the batch index (``band_buckets``) and the stream
     (streaming/dedup_stream.py) key on."""
     r, b = cfg.band_rows, cfg.num_bands
     if r == 1:
-        return sig
+        return F.col(sig)
     # r>1 (scale mode only — every oracle config pins r=1, where the band
     # hash IS the signature value): hash the r-slice DIRECTLY with the
     # multi-column xxhash64 — two docs share a band key iff their r values
     # are equal (modulo ~2^-64 collisions), with no per-band string built
     # and hashed per census/membership consumer.
-    return F.array(*[
-        F.xxhash64(*[F.element_at(sig, i * r + j + 1) for j in range(r)])
-        for i in range(b)
-    ])
+    col = sql_name(sig)
+    return F.expr("array(" + ", ".join(
+        "xxhash64(" + ", ".join(f"element_at({col}, {i * r + j + 1})"
+                                for j in range(r)) + ")"
+        for i in range(b)) + ")")
 
 
 def band_buckets(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -65,7 +68,7 @@ def band_buckets(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     # the higher-order expression inline does not (verified via .explain)
     return (
         sigs.select("doc_id",
-                    band_hashes_col(F.col("sig"), cfg).alias("_bands"))
+                    band_hashes_col("sig", cfg).alias("_bands"))
         .select("doc_id", F.posexplode("_bands").alias("band_id", "band_hash"))
         .select(F.col("band_id").cast("int"), "band_hash", "doc_id")
     )

@@ -89,21 +89,22 @@ def minhash_signatures(doc_hashes: DataFrame, cfg: DedupConfig) -> DataFrame:
     return doc_hashes.mapInArrow(kernel, SIG_SCHEMA)
 
 
-def signature_col(hashes: Column, cfg: DedupConfig) -> Column:
-    """Per-row MinHash signature from a shingle-hash array column, as
-    built-in expressions: the same per-permutation affine min as
-    ``minhash_signatures``, with no Python task. Row-local (no
+def signature_col(hashes: str, cfg: DedupConfig) -> Column:
+    """Per-row MinHash signature of the shingle-hash array column named
+    ``hashes``, as built-in expressions: the same per-permutation affine
+    min as ``minhash_signatures``, with no Python task. Row-local (no
     aggregation), so it is legal upstream of the stateful operator in a
-    streaming plan, and a single probe row needs no Python worker.
+    streaming plan, and a single probe row needs no Python worker. Built
+    as ONE SQL expression string: one py4j call instead of one per
+    coefficient literal and per term.
 
-    ``hashes`` should be a MATERIALIZED column (its own projection), not
+    ``hashes`` should name a MATERIALIZED column (its own projection), not
     the raw ``shingle_hashes_col`` expression (operators/shingle.py): the
-    expression sits inside the per-permutation lambda, so inlining it
-    would re-run tokenization + shingling + hashing ``num_perms`` times
-    per row (measured 8.06× slower at P=8 on 50k sf0.1 turns — r6). A
-    separate select keeps it a cheap
-    attribute read; CollapseProject leaves multi-referenced non-cheap
-    aliases alone.
+    column sits inside the per-permutation lambda, so inlining the
+    expression would re-run tokenization + shingling + hashing
+    ``num_perms`` times per row (measured 8.06× slower at P=8 on 50k sf0.1
+    turns — r6). A separate select keeps it a cheap attribute read;
+    CollapseProject leaves multi-referenced non-cheap aliases alone.
 
     Docs with fewer than ``shingle_k`` tokens have NO shingles; for those
     the signature is NULL (not an array of NULL mins), mirroring the batch
@@ -111,16 +112,22 @@ def signature_col(hashes: Column, cfg: DedupConfig) -> Column:
     every short turn would land in one permanent NULL bucket downstream.
     """
     a_vec, b_vec = minhash_params(cfg.num_perms)
-    a_arr = F.array(*[F.lit(int(x)) for x in a_vec])
-    b_arr = F.array(*[F.lit(int(x)) for x in b_vec])
-    return F.when(
-        F.size(hashes) > 0,
-        F.transform(
-            F.sequence(F.lit(0), F.lit(cfg.num_perms - 1)),
-            lambda p: F.array_min(F.transform(
-                hashes,
-                lambda h: (F.element_at(a_arr, p + 1) * (h % M)
-                           + F.element_at(b_arr, p + 1)) % M))))
+    a = ", ".join(str(int(x)) for x in a_vec)
+    b = ", ".join(str(int(x)) for x in b_vec)
+    col = sql_name(hashes)
+    # lambda variables longer than the column's name, so neither shadows it
+    word = "".join(ch if ch.isalnum() else "_" for ch in hashes)
+    p, h = f"perm_{word}", f"hash_{word}"
+    return F.expr(
+        f"CASE WHEN size({col}) > 0 THEN transform("
+        f"sequence(0, {cfg.num_perms - 1}), {p} -> array_min(transform("
+        f"{col}, {h} -> (element_at(array({a}), {p} + 1) * ({h} % {M}) "
+        f"+ element_at(array({b}), {p} + 1)) % {M}))) END")
+
+
+def sql_name(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def exploded_signatures(doc_hashes: DataFrame, cfg: DedupConfig) -> DataFrame:

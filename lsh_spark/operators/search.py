@@ -11,10 +11,14 @@ probe is at most three point reads, none of which shuffles:
  1. the probe's own ``doc_hashes`` row (1 of n buckets): its shingle
     hashes and its band keys (<= num_bands);
  2. the index rows those keys collide with, as a literal predicate pushed
-    down to the bucket table's scan; a key colliding with more than
-    ``hot_bucket_cap`` of them keeps only its min doc
-    (``skew.collapse_hot_keys``), so at most num_bands × hot_bucket_cap
-    rows reach the driver;
+    down to the bucket table's scan; the exact (band_id, band_hash) match
+    is a lookup in a set held by reference, so a new probe's keys change
+    no generated code and the plan compiled for the last probe is reused
+    (with more than ``spark.sql.optimizer.inSetConversionThreshold`` = 10
+    keys, as at the default 16 bands; a shorter list is compiled per
+    value). A key colliding with more than ``hot_bucket_cap`` of them
+    keeps only its min doc (``skew.collapse_hot_keys``), so at most
+    num_bands × hot_bucket_cap rows reach the driver;
  3. the candidates' ``doc_hashes`` rows, by ``doc_id`` (bucket-pruned).
 
 The driver then does what the reference does in place:
@@ -65,12 +69,11 @@ def search_probe(bands: DataFrame, doc_hashes: DataFrame, probe_id: str,
     # index derived them, in built-in expressions, so a probe whose band
     # rows never reached the index still finds its neighbours.
     own = (doc_hashes.filter(F.col("doc_id") == probe_id)
-           .select("hashes", minhash.signature_col(F.col("hashes"), cfg)
+           .select("hashes", minhash.signature_col("hashes", cfg)
                    .alias("sig"))
            # its own projection: sig is read once per band row, not rebuilt
            .select("hashes", F.when(F.col("sig").isNotNull(),
-                                    lsh_bands.band_hashes_col(F.col("sig"),
-                                                              cfg))
+                                    lsh_bands.band_hashes_col("sig", cfg))
                    .alias("bands"))
            .collect())
     probe_keys = sorted({(band_id, band_hash) for r in own if r["bands"]
@@ -82,14 +85,17 @@ def search_probe(bands: DataFrame, doc_hashes: DataFrame, probe_id: str,
     # band (``lsh.py:272-317``); the relational analog is a literal
     # predicate, built as ONE expression string (one py4j call, not one per
     # term): band_hash IN (...) reaches the bucketed scan as a pushed
-    # filter, and the exact (band_id, band_hash) disjunction drops rows of
-    # another band with that hash. On a bucketed index the hot-key window
-    # plans no Exchange (asserted in tests/test_plans.py).
+    # filter, and the exact (band_id, band_hash) set drops rows of another
+    # band with that hash. The exact match is a struct IN: Spark inlines
+    # int and long literals into generated code, so a disjunction of
+    # per-key comparisons would compile a new class for every probe, while
+    # a struct literal (and an InSet) is held by reference. On a bucketed
+    # index the hot-key window plans no Exchange (tests/test_plans.py).
     in_list = ", ".join(sorted({f"{h}L" for _, h in probe_keys}))
-    exact = " OR ".join(f"(band_id = {b} AND band_hash = {h}L)"
-                        for b, h in probe_keys)
+    exact = ", ".join(f"struct({b}, {h}L)" for b, h in probe_keys)
     rows = (collapse_hot_keys(
-                bands.filter(F.expr(f"band_hash IN ({in_list}) AND ({exact})"))
+                bands.filter(F.expr(f"band_hash IN ({in_list}) AND "
+                                    f"struct(band_id, band_hash) IN ({exact})"))
                 .filter(F.col("doc_id") != probe_id),
                 ["band_id", "band_hash"], cfg.hot_bucket_cap)
             .select("band_id", "doc_id").collect())

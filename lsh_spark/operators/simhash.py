@@ -138,13 +138,13 @@ def simhash_docs_arrow(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def _chunk_keys() -> "F.Column":
-    """4 × 15-bit chunk keys (pigeonhole over HAMMING_THRESHOLD=3)."""
+    """4 × 15-bit chunk keys (pigeonhole over HAMMING_THRESHOLD=3), as one
+    SQL expression string over ``simhash``."""
     chunk_bits = SIMHASH_BITS // N_CHUNKS
     mask = (1 << chunk_bits) - 1
-    return F.array(*[
-        F.shiftright(F.col("simhash"), i * chunk_bits).bitwiseAND(F.lit(mask))
-        for i in range(N_CHUNKS)
-    ])
+    return F.expr("array(" + ", ".join(
+        f"shiftright(simhash, {i * chunk_bits}) & {mask}"
+        for i in range(N_CHUNKS)) + ")")
 
 
 def _combo_keys() -> "F.Column":
@@ -157,23 +157,21 @@ def _combo_keys() -> "F.Column":
     of 30-bit keys. Expected bucket size drops from N/2^15 to N/2^30 — the
     difference between quadratic blowup and near-uniqueness at 10^9+ docs,
     at the cost of 20 key rows per doc instead of 4.
+
+    Built as ONE SQL expression string over ``simhash`` (one py4j call, not
+    one per block term).
     """
     from itertools import combinations
     m = HAMMING_THRESHOLD + 3  # 6 blocks of 10 bits
     c = m - HAMMING_THRESHOLD
     block_bits = SIMHASH_BITS // m
     mask = (1 << block_bits) - 1
-    blocks = [
-        F.shiftright(F.col("simhash"), i * block_bits).bitwiseAND(F.lit(mask))
-        for i in range(m)
-    ]
-    keys = []
-    for combo in combinations(range(m), c):
-        key = F.lit(0).cast("long")
-        for j, bi in enumerate(combo):
-            key = key + F.shiftleft(blocks[bi], j * block_bits)
-        keys.append(key)
-    return F.array(*keys)
+    blocks = [f"(shiftright(simhash, {i * block_bits}) & {mask})"
+              for i in range(m)]
+    return F.expr("array(" + ", ".join(
+        " + ".join(f"shiftleft({blocks[bi]}, {j * block_bits})"
+                   for j, bi in enumerate(combo))
+        for combo in combinations(range(m), c)) + ")")
 
 
 def simhash_candidate_pairs(sh: DataFrame, cfg: DedupConfig,

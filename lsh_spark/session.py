@@ -18,6 +18,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Entries of Spark's generated-class cache (the static
+# ``spark.sql.codegen.cache.maxEntries``, default 100). The cache is an LRU
+# over every generated class of the JVM, and one operation of the engine
+# needs more than 100 (perfbench n2000-s47, 4 vCPU): a ``conv`` cascade
+# 165-167 classes, a ``turn`` cascade 170-173, one ``steady`` cycle ~90
+# (its first delta 65, its probes the rest), the t1 test cascade 165-171.
+# At 100 an operation evicts its own classes before it is repeated, so the
+# repeat recompiles them: 155-157 classes (~1 s) per ``conv`` cascade,
+# 37-41 per ``steady`` delta. 1024 holds over 6× the largest working set,
+# so a plan shape run before compiles nothing. Measured in local mode,
+# where the executors share the driver's JVM; executors of a cluster are
+# unverified.
+CODEGEN_CACHE_ENTRIES = 1024
+
 
 def get_spark(
     app_name: str = "lsh_spark",
@@ -79,6 +93,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("LSH_SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # static: it must reach the builder, before getOrCreate
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.warehouse.dir",
                 os.environ.get("LSH_SPARK_WAREHOUSE", "/tmp/lsh_spark_warehouse"))
     )

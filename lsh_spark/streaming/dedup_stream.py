@@ -124,12 +124,12 @@ def streaming_near_dup_flags(stream: DataFrame, cfg=None,
             shingle_hashes_col(F.col("text"), cfg).alias("_hashes"))
         .select(
             "doc_id", "ts",
-            signature_col(F.col("_hashes"), cfg).alias("sig"))
+            signature_col("_hashes", cfg).alias("sig"))
         .filter(F.col("sig").isNotNull())
         # staged like lsh_bands.band_buckets: the generator explodes a
         # plain attribute, not the band-hash expression
         .select("doc_id", "ts",
-                band_hashes_col(F.col("sig"), cfg).alias("_bands"))
+                band_hashes_col("sig", cfg).alias("_bands"))
         .select("doc_id", "ts",
                 F.posexplode("_bands").alias("band_id", "band_hash"))
         .filter(F.col("band_hash").isNotNull())

@@ -11,6 +11,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
@@ -71,7 +72,11 @@ def compare_one(spark, name: str, qfn, sql: str | None):
 
 
 def main(only: list[str] | None = None):
-    sys.path.insert(0, "/root/repo")
+    # the checkout this script belongs to, for this process and its workers
+    root = str(Path(__file__).resolve().parents[1])
+    sys.path.insert(0, root)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p)
     import __spark_entry__ as entry
     from lsh_spark.session import get_spark
 

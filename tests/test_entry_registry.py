@@ -11,8 +11,9 @@ DuckDB oracle so no row degrades to the weaker rows-only check.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry  # noqa: E402
 

@@ -273,7 +273,7 @@ def test_streaming_sig_hashes_materialized_once(spark):
     cfg = DedupConfig(num_perms=8)
     df = (spark.createDataFrame([("a b c d e f g h i j",)], "text string")
           .select(shingle_hashes_col(F.col("text"), cfg).alias("_hashes"))
-          .select(signature_col(F.col("_hashes"), cfg).alias("sig")))
+          .select(signature_col("_hashes", cfg).alias("sig")))
     plan = plan_of(df, "extended")
     opt = plan.split("== Optimized Logical Plan ==")[1]
     # the projects must NOT collapse: the signature project references
