@@ -10,9 +10,9 @@ once, ``lsh.py:307-308`` — SURVEY.md Q5).
 
 Scale design (north_rule: "band hashes grouped via salted groupBy to defuse
 hot-bucket skew"):
- * bucket sizes come from one partially-aggregated groupBy, whose
-   map-side combine bounds a boilerplate band hash's reduce fan-in without
-   a salt phase (operators/skew.py, bucket_census docstring);
+ * each band row is tagged with its bucket's size and min doc by one
+   window over (band_id, band_hash), the rule the index probes use too: a
+   bucket's rows meet in one sorted, spillable task (operators/skew.py);
  * buckets larger than ``hot_bucket_cap`` are NOT expanded into O(k²) pairs;
    each member is linked to the bucket's minimum doc_id instead (a star).
    For clustering this is lossless — the star connects exactly the same
@@ -52,7 +52,7 @@ def band_hashes_col(sig: str, cfg: DedupConfig) -> Column:
     # hash IS the signature value): hash the r-slice DIRECTLY with the
     # multi-column xxhash64 — two docs share a band key iff their r values
     # are equal (modulo ~2^-64 collisions), with no per-band string built
-    # and hashed per census/membership consumer.
+    # and hashed per consumer.
     col = sql_name(sig)
     return F.expr("array(" + ", ".join(
         "xxhash64(" + ", ".join(f"element_at({col}, {i * r + j + 1})"

@@ -10,29 +10,33 @@ single viral snippet makes k millions.
 The defusal (north_rule: "band hashes grouped via salted groupBy to defuse
 hot-bucket skew"), shared by MinHash bands, SimHash chunks, the substring
 gram join, the winnow overlap join, the embedding-bucket join and both
-index probes:
+index probes, asks each key its row count and min doc, through ONE window
+rule (``_key_stats``) for both paths:
 
  1. ``key_pairs`` — the one self-join entry: every pair pass calls it
-    with its keyed rows and a cap. It materializes the keyed rows once
-    (either generator reads them twice), picks the generator (``cap=None``
+    with its keyed rows and a cap. It picks the generator (``cap=None``
     → ``all_pair_rows``, the exact oracle form; else
     ``capped_pair_rows``) and counts the keys each pair shares.
- 2. ``bucket_census`` — each bucket's size and min doc_id via one
-    partially-aggregated groupBy (map-side combine bounds a mega-key's
-    reduce fan-in by the map-task count, so no salt phase is needed).
- 3. ``capped_pair_rows`` — the self-join rule: buckets ≤ cap expand into
-    all pairs; buckets > cap are star-linked (every member → the census's
-    bucket min, read off the member's own row): k-1 edges instead of
-    k²/2, connecting exactly the same component. Star edges are real
+ 2. ``capped_pair_rows`` — the self-join rule: one window job tags every
+    keyed row with its key's size and min doc; buckets ≤ cap expand into
+    all pairs, buckets > cap are star-linked (every member → the bucket
+    min, read off the member's own row): k-1 edges instead of k²/2,
+    connecting exactly the same component. Star edges are real
     edges of the pass (all bucket members genuinely share the key), so
     passes whose accept criterion IS key-sharing (substring grams) stay
     sound; passes with a downstream verifier (MinHash → Jaccard, SimHash
     → popcount) verify star edges like any other candidate.
- 4. ``collapse_hot_keys`` — the probe rule (``search_probe``,
+ 3. ``collapse_hot_keys`` — the probe rule (``search_probe``,
     ``incremental_dedup_flags``): of the rows a probe collides with, a
     key holding more than cap of them keeps only its min doc_id. A delta
     probes its own band rows under the same rule, so a hot batch key
-    gives the star edges (min, member) that rule 3 gives.
+    gives the star edges (min, member) that rule 2 gives.
+ 4. ``bucket_census`` — (key..., bucket_size) via one partially-aggregated
+    groupBy, for the substring hot-gram filter, which needs only sizes.
+
+The window rule's trade: a key's rows meet in ONE sorted, spillable task,
+and that exchange gets no AQE skew-join split, so one task sorts a hot
+key's k rows; its output stays k-1 star edges, never k²/2 pairs.
 
 Count semantics: per-key rows are exact for non-hot buckets; a pair that
 ALSO co-occurs in a hot bucket loses that bucket's contribution, so
@@ -57,42 +61,42 @@ def key_pairs(keyed: DataFrame, key_cols: list[str], cap: int | None,
     key of ``keyed`` (key..., <id_col>), with the number of shared keys.
 
     ``cap=None`` expands every bucket (``all_pair_rows``): exact counts,
-    the oracle form. Otherwise buckets above ``cap`` are star-linked
-    (``capped_pair_rows``) and n_keys is a lower bound for pairs that
-    also share a hot key.
-
-    ``keyed`` is materialized once: either generator reads it twice (both
-    sides of the self-join, or census + membership join), and re-running
-    its producer per read (band hashing, SimHash key fan-out, gram and
-    hyperplane kernels, winnow windows) costs far more than rescanning
-    the narrow keyed rows. Each pair row stands for one shared key, so a
+    the oracle form. Its self-join reads ``keyed`` twice, so ``keyed`` is
+    materialized for it: re-running its producer (band hashing, SimHash
+    key fan-out, gram and hyperplane kernels, winnow windows) per read
+    costs far more than rescanning the narrow keyed rows. Otherwise buckets
+    above ``cap`` are star-linked (``capped_pair_rows``, which reads
+    ``keyed`` once) and n_keys is a lower bound for pairs that also share a
+    hot key. Each pair row stands for one shared key, so a
     partially-aggregated count(*) gives n_keys in one exchange.
     """
-    keyed = materialize(keyed)
-    rows = (all_pair_rows(keyed, key_cols, id_col) if cap is None
+    rows = (all_pair_rows(materialize(keyed), key_cols, id_col)
+            if cap is None
             else capped_pair_rows(keyed, key_cols, cap, id_col))
     return (rows.groupBy("doc_a", "doc_b")
             .agg(F.count("*").cast("long").alias("n_keys")))
 
 
-def bucket_census(keyed: DataFrame, key_cols: list[str],
-                  id_col: str = "doc_id") -> DataFrame:
-    """(key..., bucket_size, bucket_min): each key's row count and min
-    ``id_col``, via one partially-aggregated groupBy.
+def _key_stats(rows: DataFrame, key_cols: list[str],
+               id_col: str) -> DataFrame:
+    """``rows`` with their key's row count (``bucket_size``) and min
+    ``id_col`` (``bucket_min``) on each row, from one window."""
+    w = Window.partitionBy(*key_cols)
+    return (rows.withColumn("bucket_size", F.count("*").over(w))
+            .withColumn("bucket_min", F.min(id_col).over(w)))
 
-    No salt: the aggregate runs partially map-side (a sort aggregate for a
-    string ``id_col``, whose min has no fixed-width buffer), so each map
-    task emits at most one row per key and a hot key's reduce fan-in is
-    bounded by the map-task count — the bound a salt phase would give,
+
+def bucket_census(keyed: DataFrame, key_cols: list[str]) -> DataFrame:
+    """(key..., bucket_size) via one partially-aggregated groupBy.
+
+    No salt: Spark's hash aggregate partial-aggregates map-side, so each
+    map task emits at most one row per key and a hot key's reduce fan-in
+    is bounded by the map-task count — the bound a salt phase would give,
     without its second aggregation and exchange. Salting is needed only
     where per-key state grows with the group (collect_list et al.).
     """
-    return (
-        keyed.select(*key_cols, id_col)
-        .groupBy(*key_cols)
-        .agg(F.count("*").cast("long").alias("bucket_size"),
-             F.min(id_col).alias("bucket_min"))
-    )
+    return (keyed.groupBy(*key_cols)
+            .agg(F.count("*").cast("long").alias("bucket_size")))
 
 
 def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cap: int,
@@ -102,26 +106,17 @@ def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cap: int,
     Buckets larger than ``cap`` emit star edges (bucket-min → member)
     instead of the full k²/2 expansion.
 
-    Plan shape: the census (one partially-aggregated groupBy, guide §2.3)
-    has ~one row per multi-member key — few, since most keys are
-    singletons (88-96% at sf0.1) that can never produce a pair. ONE inner
-    join attaches bucket_size and bucket_min to the keyed rows, and the
-    materialized multi-member subset (~5-12% of keyed rows) feeds two
-    plain filters: small buckets to the collect_list expansion, hot rows
-    straight to star edges (bucket_min → member), with no aggregate or
-    join of their own. The census has one reader, that join, so it is
-    built inside the membership checkpoint. No hint forces a broadcast of
-    the unbounded census; AQE re-plans a shuffle join from the census's
-    shuffle-stage size, broadcasting it when it fits
-    ``spark.sql.autoBroadcastJoinThreshold``, and its skew-join splitting
-    stays on as the backstop (session.py).
+    Plan shape: ONE job runs ``keyed``'s producer, tags each row with its
+    key's size and min (``_key_stats``, the probes' rule) and holds the
+    multi-member subset as ``tagged`` (~5-12% of keyed rows at sf0.1:
+    most keys are singletons, which can never produce a pair). Two plain
+    filters of ``tagged`` follow: small buckets to the collect_list
+    expansion, hot rows straight to star edges (bucket_min → member), with
+    no aggregate or join of their own.
     """
-    sized = (bucket_census(keyed, key_cols, id_col)
-             .filter(F.col("bucket_size") >= 2))
-    # ONE membership scan: the two filters below (small groupBy, star
-    # edges) rescan the small tagged subset instead of the keyed table
-    tagged = materialize(keyed.join(sized, key_cols).select(
-        *key_cols, id_col, "bucket_size", "bucket_min"))
+    tagged = materialize(
+        _key_stats(keyed.select(*key_cols, id_col), key_cols, id_col)
+        .filter(F.col("bucket_size") >= 2))
     small = tagged.filter(F.col("bucket_size") <= cap) \
                   .select(*key_cols, id_col)
 
@@ -157,17 +152,15 @@ def capped_pair_rows(keyed: DataFrame, key_cols: list[str], cap: int,
 def collapse_hot_keys(rows: DataFrame, key_cols: list[str],
                       cap: int) -> DataFrame:
     """``rows`` with each key that holds more than ``cap`` of them cut to
-    its min-``doc_id`` rows. ``rows`` are the rows one probe collides with
-    (index rows, or a delta's own band rows), so this census is sized by
-    the probe, not the index.
-    The window holds one key's rows in one task; on a bucketed index they
-    already share a bucket, so it plans a Sort and no Exchange."""
-    w = Window.partitionBy(*key_cols)
-    return (rows
-            .withColumn("_n", F.count("*").over(w))
-            .withColumn("_min", F.min("doc_id").over(w))
-            .filter((F.col("_n") <= cap) | (F.col("doc_id") == F.col("_min")))
-            .drop("_n", "_min"))
+    its min-``doc_id`` rows (``_key_stats``, the pair passes' rule).
+    ``rows`` are the rows one probe collides with (index rows, or a
+    delta's own band rows), so the window is sized by the probe, not the
+    index. On a bucketed index a key's rows already share a bucket, so it
+    plans a Sort and no Exchange."""
+    return (_key_stats(rows, key_cols, "doc_id")
+            .filter((F.col("bucket_size") <= cap)
+                    | (F.col("doc_id") == F.col("bucket_min")))
+            .drop("bucket_size", "bucket_min"))
 
 
 def all_pair_rows(keyed: DataFrame, key_cols: list[str],

@@ -191,7 +191,7 @@ def incremental_dedup_flags(new_docs: DataFrame, index_bands: DataFrame,
     big side never reshuffles), and the batch's own band rows in the same
     keyed join, so dups arriving in the same delta are caught too.
 
-    Skew: only the index rows the delta's band keys touch are censused (a
+    Skew: only the index rows the delta's band keys touch are sized (a
     semi-join), never the whole index. Of those, and of the batch's own
     rows, a key above the cap keeps only its min doc
     (``skew.collapse_hot_keys``, as in ``search_probe``), so a delta band

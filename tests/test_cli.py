@@ -182,8 +182,9 @@ def test_incremental_dedup_bucketed_index(spark, tmp_path):
         # equal-or-fewer…
         assert nb <= np_, (nb, np_)
 
-        # …and the self-join census must aggregate the bucketed band table
-        # WITHOUT a shuffle (HashPartitioning(band_hash) satisfies the
+        # …and a census by band key (the clustering the pair passes'
+        # window needs too) must aggregate the bucketed band table WITHOUT
+        # a shuffle (HashPartitioning(band_hash) satisfies the
         # (band_id, band_hash) clustering), while the plain path pays one
         from lsh_spark.operators.skew import bucket_census
 

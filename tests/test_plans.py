@@ -122,10 +122,11 @@ def _record_materialized(monkeypatch, frame_cls) -> list[str]:
     return executed
 
 
-def test_capped_pairs_shuffle_join_without_broadcast(spark, monkeypatch):
-    """With broadcasts disabled, the membership join against the
-    bucket-size census must run as a shuffle join (no hint may force a
-    broadcast of the unbounded census) and give the same pair rows."""
+def test_capped_pairs_tag_by_window_without_broadcast(spark, monkeypatch):
+    """With broadcasts disabled the pair rows are the same, and no frame
+    ``capped_pair_rows`` materializes broadcasts (no hint may force one).
+    Bucket sizes and mins come from one window over the keyed rows
+    (``tagged``), not from a census joined back."""
     from lsh_spark.operators.skew import capped_pair_rows
     cfg = DedupConfig(num_perms=8, hot_bucket_cap=3)
     docs = spark.createDataFrame(
@@ -149,19 +150,18 @@ def test_capped_pairs_shuffle_join_without_broadcast(spark, monkeypatch):
         executed.append(out._jdf.queryExecution().executedPlan().toString())
     finally:
         spark.conf.set(threshold, saved)
-    membership = [p for p in executed if "bucket_size" in p and "Join" in p]
-    assert membership and all("isFinalPlan=true" in p for p in membership)
-    assert all("SortMergeJoin" in p or "ShuffledHashJoin" in p
-               for p in membership)
+    tagged = [p for p in executed if "bucket_size" in p and "Window" in p]
+    assert tagged and all("isFinalPlan=true" in p for p in tagged)
+    assert not any("Join" in p for p in tagged)
     assert not any("BroadcastHashJoin" in p for p in executed)
     assert got == expected
 
 
 def test_embedding_near_dups_runs_hyperplane_kernel_once(spark, monkeypatch):
-    """The bucket self-join reads its keyed rows twice (census and
-    membership join); ``skew.key_pairs`` holds them first, so across the
-    frames the operator materializes the hyperplane ``MapInArrow`` runs
-    once, not once per read."""
+    """The capped bucket self-join reads its keyed rows once, in the
+    window job that tags them (``tagged``), so across the frames the
+    operator materializes the hyperplane ``MapInArrow`` runs once: its
+    producer runs inside that checkpoint, not once per later read."""
     rows = [(i, [float((i * 7 + j) % 11) for j in range(8)])
             for i in range(30)]
     rows += [(100 + i, rows[0][1]) for i in range(4)]

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from lsh_spark.config import DedupConfig
 from lsh_spark.operators import lsh_bands, minhash, shingle
 from lsh_spark.operators.connected_components import connected_components
@@ -49,8 +47,9 @@ def test_star_pair_count_linear_in_bucket(spark):
 
 
 def test_census_counts_match_groupby(spark):
-    """The census must equal a plain groupBy count and min doc_id,
-    mega-buckets included."""
+    """The census must equal a plain groupBy count, mega-buckets
+    included, and plan as a hash aggregate (no string min to force a
+    sort aggregate)."""
     from lsh_spark.operators.skew import bucket_census
     cfg = DedupConfig(num_perms=8)
     docs = _hot_corpus(spark)
@@ -58,11 +57,50 @@ def test_census_counts_match_groupby(spark):
     sigs = minhash.minhash_signatures(hashes, cfg)
     bands = lsh_bands.band_buckets(sigs, cfg)
     census = bucket_census(bands, ["band_id", "band_hash"])
-    plain = bands.groupBy("band_id", "band_hash").agg(
-        F.count("*").cast("long").alias("bucket_size"),
-        F.min("doc_id").alias("bucket_min"))
+    plain = (bands.groupBy("band_id", "band_hash").count()
+             .withColumnRenamed("count", "bucket_size"))
     assert census.exceptAll(plain).count() == 0
     assert plain.exceptAll(census).count() == 0
+    plan = census._jdf.queryExecution().sparkPlan().toString()
+    assert "HashAggregate" in plan and "SortAggregate" not in plan, plan
+
+
+def test_hot_key_rule_shared_at_cap_boundary(spark):
+    """The pair path and the probe path share one hot-key rule: a key
+    holding exactly ``cap`` rows is cold for both (all pairs; every row
+    kept), one holding ``cap + 1`` is hot for both (star edges from its
+    min; only its min's rows kept), duplicate (key, id) rows included."""
+    from lsh_spark.operators.skew import capped_pair_rows, collapse_hot_keys
+    cap = 4
+    keyed = spark.createDataFrame(
+        [("cold", d) for d in ("d1", "d2", "d3", "d3")]
+        + [("hot", d) for d in ("d0", "d0", "d1", "d2", "d3")],
+        "key string, doc_id string")
+    pairs = sorted((r["key"], r["doc_a"], r["doc_b"])
+                   for r in capped_pair_rows(keyed, ["key"], cap).collect())
+    assert pairs == sorted(
+        [("cold", "d1", "d2"), ("cold", "d1", "d3"), ("cold", "d1", "d3"),
+         ("cold", "d2", "d3"), ("cold", "d2", "d3"),
+         ("hot", "d0", "d1"), ("hot", "d0", "d2"), ("hot", "d0", "d3")])
+    kept = sorted(tuple(r) for r in
+                  collapse_hot_keys(keyed, ["key"], cap).collect())
+    assert kept == sorted([("cold", "d1"), ("cold", "d2"), ("cold", "d3"),
+                           ("cold", "d3"), ("hot", "d0"), ("hot", "d0")])
+
+
+def test_pair_passes_run_no_census(spark, monkeypatch, t1_transcripts):
+    """No pair pass of the cascade builds a bucket census: each tags its
+    keyed rows with the window rule the probes use. Run in the benchmark's
+    configuration (fast hashing, sampled substring grams, r=2 banding)."""
+    from lsh_spark.operators import skew
+    from lsh_spark.plans.pipeline import dedup_pipeline
+
+    def no_census(*args, **kwargs):
+        raise AssertionError("a pair pass called bucket_census")
+
+    monkeypatch.setattr(skew, "bucket_census", no_census)
+    cfg = DedupConfig(hash_mode="fast", substring_sample_mod=8, band_rows=2)
+    assert dedup_pipeline(spark, t1_transcripts, cfg).count() == 74
 
 
 from hypothesis import given, settings, strategies as st
